@@ -249,10 +249,9 @@ def q_multimodal_frame_sample_avi(spark: SparkSession, sf_dir: str) -> DataFrame
                 if n_frames == 0:
                     continue
                 # all frames of the doc synthesized and JPEG-encoded in
-                # ONE batched numpy pass (optimization r15 — the
-                # per-frame encoder paid numpy's fixed call overhead on
-                # every 12-block frame; byte-identical, pinned by the
-                # encode_jpeg_color_batch A/B test)
+                # ONE batched numpy pass (optimization r15 — a per-frame
+                # call paid numpy's fixed call overhead on every
+                # 12-block frame)
                 gray = (
                     np.frombuffer(data, dtype=np.uint8, count=n_frames * fb)
                     .astype(np.int64)

@@ -45,148 +45,19 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from meta_iterative_mapreduce_spark.io import load_table
+from meta_iterative_mapreduce_spark.operators.codecs import lzw_decode, lzw_encode
 from meta_iterative_mapreduce_spark.registry import register
 
 _GIF87 = b"GIF87a"
 _GIF89 = b"GIF89a"
-_MAX_CODE_WIDTH = 12
-
-
-# ---------------------------------------------------------------------------
-# LZW (GIF variant)
-# ---------------------------------------------------------------------------
-
-
-def _lzw_encode(indices: np.ndarray, min_code_size: int) -> bytes:
-    """GIF LZW with a growing dictionary: emits CLEAR, then greedy
-    longest-match codes, growing the code width when the next free
-    code crosses a power of two and resetting the table at 4096."""
-    clear = 1 << min_code_size
-    eoi = clear + 1
-    if indices.size and int(indices.max()) >= clear:
-        raise ValueError(
-            f"pixel index {int(indices.max())} needs more than the "
-            f"{clear} roots of min_code_size={min_code_size}"
-        )
-    out_bits: list[tuple[int, int]] = []  # (code, width)
-
-    def fresh_table() -> dict[bytes, int]:
-        return {bytes([i]): i for i in range(clear)}
-
-    table = fresh_table()
-    next_code = eoi + 1
-    width = min_code_size + 1
-    out_bits.append((clear, width))
-    prefix = b""
-    for px in indices.tobytes():
-        cand = prefix + bytes([px])
-        if cand in table:
-            prefix = cand
-            continue
-        out_bits.append((table[prefix], width))
-        table[cand] = next_code
-        # the decoder widens when it is ABOUT to define code 2^width,
-        # i.e. after defining code 2^width - 1; mirror exactly
-        if next_code == (1 << width) and width < _MAX_CODE_WIDTH:
-            width += 1
-        next_code += 1
-        if next_code > (1 << _MAX_CODE_WIDTH):
-            out_bits.append((clear, width))
-            table = fresh_table()
-            next_code = eoi + 1
-            width = min_code_size + 1
-        prefix = bytes([px])
-    if prefix:
-        out_bits.append((table[prefix], width))
-        # the DECODER defines an entry for every received code —
-        # including this final one — so its table can cross a
-        # power-of-two boundary here and it will read EOI one bit
-        # wider; mirror that bookkeeping even though the encoder
-        # itself defines nothing after the last emission (hypothesis
-        # found this: a stream whose last data code lands exactly on
-        # the boundary desynced the EOI width).
-        if next_code == (1 << width) and width < _MAX_CODE_WIDTH:
-            width += 1
-    out_bits.append((eoi, width))
-
-    # LSB-first bit packing
-    acc = 0
-    nbits = 0
-    data = bytearray()
-    for code, w in out_bits:
-        acc |= code << nbits
-        nbits += w
-        while nbits >= 8:
-            data.append(acc & 0xFF)
-            acc >>= 8
-            nbits -= 8
-    if nbits:
-        data.append(acc & 0xFF)
-    return bytes(data)
-
-
-def _lzw_decode(data: bytes, min_code_size: int, n_expected: int) -> bytes:
-    """Inverse of _lzw_encode per the GIF89a spec, including the
-    KwKwK case (code == next free code) and width growth/reset."""
-    if not 2 <= min_code_size <= 11:
-        raise ValueError(f"bad LZW min code size {min_code_size}")
-    clear = 1 << min_code_size
-    eoi = clear + 1
-    width = min_code_size + 1
-    table: list[bytes] = [bytes([i]) for i in range(clear)] + [b"", b""]
-    out = bytearray()
-    acc = 0
-    nbits = 0
-    pos = 0
-    prev: bytes | None = None
-    while True:
-        while nbits < width:
-            if pos >= len(data):
-                raise ValueError("LZW stream truncated (no EOI)")
-            acc |= data[pos] << nbits
-            nbits += 8
-            pos += 1
-        code = acc & ((1 << width) - 1)
-        acc >>= width
-        nbits -= width
-        if code == eoi:
-            break
-        if code == clear:
-            table = [bytes([i]) for i in range(clear)] + [b"", b""]
-            width = min_code_size + 1
-            prev = None
-            continue
-        if prev is None:
-            if code >= len(table):
-                raise ValueError(f"first LZW code {code} not a root")
-            entry = table[code]
-        elif code < len(table):
-            entry = table[code]
-            table.append(prev + entry[:1])
-        elif code == len(table):
-            entry = prev + prev[:1]  # KwKwK
-            table.append(entry)
-        else:
-            raise ValueError(f"LZW code {code} beyond table {len(table)}")
-        out += entry
-        if (
-            len(table) == (1 << width)
-            and width < _MAX_CODE_WIDTH
-        ):
-            width += 1
-        prev = entry
-        if len(out) > n_expected:
-            raise ValueError("LZW output exceeds image area")
-    if len(out) != n_expected:
-        raise ValueError(
-            f"LZW produced {len(out)} pixels, image declares {n_expected}"
-        )
-    return bytes(out)
 
 
 # ---------------------------------------------------------------------------
 # container
 # ---------------------------------------------------------------------------
+
+
+_GRAY_PALETTE = bytes(b for i in range(256) for b in (i, i, i))
 
 
 def _interlace_row_order(height: int) -> list[int]:
@@ -197,6 +68,20 @@ def _interlace_row_order(height: int) -> list[int]:
     for start, step in ((0, 8), (4, 8), (2, 4), (1, 2)):
         order.extend(range(start, height, step))
     return order
+
+
+def _lzw_sub_blocks(indices: bytes) -> bytes:
+    """An image's data: LZW minimum code size 8, then the GIF-LZW
+    stream framed as sub-blocks of <= 255 bytes and a zero-length
+    terminator."""
+    lzw = lzw_encode(indices, 8, msb=False, early_change=False)
+    out = bytearray([8])
+    for i in range(0, len(lzw), 255):
+        chunk = lzw[i : i + 255]
+        out.append(len(chunk))
+        out += chunk
+    out.append(0)
+    return bytes(out)
 
 
 def encode_gif_gray8(
@@ -216,55 +101,106 @@ def encode_gif_gray8(
         raise ValueError("pixel buffer does not match dimensions")
     if not (0 < width <= 0xFFFF and 0 < height <= 0xFFFF):
         raise ValueError("dimensions out of GIF range")
-    gray_palette = bytes(
-        b for i in range(256) for b in (i, i, i)
-    )
     out = bytearray()
     out += _GIF89
     if local_palette:  # LSD without any GCT
         out += struct.pack("<HHBBB", width, height, 0b0_111_0_000, 0, 0)
     else:  # GCT present, 8-bit color resolution, size 2^(7+1)=256
         out += struct.pack("<HHBBB", width, height, 0b1_111_0_111, 0, 0)
-        out += gray_palette
+        out += _GRAY_PALETTE
     ipacked = (0x80 | 0x07 if local_palette else 0) | (
         0x40 if interlace else 0
     )
     out += b"\x2C" + struct.pack("<HHHHB", 0, 0, width, height, ipacked)
     if local_palette:
-        out += gray_palette
-    arr = np.frombuffer(pixels, dtype=np.uint8)
+        out += _GRAY_PALETTE
     if interlace:
-        arr = arr.reshape(height, width)[
-            _interlace_row_order(height)
-        ].reshape(-1)
-    min_code_size = 8
-    out.append(min_code_size)
-    lzw = _lzw_encode(arr, min_code_size)
-    for i in range(0, len(lzw), 255):  # sub-block framing
-        chunk = lzw[i : i + 255]
-        out.append(len(chunk))
-        out += chunk
-    out += b"\x00\x3B"  # block terminator + trailer
+        pixels = (
+            np.frombuffer(pixels, dtype=np.uint8)
+            .reshape(height, width)[_interlace_row_order(height)]
+            .tobytes()
+        )
+    out += _lzw_sub_blocks(pixels)
+    out += b"\x3B"  # trailer
     return bytes(out)
+
+
+def _sub_blocks(data: bytes, pos: int, what: str) -> tuple[bytes, int]:
+    """Read the sub-block chain at `pos` (length byte + bytes, ended by
+    a zero length) -> (payload, position after the terminator)."""
+    parts = []
+    while True:
+        if pos >= len(data):
+            raise ValueError(f"{what} truncated")
+        n = data[pos]
+        pos += 1
+        if n == 0:
+            return b"".join(parts), pos
+        parts.append(data[pos : pos + n])
+        pos += n
+
+
+def _color_table(data: bytes, pos: int, packed: int, scope: str):
+    """The color table at `pos` whose size a packed field declares ->
+    ((n, 3) uint8 array, position after it)."""
+    n = 2 << (packed & 0x07)
+    table = np.frombuffer(data[pos : pos + 3 * n], dtype=np.uint8).reshape(-1, 3)
+    if table.shape[0] != n:
+        raise ValueError(f"{scope} color table truncated")
+    return table, pos + 3 * n
+
+
+def _parse_header(data: bytes):
+    """Header, logical screen descriptor and global color table ->
+    (screen width, screen height, GCT or None, position after them)."""
+    if len(data) < 13 or data[:6] not in (_GIF87, _GIF89):
+        raise ValueError("bad GIF header")
+    sw, sh, packed, _bg, _aspect = struct.unpack("<HHBBB", data[6:13])
+    gct, pos = None, 13
+    if packed & 0x80:
+        gct, pos = _color_table(data, pos, packed, "global")
+    return sw, sh, gct, pos
+
+
+def _image_blocks(data: bytes, pos: int) -> Iterator[tuple[int, int]]:
+    """Walk the block stream from `pos` to the trailer, skipping 89a
+    extension blocks, and yield (descriptor offset, end offset) of
+    each image block — block lengths only, no LZW decode."""
+    while True:
+        if pos >= len(data):
+            raise ValueError("unexpected end of GIF stream")
+        block = data[pos]
+        pos += 1
+        if block == 0x3B:
+            return
+        if block == 0x21:  # extension: label + sub-blocks
+            _, pos = _sub_blocks(data, pos + 1, "extension block")
+            continue
+        if block != 0x2C:
+            raise ValueError(f"unknown GIF block 0x{block:02X}")
+        start = pos
+        if pos + 9 > len(data):
+            raise ValueError("image descriptor truncated")
+        ipacked = data[pos + 8]
+        pos += 9
+        if ipacked & 0x80:
+            pos += 3 * (2 << (ipacked & 0x07))
+        # +1: the LZW minimum code size byte
+        _, pos = _sub_blocks(data, pos + 1, "image data sub-blocks")
+        yield start, pos
 
 
 def _decode_image_at(data: bytes, pos: int, gct, sw: int, sh: int):
     """Decode ONE image block starting at its descriptor byte `pos`
     (after the 0x2C separator): descriptor, optional LCT, LZW data.
-    Returns ((h, w) uint8 luma array, position after the block)."""
+    Returns the (h, w) uint8 luma array."""
     if pos + 9 > len(data):
         raise ValueError("image descriptor truncated")
     _left, _top, w, h, ipacked = struct.unpack("<HHHHB", data[pos : pos + 9])
     pos += 9
     palette = gct
     if ipacked & 0x80:  # local color table overrides the GCT
-        lct_len = 2 << (ipacked & 0x07)
-        palette = np.frombuffer(
-            data[pos : pos + 3 * lct_len], dtype=np.uint8
-        ).reshape(-1, 3)
-        if palette.shape[0] != lct_len:
-            raise ValueError("local color table truncated")
-        pos += 3 * lct_len
+        palette, pos = _color_table(data, pos, ipacked, "local")
     if palette is None:
         raise ValueError("image has neither global nor local color table")
     pal_len = palette.shape[0]
@@ -275,19 +211,12 @@ def _decode_image_at(data: bytes, pos: int, gct, sw: int, sh: int):
     if pos >= len(data):
         raise ValueError("missing LZW minimum code size")
     min_code_size = data[pos]
-    pos += 1
-    lzw = bytearray()
-    while True:
-        if pos >= len(data):
-            raise ValueError("image data sub-blocks truncated")
-        n = data[pos]
-        pos += 1
-        if n == 0:
-            break
-        lzw += data[pos : pos + n]
-        pos += n
+    lzw, _ = _sub_blocks(data, pos + 1, "image data sub-blocks")
     idx = np.frombuffer(
-        _lzw_decode(bytes(lzw), min_code_size, w * h), dtype=np.uint8
+        lzw_decode(
+            lzw, min_code_size, msb=False, early_change=False, n_expected=w * h
+        ),
+        dtype=np.uint8,
     )
     if idx.max(initial=0) >= pal_len:
         raise ValueError("pixel index beyond palette")
@@ -296,7 +225,7 @@ def _decode_image_at(data: bytes, pos: int, gct, sw: int, sh: int):
         img = np.empty_like(pix)
         img[_interlace_row_order(h)] = pix
         pix = img
-    return pix, pos
+    return pix
 
 
 def decode_gif_gray8(payload: bytes) -> dict:
@@ -305,43 +234,11 @@ def decode_gif_gray8(payload: bytes) -> dict:
     n_pixels, mean_intensity, pixels=(h, w) uint8 luma) where luma is
     the palette's (r+g+b)/3 rounded down per entry."""
     data = bytes(payload)
-    if len(data) < 13 or data[:6] not in (_GIF87, _GIF89):
-        raise ValueError("bad GIF header")
-    sw, sh, packed, _bg, _aspect = struct.unpack("<HHBBB", data[6:13])
-    pos = 13
-    gct = None
-    if packed & 0x80:
-        gct_len = 2 << (packed & 0x07)
-        gct = np.frombuffer(
-            data[pos : pos + 3 * gct_len], dtype=np.uint8
-        ).reshape(-1, 3)
-        if gct.shape[0] != gct_len:
-            raise ValueError("global color table truncated")
-        pos += 3 * gct_len
-    while True:
-        if pos >= len(data):
-            raise ValueError("unexpected end of GIF stream")
-        block = data[pos]
-        pos += 1
-        if block == 0x3B:  # trailer before any image
-            raise ValueError("GIF contains no image data")
-        if block == 0x21:  # extension: label + sub-blocks, skip
-            pos += 1
-            while True:
-                if pos >= len(data):
-                    raise ValueError("extension block truncated")
-                n = data[pos]
-                pos += 1
-                if n == 0:
-                    break
-                pos += n
-            continue
-        if block == 0x2C:
-            break
-        raise ValueError(f"unknown GIF block 0x{block:02X}")
-    if pos + 9 > len(data):
-        raise ValueError("image descriptor truncated")
-    pix, pos = _decode_image_at(data, pos, gct, sw, sh)
+    sw, sh, gct, pos = _parse_header(data)
+    first = next(_image_blocks(data, pos), None)
+    if first is None:
+        raise ValueError("GIF contains no image data")
+    pix = _decode_image_at(data, first[0], gct, sw, sh)
     h, w = pix.shape
     return {
         "width": w,
@@ -462,20 +359,14 @@ def encode_gif_animation(
     out = bytearray()
     out += _GIF89
     out += struct.pack("<HHBBB", width, height, 0b1_111_0_111, 0, 0)
-    out += bytes(b for i in range(256) for b in (i, i, i))
+    out += _GRAY_PALETTE
     # NETSCAPE2.0 application extension: loop forever
     out += b"\x21\xff\x0bNETSCAPE2.0\x03\x01\x00\x00\x00"
     for fr in frames:
         out += b"\x21\xf9\x04" + struct.pack("<BHB", 0x04, delay_cs, 0)
         out += b"\x00"  # GCE terminator
         out += b"\x2c" + struct.pack("<HHHHB", 0, 0, width, height, 0)
-        out.append(8)  # min code size
-        lzw = _lzw_encode(np.frombuffer(fr, dtype=np.uint8), 8)
-        for i in range(0, len(lzw), 255):
-            chunk = lzw[i : i + 255]
-            out.append(len(chunk))
-            out += chunk
-        out += b"\x00"
+        out += _lzw_sub_blocks(fr)
     out += b"\x3b"
     return bytes(out)
 
@@ -487,56 +378,11 @@ def parse_gif_frame_index(payload: bytes) -> list[dict]:
     sampler would issue. Returns [{frame, offset, n_bytes}]; raises
     ValueError on corrupt framing."""
     data = bytes(payload)
-    if len(data) < 13 or data[:6] not in (_GIF87, _GIF89):
-        raise ValueError("bad GIF header")
-    _sw, _sh, packed, _bg, _aspect = struct.unpack("<HHBBB", data[6:13])
-    pos = 13
-    if packed & 0x80:
-        pos += 3 * (2 << (packed & 0x07))
-    index: list[dict] = []
-    while True:
-        if pos >= len(data):
-            raise ValueError("unexpected end of GIF stream")
-        block = data[pos]
-        pos += 1
-        if block == 0x3B:
-            break
-        if block == 0x21:  # extension: label + sub-blocks
-            pos += 1
-            while True:
-                if pos >= len(data):
-                    raise ValueError("extension block truncated")
-                n = data[pos]
-                pos += 1
-                if n == 0:
-                    break
-                pos += n
-            continue
-        if block != 0x2C:
-            raise ValueError(f"unknown GIF block 0x{block:02X}")
-        start = pos
-        if pos + 9 > len(data):
-            raise ValueError("image descriptor truncated")
-        ipacked = data[pos + 8]
-        pos += 9
-        if ipacked & 0x80:
-            pos += 3 * (2 << (ipacked & 0x07))
-        pos += 1  # min code size
-        while True:  # data sub-blocks
-            if pos >= len(data):
-                raise ValueError("image data sub-blocks truncated")
-            n = data[pos]
-            pos += 1
-            if n == 0:
-                break
-            pos += n
-        index.append(
-            {
-                "frame": len(index),
-                "offset": start,
-                "n_bytes": pos - start,
-            }
-        )
+    _sw, _sh, _gct, pos = _parse_header(data)
+    index = [
+        {"frame": i, "offset": start, "n_bytes": end - start}
+        for i, (start, end) in enumerate(_image_blocks(data, pos))
+    ]
     if not index:
         raise ValueError("GIF contains no image data")
     return index
@@ -548,22 +394,12 @@ def sample_gif_frames(payload: bytes, every_k: int = 2) -> list[np.ndarray]:
     pixel data), the same 1/k contract as sample_mp4_payloads /
     the AVI sampler."""
     data = bytes(payload)
-    # index FIRST: it validates header magic + length, so a short or
-    # non-GIF payload raises the documented ValueError instead of a
-    # struct.error from the LSD unpack below (ADVICE r8)
     entries = parse_gif_frame_index(data)
-    sw, sh, packed, _bg, _aspect = struct.unpack("<HHBBB", data[6:13])
-    gct = None
-    if packed & 0x80:
-        gct_len = 2 << (packed & 0x07)
-        gct = np.frombuffer(
-            data[13 : 13 + 3 * gct_len], dtype=np.uint8
-        ).reshape(-1, 3)
-    out = []
-    for entry in entries[::every_k]:
-        pix, _ = _decode_image_at(data, entry["offset"], gct, sw, sh)
-        out.append(pix)
-    return out
+    sw, sh, gct, _ = _parse_header(data)
+    return [
+        _decode_image_at(data, entry["offset"], gct, sw, sh)
+        for entry in entries[::every_k]
+    ]
 
 
 @register(

@@ -22,6 +22,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from meta_iterative_mapreduce_spark.io import load_table
+from meta_iterative_mapreduce_spark.operators.codecs import (
+    canonical_codes,
+    png_filter,
+    png_unfilter,
+)
 from meta_iterative_mapreduce_spark.registry import register
 
 
@@ -408,39 +413,6 @@ _ADAM7 = (
 )
 
 
-def _filter_scanlines(
-    pix: bytes, width: int, height: int, filter_type: int
-) -> bytes:
-    """Apply one PNG filter to every scanline of a pixel plane
-    (filter byte + filtered bytes per row)."""
-    rows = []
-    prev = bytes(width)
-    for r in range(height):
-        line = pix[r * width : (r + 1) * width]
-        if filter_type == 0:
-            enc = line
-        elif filter_type == 1:  # Sub
-            enc = bytes((line[i] - (line[i - 1] if i else 0)) & 0xFF for i in range(width))
-        elif filter_type == 2:  # Up
-            enc = bytes((line[i] - prev[i]) & 0xFF for i in range(width))
-        elif filter_type == 3:  # Average
-            enc = bytes(
-                (line[i] - (((line[i - 1] if i else 0) + prev[i]) >> 1)) & 0xFF
-                for i in range(width)
-            )
-        elif filter_type == 4:  # Paeth
-            enc = bytes(
-                (line[i] - _paeth(line[i - 1] if i else 0, prev[i], prev[i - 1] if i else 0))
-                & 0xFF
-                for i in range(width)
-            )
-        else:
-            raise ValueError(f"unknown PNG filter {filter_type}")
-        rows.append(bytes([filter_type]) + enc)
-        prev = line
-    return b"".join(rows)
-
-
 def encode_png_gray8(
     width: int,
     height: int,
@@ -475,12 +447,12 @@ def encode_png_gray8(
                 pix[r * width + c] for r in prows for c in cols
             )
             parts.append(
-                _filter_scanlines(sub, len(cols), len(prows), filter_type)
+                png_filter(sub, len(cols), len(prows), filter_type)
             )
         idat = zlib.compress(b"".join(parts))
     else:
         idat = zlib.compress(
-            _filter_scanlines(pix, width, height, filter_type)
+            png_filter(pix, width, height, filter_type)
         )
     return (
         _PNG_SIG
@@ -488,49 +460,6 @@ def encode_png_gray8(
         + _png_chunk(b"IDAT", idat)
         + _png_chunk(b"IEND", b"")
     )
-
-
-def _paeth(a: int, b: int, c: int) -> int:
-    """PNG Paeth predictor (RFC 2083 §6.6)."""
-    p = a + b - c
-    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-    if pa <= pb and pa <= pc:
-        return a
-    if pb <= pc:
-        return b
-    return c
-
-
-def _unfilter_scanlines(raw: bytes, width: int, height: int) -> bytes:
-    """Reverse the per-scanline PNG filters over a (filter byte +
-    row) x height block — all five filter types (RFC 2083 §6)."""
-    if len(raw) != (width + 1) * height:
-        raise ValueError("filtered block size != (width+1)*height")
-    out = bytearray()
-    prev = bytes(width)
-    for r in range(height):
-        ft = raw[r * (width + 1)]
-        line = bytearray(raw[r * (width + 1) + 1 : (r + 1) * (width + 1)])
-        if ft == 1:  # Sub
-            for i in range(1, width):
-                line[i] = (line[i] + line[i - 1]) & 0xFF
-        elif ft == 2:  # Up
-            for i in range(width):
-                line[i] = (line[i] + prev[i]) & 0xFF
-        elif ft == 3:  # Average
-            for i in range(width):
-                left = line[i - 1] if i else 0
-                line[i] = (line[i] + ((left + prev[i]) >> 1)) & 0xFF
-        elif ft == 4:  # Paeth
-            for i in range(width):
-                left = line[i - 1] if i else 0
-                ul = prev[i - 1] if i else 0
-                line[i] = (line[i] + _paeth(left, prev[i], ul)) & 0xFF
-        elif ft != 0:
-            raise ValueError(f"unknown scanline filter {ft}")
-        prev = bytes(line)
-        out += line
-    return bytes(out)
 
 
 def decode_png_gray8(payload: bytes) -> dict:
@@ -590,7 +519,7 @@ def decode_png_gray8(payload: bytes) -> dict:
             need = (pw + 1) * ph
             if off + need > len(raw):
                 raise ValueError("Adam7 pass truncated")
-            sub = _unfilter_scanlines(raw[off : off + need], pw, ph)
+            sub = png_unfilter(raw[off : off + need], pw, ph)
             off += need
             i = 0
             for r in range(y0, height, dy):
@@ -604,7 +533,7 @@ def decode_png_gray8(payload: bytes) -> dict:
     else:
         if len(raw) != (width + 1) * height:
             raise ValueError("inflated size != (width+1)*height")
-        pix = _unfilter_scanlines(raw, width, height)
+        pix = png_unfilter(raw, width, height)
     return {
         "width": width,
         "height": height,
@@ -1376,18 +1305,18 @@ _D = np.sqrt(2/8) * np.cos((2*_N[None,:]+1) * _N[:,None] * np.pi / 16)
 _D[0,:] = np.sqrt(1/8)
 
 
+def _code_lengths(bits):
+    """JPEG BITS (number of codes of each length 1..16) -> the code
+    length of each HUFFVAL entry, in HUFFVAL order."""
+    return [length for length in range(1, 17) for _ in range(bits[length - 1])]
+
+
 def _huff_codes(bits, vals):
     """val -> (code, length) per JPEG canonical code assignment."""
-    out = {}
-    code = 0
-    k = 0
-    for length in range(1, 17):
-        for _ in range(bits[length-1]):
-            out[vals[k]] = (code, length)
-            code += 1
-            k += 1
-        code <<= 1
-    return out
+    lengths = _code_lengths(bits)
+    return {
+        v: (c, l) for v, c, l in zip(vals, canonical_codes(lengths), lengths)
+    }
 
 DC_ENC = _huff_codes(DC_BITS, DC_VALS)
 AC_ENC = _huff_codes(AC_BITS, AC_VALS)
@@ -1489,7 +1418,9 @@ def _component_symbols(zz, tabs, slot, reset_mask=None):
     zz: (nb, 64) int64 zigzag blocks in the component's emission
     order; tabs: (dc_code, dc_len, ac_code, ac_len) lookup arrays;
     slot: (nb,) global interleave slot per block (MCU-ordered so a
-    later lexsort can interleave components). Returns five int64
+    later lexsort can interleave components); reset_mask: (nb,) bool,
+    True where the DC predictor restarts (the first block of a frame
+    or restart segment; None = only block 0). Returns five int64
     arrays (codes, lens, key_slot, key_pos, key_sub): one row per
     emitted bit-string — DC huffman code + optional DC amplitude, per
     nonzero AC its ZRL runs + run/size code + amplitude, and the EOB
@@ -1503,8 +1434,8 @@ def _component_symbols(zz, tabs, slot, reset_mask=None):
     if reset_mask is None:
         diff = np.diff(dc, prepend=i64(0))
     else:
-        # batched multi-frame form: the DC predictor restarts at the
-        # first block of every frame
+        # the DC predictor restarts at the first block of every frame
+        # or restart segment
         prev = np.empty(nb, i64)
         prev[0] = 0
         prev[1:] = dc[:-1]
@@ -1579,15 +1510,15 @@ def _component_symbols(zz, tabs, slot, reset_mask=None):
 
 
 def _pack_entropy_batch(streams, n_slots, n_frames):
-    """Multi-frame variant of _pack_entropy: symbols from a whole
-    STACK of same-geometry JPEG frames (global slot = frame * n_slots
-    + in-frame slot) are ordered by one lexsort, placed into a single
-    bit buffer with per-frame byte alignment (padding bits default to
-    the 1s JPEG flush emits), packed and byte-stuffed once, and split
-    at stuffing-adjusted frame offsets. Returns a list of n_frames
-    entropy byte strings, each byte-identical to the per-frame
-    scalar/_pack_entropy output — amortizes numpy's fixed per-call
-    cost across every frame of a video payload."""
+    """Pack JPEG entropy symbols into n_frames byte-aligned segments.
+    A segment is a whole frame of a same-geometry stack, or one
+    restart interval of it (global slot = segment * n_slots +
+    in-segment slot). One lexsort orders every symbol; the bits go
+    into a single buffer with each segment padded to a byte with the
+    1s a JPEG flush emits, are packed and byte-stuffed once, and are
+    split at stuffing-adjusted segment offsets. Returns n_frames
+    entropy byte strings — one numpy pass for every frame of a video
+    payload instead of a Python call per symbol."""
     codes = np.concatenate([s[0] for s in streams])
     lens = np.concatenate([s[1] for s in streams])
     kslot = np.concatenate([s[2] for s in streams])
@@ -1628,36 +1559,6 @@ def _pack_entropy_batch(streams, n_slots, n_frames):
     return [
         raw[byte_off[f]: byte_off[f + 1]] for f in range(n_frames)
     ]
-
-
-def _pack_entropy(streams) -> bytes:
-    """Order the symbol streams (lexsort by slot, pos, sub), expand
-    every code to its bits, pack to bytes with 1-padding, and apply
-    JPEG byte stuffing (0x00 after every 0xFF) — byte-identical to
-    the scalar _BitWriter path, but one numpy pass per plane instead
-    of a Python call per symbol."""
-    codes = np.concatenate([s[0] for s in streams])
-    lens = np.concatenate([s[1] for s in streams])
-    kslot = np.concatenate([s[2] for s in streams])
-    kpos = np.concatenate([s[3] for s in streams])
-    ksub = np.concatenate([s[4] for s in streams])
-    order = np.lexsort((ksub, kpos, kslot))
-    codes, lens = codes[order], lens[order]
-    total = int(lens.sum())
-    starts = np.cumsum(lens) - lens
-    sym_of_bit = np.repeat(np.arange(len(lens)), lens)
-    bitpos = np.arange(total, dtype=np.int64) - starts[sym_of_bit]
-    bits = (
-        (codes[sym_of_bit] >> (lens[sym_of_bit] - 1 - bitpos)) & 1
-    ).astype(np.uint8)
-    pad = (-total) % 8
-    if pad:
-        bits = np.concatenate([bits, np.ones(pad, np.uint8)])
-    by = np.packbits(bits)
-    ff = np.nonzero(by == 0xFF)[0]
-    if len(ff):
-        by = np.insert(by, ff + 1, np.uint8(0))
-    return by.tobytes()
 
 
 # Huffman lookup arrays for the vectorized entropy coder
@@ -1724,18 +1625,13 @@ def encode_jpeg_gray(w, h, pix):
     H8, W8 = -(-h // 8) * 8, -(-w // 8) * 8
     padded = np.pad(img, ((0, H8-h), (0, W8-w)), mode="edge") - 128.0
     zz = _quantized_zigzag_blocks(padded, QTAB)
-    # vectorized entropy pass (optimization r15): symbol streams and
-    # bit packing in numpy, byte-identical to the scalar _BitWriter
-    # loop (pinned by tests/test_multimodal.py round trips and the
-    # scalar-vs-vector A/B in test_jpeg_entropy_vectorized)
     flat = zz.reshape(-1, 64)
-    data = _pack_entropy(
-        [
-            _component_symbols(
-                flat, _LUMA_TABS, np.arange(flat.shape[0], dtype=np.int64)
-            )
-        ]
-    )
+    nb = flat.shape[0]
+    data = _pack_entropy_batch(
+        [_component_symbols(flat, _LUMA_TABS, np.arange(nb, dtype=np.int64))],
+        nb,
+        1,
+    )[0]
 
     def seg(marker, payload):
         return struct.pack(">HH", marker, len(payload) + 2) + payload
@@ -1767,88 +1663,14 @@ def encode_jpeg_color(w, h, rgb, restart_interval=0):
     with per-component DC prediction. restart_interval > 0 emits a DRI
     segment and an RSTn marker + DC-predictor reset every that many
     MCUs (what libjpeg/camera writers do for error resilience)."""
-    img = np.frombuffer(rgb, dtype=np.uint8).reshape(h, w, 3).astype(np.float64)
-    r, g, b = img[..., 0], img[..., 1], img[..., 2]
-    # JFIF RGB -> YCbCr (BT.601 full-range)
-    y = 0.299 * r + 0.587 * g + 0.114 * b
-    cb = -0.168736 * r - 0.331264 * g + 0.5 * b + 128.0
-    cr = 0.5 * r - 0.418688 * g - 0.081312 * b + 128.0
-    H16, W16 = -(-h // 16) * 16, -(-w // 16) * 16
-    pad = ((0, H16 - h), (0, W16 - w))
-    yp = np.pad(y, pad, mode="edge") - 128.0
-    cbp = _box2x2(np.pad(cb, pad, mode="edge")) - 128.0
-    crp = _box2x2(np.pad(cr, pad, mode="edge")) - 128.0
-    yzz = _quantized_zigzag_blocks(yp, QTAB)
-    cbzz = _quantized_zigzag_blocks(cbp, CQTAB)
-    crzz = _quantized_zigzag_blocks(crp, CQTAB)
-    if restart_interval:
-        # restart markers reset the DC predictors mid-stream, which
-        # breaks the per-component diff chain the vectorized coder
-        # relies on — the scalar loop stays for this (rare) mode
-        bw = _BitWriter()
-        prev = [0, 0, 0]
-        mcu_i = 0
-        for my in range(H16 // 16):
-            for mx in range(W16 // 16):
-                if mcu_i and mcu_i % restart_interval == 0:
-                    bw.restart_marker(mcu_i // restart_interval - 1)
-                    prev = [0, 0, 0]
-                mcu_i += 1
-                for dy, dx in ((0, 0), (0, 1), (1, 0), (1, 1)):
-                    prev[0] = _entropy_encode_block(
-                        bw, yzz[2 * my + dy, 2 * mx + dx],
-                        prev[0], DC_ENC, AC_ENC,
-                    )
-                prev[1] = _entropy_encode_block(
-                    bw, cbzz[my, mx], prev[1], CDC_ENC, CAC_ENC
-                )
-                prev[2] = _entropy_encode_block(
-                    bw, crzz[my, mx], prev[2], CDC_ENC, CAC_ENC
-                )
-        data = bw.flush()
-    else:
-        # vectorized entropy pass (optimization r15): per component,
-        # blocks are gathered in MCU emission order (Y: the four
-        # 16x16-MCU sub-blocks; Cb/Cr: natural row-major), symbol
-        # streams generated in numpy, and a slot key per block lets
-        # one lexsort interleave the three components exactly as the
-        # scalar MCU loop did. Byte-identical (A/B pinned in tests).
-        mbx = W16 // 16
-        nbx = W16 // 8
-        n_mcu = (H16 // 16) * mbx
-        m_idx = np.arange(n_mcu, dtype=np.int64)
-        my_, mx_ = m_idx // mbx, m_idx % mbx
-        yorder = np.stack(
-            [
-                (2 * my_ + dy) * nbx + (2 * mx_ + dx)
-                for dy, dx in ((0, 0), (0, 1), (1, 0), (1, 1))
-            ],
-            axis=1,
-        ).reshape(-1)
-        k = np.arange(len(yorder), dtype=np.int64)
-        data = _pack_entropy(
-            [
-                _component_symbols(
-                    yzz.reshape(-1, 64)[yorder],
-                    _LUMA_TABS,
-                    (k // 4) * 6 + k % 4,
-                ),
-                _component_symbols(
-                    cbzz.reshape(-1, 64), _CHROMA_TABS, m_idx * 6 + 4
-                ),
-                _component_symbols(
-                    crzz.reshape(-1, 64), _CHROMA_TABS, m_idx * 6 + 5
-                ),
-            ]
-        )
-
-    return _jfif_color_header(w, h, restart_interval) + data + b"\xFF\xD9"
+    frame = np.frombuffer(rgb, dtype=np.uint8).reshape(1, h, w, 3)
+    return _encode_color_stack(w, h, frame, restart_interval)[0]
 
 
 def _jfif_color_header(w, h, restart_interval=0):
     """Everything before the entropy data of the baseline color
-    stream (SOI..SOS) — shared by encode_jpeg_color and the batch
-    encoder, which reuses one header across a frame stack."""
+    stream (SOI..SOS); the stack encoder reuses one header across
+    every frame."""
 
     def seg(marker, payload):
         return struct.pack(">HH", marker, len(payload) + 2) + payload
@@ -1876,18 +1698,27 @@ def _jfif_color_header(w, h, restart_interval=0):
 def encode_jpeg_color_batch(w, h, rgb_stack):
     """Encode a uint8 (n, h, w, 3) frame STACK; returns a list of n
     baseline JFIF byte strings, each byte-for-byte identical to
-    encode_jpeg_color(w, h, frame.tobytes()) (A/B pinned in
-    tests/test_multimodal.py). One numpy pass per STACK — color
-    transform, padding, 4:2:0 subsampling, DCT/quantize, entropy
-    symbols and bit packing all batch across frames with a
-    frame-major slot key, amortizing numpy's fixed per-call overhead
-    that dominates on tiny video frames (the q_multimodal_frame_
-    sample_avi shape: dozens of 12-block frames per document)."""
-    n = rgb_stack.shape[0]
-    if n == 0:
+    encode_jpeg_color(w, h, frame.tobytes()). One numpy pass per
+    STACK amortizes numpy's fixed per-call overhead, which dominates
+    on tiny video frames (the q_multimodal_frame_sample_avi shape:
+    dozens of 12-block frames per document)."""
+    if rgb_stack.shape[0] == 0:
         return []
+    return _encode_color_stack(w, h, rgb_stack)
+
+
+def _encode_color_stack(w, h, rgb_stack, restart_interval=0):
+    """The one baseline color encoder: color transform, padding, 4:2:0
+    subsampling, DCT/quantize, entropy symbols and bit packing all
+    batch across the (n, h, w, 3) stack. Every restart segment (the
+    whole frame when restart_interval is 0) packs as its own
+    byte-aligned unit with its DC predictors reset; segments of a
+    frame are joined with RST0..RST7 markers, written raw (never
+    byte-stuffed)."""
+    n = rgb_stack.shape[0]
     img = rgb_stack.astype(np.float64)
     r, g, b = img[..., 0], img[..., 1], img[..., 2]
+    # JFIF RGB -> YCbCr (BT.601 full-range)
     y = 0.299 * r + 0.587 * g + 0.114 * b
     cb = -0.168736 * r - 0.331264 * g + 0.5 * b + 128.0
     cr = 0.5 * r - 0.418688 * g - 0.081312 * b + 128.0
@@ -1902,9 +1733,13 @@ def encode_jpeg_color_batch(w, h, rgb_stack):
     mbx = W16 // 16
     nbx = W16 // 8
     n_mcu = (H16 // 16) * mbx
-    n_slots = 6 * n_mcu
+    ri = restart_interval or n_mcu
+    n_seg = -(-n_mcu // ri)
+    n_slots = 6 * ri
     m_idx = np.arange(n_mcu, dtype=np.int64)
     my_, mx_ = m_idx // mbx, m_idx % mbx
+    # Y blocks in MCU emission order: the four 8x8 blocks of each
+    # 16x16 MCU; Cb/Cr are one block per MCU, natural row-major
     yorder = np.stack(
         [
             (2 * my_ + dy) * nbx + (2 * mx_ + dx)
@@ -1912,42 +1747,39 @@ def encode_jpeg_color_batch(w, h, rgb_stack):
         ],
         axis=1,
     ).reshape(-1)
-    nyb = len(yorder)
-    k = np.arange(nyb, dtype=np.int64)
-    yslot_f = (k // 4) * 6 + k % 4
-    fr_y = np.repeat(np.arange(n, dtype=np.int64), nyb)
-    yslot = fr_y * n_slots + np.tile(yslot_f, n)
-    yreset = np.zeros(n * nyb, dtype=bool)
-    yreset[::nyb] = True
-    fr_c = np.repeat(np.arange(n, dtype=np.int64), n_mcu)
-    creset = np.zeros(n * n_mcu, dtype=bool)
-    creset[::n_mcu] = True
-    datas = _pack_entropy_batch(
+    # slot of each MCU's first block (Y0..Y3, Cb, Cr take slots +0..+5),
+    # segment-major across the stack so one lexsort interleaves the
+    # components of every segment
+    seg = np.arange(n, dtype=np.int64)[:, None] * n_seg + m_idx // ri
+    mslot = (seg * n_slots + (m_idx % ri) * 6).reshape(-1)
+    mreset = np.tile(m_idx % ri == 0, n)
+    sub = np.tile(np.arange(4, dtype=np.int64), n * n_mcu)
+    segs = _pack_entropy_batch(
         [
             _component_symbols(
                 yzz.reshape(n, -1, 64)[:, yorder].reshape(-1, 64),
                 _LUMA_TABS,
-                yslot,
-                yreset,
+                np.repeat(mslot, 4) + sub,
+                np.repeat(mreset, 4) & (sub == 0),
             ),
             _component_symbols(
-                cbzz.reshape(-1, 64),
-                _CHROMA_TABS,
-                fr_c * n_slots + np.tile(m_idx * 6 + 4, n),
-                creset,
+                cbzz.reshape(-1, 64), _CHROMA_TABS, mslot + 4, mreset
             ),
             _component_symbols(
-                crzz.reshape(-1, 64),
-                _CHROMA_TABS,
-                fr_c * n_slots + np.tile(m_idx * 6 + 5, n),
-                creset,
+                crzz.reshape(-1, 64), _CHROMA_TABS, mslot + 5, mreset
             ),
         ],
         n_slots,
-        n,
+        n * n_seg,
     )
-    header = _jfif_color_header(w, h)
-    return [header + d + b"\xFF\xD9" for d in datas]
+    header = _jfif_color_header(w, h, restart_interval)
+    rst = [bytes((0xFF, 0xD0 + j % 8)) for j in range(n_seg - 1)]
+    out = []
+    for f in range(n):
+        parts = segs[f * n_seg : (f + 1) * n_seg]
+        data = b"".join(p + m for p, m in zip(parts, rst)) + parts[-1]
+        out.append(header + data + b"\xFF\xD9")
+    return out
 
 
 class _BitReader:
@@ -2056,39 +1888,37 @@ def _huff_decode_table(bits, vals):
     if cached is not None:
         return cached
     out = [0] * 65536
-    code = 0
-    k = 0
-    for length in range(1, 17):
-        for _ in range(bits[length - 1]):
-            packed = (vals[k] << 5) | length
-            lo = code << (16 - length)
-            hi = (code + 1) << (16 - length)
-            out[lo:hi] = [packed] * (hi - lo)
-            code += 1
-            k += 1
-        code <<= 1
+    lengths = _code_lengths(bits)
+    for val, code, length in zip(vals, canonical_codes(lengths), lengths):
+        lo = code << (16 - length)
+        hi = (code + 1) << (16 - length)
+        out[lo:hi] = [(val << 5) | length] * (hi - lo)
     if len(_HUFF_TABLE_CACHE) < 64:  # bound worker memory
         _HUFF_TABLE_CACHE[key] = out
     return out
-
-
-def _read_huff_symbol(br, window_table):
-    return br.read_huff(window_table)
 
 
 def _extend(v, size):
     return v if v >= (1 << (size - 1)) else v - (1 << size) + 1
 
 
-def decode_jpeg_gray(payload):
-    """Parse any writer's baseline grayscale JPEG (tables read from the
-    stream, not assumed). Returns dict(width, height, pixels ndarray)."""
+def _parse_jpeg(payload, n_components=(1, 3)):
+    """Walk a baseline JPEG's markers up to its scan, reading the
+    quant/Huffman tables, frame components, restart interval and scan
+    table bindings FROM THE STREAM, so any writer's file parses; a
+    frame whose component count is not in `n_components` is refused
+    at its SOF. Returns (width, height, components, restart_interval,
+    entropy data) with components = [(id, h_samp, v_samp, qtab,
+    dc_table, ac_table)] in SOF order."""
     if payload[:2] != b"\xFF\xD8":
         raise ValueError("not a JPEG (no SOI)")
     pos = 2
     qtabs, htabs = {}, {}
     w = h = None
+    comps = []  # (comp_id, hi, vi, tq) in SOF order
+    scan_tabs = {}  # comp_id -> (dc_id, ac_id)
     data = None
+    restart_interval = 0
     while pos < len(payload):
         if payload[pos] != 0xFF:
             raise ValueError("marker expected")
@@ -2097,7 +1927,9 @@ def decode_jpeg_gray(payload):
             break
         ln = struct.unpack(">H", payload[pos:pos+2])[0]
         body = payload[pos+2:pos+ln]
-        if marker == 0xDB:
+        if marker == 0xDD:
+            restart_interval = struct.unpack(">H", body[:2])[0]
+        elif marker == 0xDB:
             while body:
                 pq_tq, body = body[0], body[1:]
                 if pq_tq >> 4:
@@ -2108,16 +1940,18 @@ def decode_jpeg_gray(payload):
                 body = body[64:]
         elif marker == 0xC0:
             prec, h, w, nc = struct.unpack(">BHHB", body[:6])
-            if prec != 8 or nc != 1:
-                raise NotImplementedError("baseline grayscale only")
-            comp_qtab = body[8]
+            if prec != 8:
+                raise NotImplementedError("8-bit baseline only")
+            if nc not in n_components:
+                raise NotImplementedError(
+                    f"{nc}-component frame: baseline "
+                    f"{' or '.join(map(str, n_components))}-component only"
+                )
+            for ci in range(nc):
+                cid, hv, tq = body[6+3*ci], body[7+3*ci], body[8+3*ci]
+                comps.append((cid, hv >> 4, hv & 15, tq))
         elif marker in (0xC1, 0xC2, 0xC3):
             raise NotImplementedError("baseline sequential only")
-        elif marker == 0xDD and struct.unpack(">H", body[:2])[0]:
-            raise NotImplementedError(
-                "restart intervals: use decode_jpeg_color (reads "
-                "1-component streams too)"
-            )
         elif marker == 0xC4:
             while body:
                 tc_th, body = body[0], body[1:]
@@ -2131,32 +1965,73 @@ def decode_jpeg_gray(payload):
                 htabs[(tc_th >> 4, tc_th & 15)] = _huff_decode_table(bits, vals)
         elif marker == 0xDA:
             ns = body[0]
-            dc_id, ac_id = body[2] >> 4, body[2] & 15
+            for si in range(ns):
+                cid, tt = body[1+2*si], body[2+2*si]
+                scan_tabs[cid] = (tt >> 4, tt & 15)
             data = payload[pos+ln:]
             # entropy data runs to EOI
             end = data.rfind(b"\xFF\xD9")
             data = data[:end] if end >= 0 else data
-            pos += ln
             break
         pos += ln
-    if data is None or w is None:
+    if data is None or w is None or not comps:
         raise ValueError("missing SOS/SOF")
-    q = qtabs[comp_qtab]
-    dct, act = htabs[(0, dc_id)], htabs[(1, ac_id)]
-    H8, W8 = -(-h // 8), -(-w // 8)
+    units = []
+    for cid, hi, vi, tq in comps:
+        if cid not in scan_tabs:
+            raise ValueError(f"scan does not cover component {cid}")
+        td, ta = scan_tabs[cid]
+        units.append((cid, hi, vi, qtabs[tq], htabs[(0, td)], htabs[(1, ta)]))
+    return w, h, units, restart_interval, data
+
+
+def _decode_scan(w, h, comps, restart_interval, data):
+    """Entropy-decode the scan into one level-shifted float plane per
+    component (MCU-padded). RSTn markers byte-align the reader and
+    reset the DC predictors. A single-component scan is
+    NON-interleaved (ITU T.81 A.2.2): one block per MCU, whatever the
+    SOF sampling factors."""
+    if len(comps) == 1:
+        cid, _, _, q, dct, act = comps[0]
+        comps = [(cid, 1, 1, q, dct, act)]
+    hmax = max(c[1] for c in comps)
+    vmax = max(c[2] for c in comps)
+    mcux = -(-w // (8 * hmax))
+    mcuy = -(-h // (8 * vmax))
+    zzs = [[] for _ in comps]
+    prev = [0] * len(comps)
     br = _BitReader(data)
-    prev_dc = 0
-    zzs = []
-    for _ in range(H8 * W8):
-        zz, prev_dc = _decode_entropy_block(br, dct, act, prev_dc)
-        zzs.append(zz)
-    blocks = _batch_idct(np.stack(zzs), q)  # raster block order
-    out = (
-        blocks.reshape(H8, W8, 8, 8)
-        .transpose(0, 2, 1, 3)
-        .reshape(H8 * 8, W8 * 8)
-    )
-    pix = np.clip(np.floor(out + 128.0 + 0.5), 0, 255).astype(np.uint8)[:h, :w]
+    for m in range(mcux * mcuy):
+        if restart_interval and m and m % restart_interval == 0:
+            br.consume_restart()  # byte-align + RSTn
+            prev = [0] * len(comps)  # DC predictors reset
+        for ci, (_, hi, vi, _, dct, act) in enumerate(comps):
+            out = zzs[ci]
+            for _ in range(hi * vi):
+                zz, prev[ci] = _decode_entropy_block(br, dct, act, prev[ci])
+                out.append(zz)
+    planes = []
+    for (_, hi, vi, q, _, _), zz in zip(comps, zzs):
+        # blocks arrive MCU by MCU, each MCU's vi x hi blocks row-major
+        blocks = _batch_idct(np.stack(zz), q).reshape(mcuy, mcux, vi, hi, 8, 8)
+        planes.append(
+            blocks.transpose(0, 2, 4, 1, 3, 5).reshape(mcuy * vi * 8, mcux * hi * 8)
+        )
+    return planes
+
+
+def decode_jpeg_gray(payload):
+    """Parse any writer's baseline grayscale JPEG (tables read from the
+    stream, not assumed) — the one-component case of decode_jpeg_color.
+    Returns dict(width, height, pixels (h, w) uint8)."""
+    w, h, comps, restart_interval, data = _parse_jpeg(payload, (1,))
+    if restart_interval:
+        raise NotImplementedError(
+            "restart intervals: use decode_jpeg_color (reads "
+            "1-component streams too)"
+        )
+    (plane,) = _decode_scan(w, h, comps, restart_interval, data)
+    pix = np.clip(np.floor(plane + 128.0 + 0.5), 0, 255).astype(np.uint8)[:h, :w]
     return {"width": w, "height": h, "pixels": pix}
 
 
@@ -2167,13 +2042,13 @@ def _decode_entropy_block(br, dct, act, prev_dc):
     (_batch_idct) — entropy decoding is inherently sequential, the
     math is not."""
     zz = np.zeros(64, dtype=np.int64)
-    s = _read_huff_symbol(br, dct)
+    s = br.read_huff(dct)
     diff = _extend(br.bits(s), s) if s else 0
     prev_dc += diff
     zz[0] = prev_dc
     k = 1
     while k < 64:
-        rs = _read_huff_symbol(br, act)
+        rs = br.read_huff(act)
         if rs == 0x00:
             break
         if rs == 0xF0:
@@ -2214,111 +2089,18 @@ def decode_jpeg_color(payload):
     upsampled by sample replication, BT.601 YCbCr -> RGB. Returns dict(width,
     height, pixels HxWx3 uint8). NotImplementedError scope guards
     mirror decode_jpeg_gray (baseline sequential, 8-bit tables)."""
-    if payload[:2] != b"\xFF\xD8":
-        raise ValueError("not a JPEG (no SOI)")
-    pos = 2
-    qtabs, htabs = {}, {}
-    w = h = None
-    comps = []  # (comp_id, hi, vi, tq) in SOF order
-    scan_tabs = {}  # comp_id -> (dc_id, ac_id)
-    data = None
-    restart_interval = 0
-    while pos < len(payload):
-        if payload[pos] != 0xFF:
-            raise ValueError("marker expected")
-        marker = payload[pos+1]; pos += 2
-        if marker == 0xD9:
-            break
-        ln = struct.unpack(">H", payload[pos:pos+2])[0]
-        body = payload[pos+2:pos+ln]
-        if marker == 0xDD:
-            restart_interval = struct.unpack(">H", body[:2])[0]
-        elif marker == 0xDB:
-            while body:
-                pq_tq, body = body[0], body[1:]
-                if pq_tq >> 4:
-                    raise NotImplementedError("16-bit qtable")
-                if len(body) < 64:
-                    raise ValueError("truncated quantization table")
-                qtabs[pq_tq & 15] = np.array(list(body[:64]), dtype=np.int32)
-                body = body[64:]
-        elif marker == 0xC0:
-            prec, h, w, nc = struct.unpack(">BHHB", body[:6])
-            if prec != 8:
-                raise NotImplementedError("8-bit baseline only")
-            if nc not in (1, 3):
-                raise NotImplementedError("1- or 3-component only")
-            for ci in range(nc):
-                cid, hv, tq = body[6+3*ci], body[7+3*ci], body[8+3*ci]
-                comps.append((cid, hv >> 4, hv & 15, tq))
-        elif marker in (0xC1, 0xC2, 0xC3):
-            raise NotImplementedError("baseline sequential only")
-        elif marker == 0xC4:
-            while body:
-                tc_th, body = body[0], body[1:]
-                if len(body) < 16:
-                    raise ValueError("truncated huffman table header")
-                bits = list(body[:16]); body = body[16:]
-                nv = sum(bits)
-                if len(body) < nv:
-                    raise ValueError("truncated huffman table values")
-                vals = list(body[:nv]); body = body[nv:]
-                htabs[(tc_th >> 4, tc_th & 15)] = _huff_decode_table(bits, vals)
-        elif marker == 0xDA:
-            ns = body[0]
-            for si in range(ns):
-                cid, tt = body[1+2*si], body[2+2*si]
-                scan_tabs[cid] = (tt >> 4, tt & 15)
-            data = payload[pos+ln:]
-            end = data.rfind(b"\xFF\xD9")
-            data = data[:end] if end >= 0 else data
-            pos += ln
-            break
-        pos += ln
-    if data is None or w is None or not comps:
-        raise ValueError("missing SOS/SOF")
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    mcux = -(-w // (8 * hmax))
-    mcuy = -(-h // (8 * vmax))
-    prev = {cid: 0 for cid, *_ in comps}
-    coef_items = {cid: [] for cid, *_ in comps}  # (block_y, block_x, zz)
-    br = _BitReader(data)
-    mcu_i = 0
-    for my in range(mcuy):
-        for mx in range(mcux):
-            if restart_interval and mcu_i and mcu_i % restart_interval == 0:
-                br.consume_restart()  # byte-align + RSTn
-                prev = {cid: 0 for cid, *_ in comps}  # DC predictors reset
-            mcu_i += 1
-            for cid, hi, vi, tq in comps:
-                dct, act = htabs[(0, scan_tabs[cid][0])], htabs[(1, scan_tabs[cid][1])]
-                for by in range(vi):
-                    for bx in range(hi):
-                        zz, prev[cid] = _decode_entropy_block(
-                            br, dct, act, prev[cid]
-                        )
-                        coef_items[cid].append(
-                            (my * vi + by, mx * hi + bx, zz)
-                        )
-    planes = {}
-    for cid, hi, vi, tq in comps:
-        plane = np.zeros((mcuy * 8 * vi, mcux * 8 * hi))
-        items = coef_items[cid]
-        blocks = _batch_idct(np.stack([z for _, _, z in items]), qtabs[tq])
-        for (by, bx, _), blk in zip(items, blocks):
-            plane[by * 8:(by + 1) * 8, bx * 8:(bx + 1) * 8] = blk
-        planes[cid] = plane
+    w, h, comps, restart_interval, data = _parse_jpeg(payload)
+    planes = _decode_scan(w, h, comps, restart_interval, data)
     if len(comps) == 1:
-        cid = comps[0][0]
-        pix = np.clip(np.floor(planes[cid] + 128.0 + 0.5), 0, 255)
+        pix = np.clip(np.floor(planes[0] + 128.0 + 0.5), 0, 255)
         return {
             "width": w, "height": h,
             "pixels": pix.astype(np.uint8)[:h, :w][..., None].repeat(3, axis=2),
         }
+    hmax = max(c[1] for c in comps)
+    vmax = max(c[2] for c in comps)
     full = {}
-    for cid, hi, vi, _ in comps:
-        p = planes[cid]
+    for (cid, hi, vi, *_), p in zip(comps, planes):
         p = p.repeat(vmax // vi, axis=0).repeat(hmax // hi, axis=1)
         full[cid] = p[:h, :w] + 128.0
     # Component identity is given by the SOF component IDs (JFIF
@@ -2337,8 +2119,6 @@ def decode_jpeg_color(payload):
         "height": h,
         "pixels": np.clip(np.floor(rgb + 0.5), 0, 255).astype(np.uint8),
     }
-
-
 
 
 _JPEG_MEAN_BOUND = 3.0

@@ -57,6 +57,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from meta_iterative_mapreduce_spark.io import load_table
+from meta_iterative_mapreduce_spark.operators.codecs import (
+    lzw_decode,
+    lzw_encode,
+    packbits_decode,
+    png_filter,
+    png_unfilter,
+)
 from meta_iterative_mapreduce_spark.registry import register
 
 
@@ -95,11 +102,19 @@ def encode_simple_pdf(page_texts: list[str]) -> bytes:
     """One-column text PDF, classic PDF 1.4 layout: each entry of
     `page_texts` becomes a page with its own FlateDecode content
     stream; xref table + trailer."""
-    if not page_texts:
+    return _classic_pdf(
+        [(b"/FlateDecode", _page_content_flate(t)) for t in page_texts]
+    )
+
+
+def _classic_pdf(contents: list[tuple[bytes, bytes]]) -> bytes:
+    """Classic-layout file: catalog, page tree, font, then per page a
+    page dict and its content stream given as (/Filter value, stored
+    bytes); xref table + trailer."""
+    if not contents:
         raise ValueError("need at least one page")
     objects: list[bytes] = []  # 1-indexed object bodies
-
-    n_pages = len(page_texts)
+    n_pages = len(contents)
     page_obj_ids = [4 + 2 * i for i in range(n_pages)]
     kids = " ".join(f"{i} 0 R" for i in page_obj_ids)
     objects.append(b"<< /Type /Catalog /Pages 2 0 R >>")  # obj 1
@@ -109,22 +124,19 @@ def encode_simple_pdf(page_texts: list[str]) -> bytes:
     objects.append(
         b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>"
     )  # obj 3
-    for i, text in enumerate(page_texts):
-        flate = _page_content_flate(text)
+    for i, (filt, stored) in enumerate(contents):
         objects.append(
             f"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
             f"/Resources << /Font << /F1 3 0 R >> >> "
             f"/Contents {page_obj_ids[i] + 1} 0 R >>".encode()
         )
         objects.append(
-            (
-                f"<< /Length {len(flate)} /Filter /FlateDecode >>\n"
-                "stream\n"
-            ).encode()
-            + flate
+            f"<< /Length {len(stored)} /Filter ".encode()
+            + filt
+            + b" >>\nstream\n"
+            + stored
             + b"\nendstream"
         )
-
     out = bytearray(b"%PDF-1.7\n%\xe2\xe3\xcf\xd3\n")
     offsets = [0]  # object 0 is the free head
     for i, body in enumerate(objects, start=1):
@@ -139,18 +151,6 @@ def encode_simple_pdf(page_texts: list[str]) -> bytes:
         f"trailer\n<< /Size {len(objects) + 1} /Root 1 0 R >>\n"
         f"startxref\n{xref_at}\n%%EOF"
     ).encode()
-    return bytes(out)
-
-
-def _apply_png_up_predictor(rows: list[bytes]) -> bytes:
-    """PNG filter type 2 (Up) per row, the layout real PDF writers
-    emit for xref streams (/Predictor 12)."""
-    out = bytearray()
-    prev = bytes(len(rows[0]))
-    for row in rows:
-        out.append(2)
-        out += bytes((b - p) & 0xFF for b, p in zip(row, prev))
-        prev = row
     return bytes(out)
 
 
@@ -227,7 +227,8 @@ def encode_pdf_xref_stream(page_texts: list[str]) -> bytes:
         rows.append(
             bytes([t]) + f2.to_bytes(4, "big") + f3.to_bytes(2, "big")
         )
-    table = zlib.compress(_apply_png_up_predictor(rows))
+    # PNG-Up per row (/Predictor 12), the layout real writers emit
+    table = zlib.compress(png_filter(b"".join(rows), 7, len(rows), 2))
     out += (
         f"{xref_id} 0 obj\n<< /Type /XRef /Size {size} /Root 1 0 R "
         f"/W [1 4 2] /Index [0 4 4 {size - 4}] /Filter /FlateDecode "
@@ -245,61 +246,23 @@ def encode_pdf_filter_chain(page_texts: list[str]) -> bytes:
     [/ASCII85Decode /FlateDecode] (mail-safe armored deflate — the
     array lists DECODE order, so the stored bytes are
     ascii85(flate(content))); [/ASCIIHexDecode /RunLengthDecode]."""
-    from meta_iterative_mapreduce_spark.operators.tiff import _tlzw_encode
-
-    if not page_texts:
-        raise ValueError("need at least one page")
-    objects: list[bytes] = []
-    n_pages = len(page_texts)
-    page_obj_ids = [4 + 2 * i for i in range(n_pages)]
-    kids = " ".join(f"{i} 0 R" for i in page_obj_ids)
-    objects.append(b"<< /Type /Catalog /Pages 2 0 R >>")
-    objects.append(
-        f"<< /Type /Pages /Kids [{kids}] /Count {n_pages} >>".encode()
-    )
-    objects.append(
-        b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>"
-    )
+    contents = []
     for i, text in enumerate(page_texts):
         content = zlib.decompress(_page_content_flate(text))
         variant = i % 4
         if variant == 0:
             stored, filt = zlib.compress(content), b"/FlateDecode"
         elif variant == 1:
-            stored, filt = _tlzw_encode(content), b"/LZWDecode"
+            stored = lzw_encode(content, 8, msb=True, early_change=True)
+            filt = b"/LZWDecode"
         elif variant == 2:
             stored = _ascii85_encode(zlib.compress(content))
             filt = b"[/ASCII85Decode /FlateDecode]"
         else:
             stored = binascii.hexlify(_rle_encode(content)) + b">"
             filt = b"[/ASCIIHexDecode /RunLengthDecode]"
-        objects.append(
-            f"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
-            f"/Resources << /Font << /F1 3 0 R >> >> "
-            f"/Contents {page_obj_ids[i] + 1} 0 R >>".encode()
-        )
-        objects.append(
-            f"<< /Length {len(stored)} /Filter ".encode()
-            + filt
-            + b" >>\nstream\n"
-            + stored
-            + b"\nendstream"
-        )
-    out = bytearray(b"%PDF-1.7\n%\xe2\xe3\xcf\xd3\n")
-    offsets = [0]
-    for i, body in enumerate(objects, start=1):
-        offsets.append(len(out))
-        out += f"{i} 0 obj\n".encode() + body + b"\nendobj\n"
-    xref_at = len(out)
-    out += f"xref\n0 {len(objects) + 1}\n".encode()
-    out += b"0000000000 65535 f \n"
-    for off in offsets[1:]:
-        out += f"{off:010d} 00000 n \n".encode()
-    out += (
-        f"trailer\n<< /Size {len(objects) + 1} /Root 1 0 R >>\n"
-        f"startxref\n{xref_at}\n%%EOF"
-    ).encode()
-    return bytes(out)
+        contents.append((filt, stored))
+    return _classic_pdf(contents)
 
 
 def encode_pdf_incremental(page_texts: list[str]) -> bytes:
@@ -523,97 +486,10 @@ def _balanced_dict(data: bytes, start: int) -> tuple[bytes, int]:
     raise ValueError("unbalanced dictionary")
 
 
-def _undo_png_predictor(data: bytes, columns: int) -> bytes:
-    """Undo PNG row filters (PDF /Predictor >= 10; 8-bit, 1 byte per
-    sample — the xref-stream shape). All five filter types."""
-    rowlen = columns + 1
-    if rowlen <= 1 or len(data) % rowlen:
-        raise ValueError("predictor data is not whole rows")
-    out = bytearray()
-    prev = bytearray(columns)
-    for r in range(0, len(data), rowlen):
-        ft = data[r]
-        row = bytearray(data[r + 1 : r + rowlen])
-        if ft == 0:
-            pass
-        elif ft == 1:  # Sub
-            for i in range(1, columns):
-                row[i] = (row[i] + row[i - 1]) & 0xFF
-        elif ft == 2:  # Up
-            for i in range(columns):
-                row[i] = (row[i] + prev[i]) & 0xFF
-        elif ft == 3:  # Average
-            for i in range(columns):
-                left = row[i - 1] if i else 0
-                row[i] = (row[i] + (left + prev[i]) // 2) & 0xFF
-        elif ft == 4:  # Paeth
-            for i in range(columns):
-                a = row[i - 1] if i else 0
-                b = prev[i]
-                c = prev[i - 1] if i else 0
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pr = a if pa <= pb and pa <= pc else (b if pb <= pc else c)
-                row[i] = (row[i] + pr) & 0xFF
-        else:
-            raise ValueError(f"unknown PNG predictor filter {ft}")
-        out += row
-        prev = row
-    return bytes(out)
-
-
 # --- stream filters beyond Flate (PDF 1.7 §7.4) ---------------------
 # The /Filter value may be a NAME or an ARRAY listing filters in
 # DECODE order; real writers chain them (e.g. [/ASCII85Decode
 # /FlateDecode] for mail-safe transport of compressed streams).
-
-
-def _pdf_lzw_decode(data: bytes) -> bytes:
-    """PDF LZWDecode: the TIFF LZW variant (MSB-first bit packing,
-    EarlyChange=1 — the width grows at table size 2^w - 1, one code
-    EARLIER than GIF's LSB variant; see operators/tiff.py for the
-    shared trap), without TIFF's known-output-size contract: PDF
-    streams end at the EOD code."""
-    clear, eod = 256, 257
-    table: list[bytes] = [bytes([i]) for i in range(256)] + [b"", b""]
-    width = 9
-    out = bytearray()
-    acc = nbits = pos = 0
-    prev: bytes | None = None
-    while True:
-        while nbits < width:
-            if pos >= len(data):
-                raise ValueError("LZWDecode stream truncated (no EOD)")
-            acc = (acc << 8) | data[pos]
-            nbits += 8
-            pos += 1
-        code = (acc >> (nbits - width)) & ((1 << width) - 1)
-        nbits -= width
-        if code == eod:
-            return bytes(out)
-        if code == clear:
-            table = [bytes([i]) for i in range(256)] + [b"", b""]
-            width = 9
-            prev = None
-            continue
-        if prev is None:
-            if code >= 256:
-                raise ValueError(f"first LZWDecode code {code} not a root")
-            entry = table[code]
-        elif code < len(table):
-            entry = table[code]
-            table.append(prev + entry[:1])
-        elif code == len(table):
-            entry = prev + prev[:1]
-            table.append(entry)
-        else:
-            raise ValueError(
-                f"LZWDecode code {code} beyond table {len(table)}"
-            )
-        out += entry
-        if len(table) == (1 << width) - 1 and width < 12:
-            width += 1  # EarlyChange
-        prev = entry
 
 
 def _ascii85_decode(data: bytes) -> bytes:
@@ -687,28 +563,6 @@ def _asciihex_decode(data: bytes) -> bytes:
         raise ValueError(f"bad ASCIIHex stream: {exc}") from exc
 
 
-def _rle_decode(data: bytes) -> bytes:
-    out = bytearray()
-    i = 0
-    while i < len(data):
-        length = data[i]
-        i += 1
-        if length == 128:  # EOD
-            return bytes(out)
-        if length < 128:
-            chunk = data[i : i + length + 1]
-            if len(chunk) != length + 1:
-                raise ValueError("RunLength literal truncated")
-            out += chunk
-            i += length + 1
-        else:
-            if i >= len(data):
-                raise ValueError("RunLength repeat truncated")
-            out += bytes([data[i]]) * (257 - length)
-            i += 1
-    raise ValueError("RunLength stream without EOD")
-
-
 def _rle_encode(data: bytes) -> bytes:
     out = bytearray()
     i = 0
@@ -757,21 +611,24 @@ def _decode_stream(d: bytes, raw: bytes) -> bytes:
             except zlib.error as exc:
                 raise ValueError(f"bad FlateDecode stream: {exc}") from exc
         elif name == b"LZWDecode":
-            raw = _pdf_lzw_decode(raw)
+            raw = lzw_decode(raw, 8, msb=True, early_change=True)
         elif name == b"ASCII85Decode":
             raw = _ascii85_decode(raw)
         elif name == b"ASCIIHexDecode":
             raw = _asciihex_decode(raw)
         elif name == b"RunLengthDecode":
-            raw = _rle_decode(raw)
+            raw = packbits_decode(raw)
         else:
             raise NotImplementedError(f"stream filter /{name.decode()}")
         if name in (b"FlateDecode", b"LZWDecode"):
             pred = _dict_int(d, b"Predictor")
             if pred is not None and pred >= 10:
-                raw = _undo_png_predictor(
-                    raw, _dict_int(d, b"Columns") or 1
-                )
+                # PNG row filters, 8-bit, one byte per sample (the
+                # xref-stream shape)
+                rowlen = (_dict_int(d, b"Columns") or 1) + 1
+                if len(raw) % rowlen:
+                    raise ValueError("predictor data is not whole rows")
+                raw = png_unfilter(raw, rowlen - 1, len(raw) // rowlen)
             elif pred is not None and pred != 1:
                 raise NotImplementedError(f"predictor {pred} not supported")
     return raw

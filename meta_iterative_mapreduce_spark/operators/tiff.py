@@ -39,14 +39,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from meta_iterative_mapreduce_spark.io import load_table
+from meta_iterative_mapreduce_spark.operators.codecs import (
+    lzw_decode,
+    lzw_encode,
+    packbits_decode,
+)
 from meta_iterative_mapreduce_spark.registry import register
-
-_MAX_CODE_WIDTH = 12
-
-
-# ---------------------------------------------------------------------------
-# PackBits (TIFF 6.0 §9)
-# ---------------------------------------------------------------------------
 
 
 def _packbits_encode(data: bytes) -> bytes:
@@ -75,161 +73,13 @@ def _packbits_encode(data: bytes) -> bytes:
     return bytes(out)
 
 
-def _packbits_decode(data: bytes, n_expected: int) -> bytes:
-    out = bytearray()
-    i = 0
-    while len(out) < n_expected:
-        if i >= len(data):
-            raise ValueError("PackBits stream truncated")
-        b = data[i]
-        i += 1
-        if b < 128:  # literal of b+1 bytes
-            if i + b + 1 > len(data):
-                raise ValueError("PackBits literal truncated")
-            out += data[i : i + b + 1]
-            i += b + 1
-        elif b > 128:  # repeat next byte 257-b times
-            if i >= len(data):
-                raise ValueError("PackBits run truncated")
-            out += bytes([data[i]]) * (257 - b)
-            i += 1
-        # b == 128: no-op per spec
-    if len(out) != n_expected:
-        raise ValueError(
-            f"PackBits produced {len(out)} bytes, strip declares {n_expected}"
-        )
-    return bytes(out)
-
-
-# ---------------------------------------------------------------------------
-# TIFF-LZW (TIFF 6.0 §13): MSB-first codes, EarlyChange width growth
-# ---------------------------------------------------------------------------
-
-_T_CLEAR, _T_EOI = 256, 257
-
-
-def _tlzw_encode(data: bytes) -> bytes:
-    # Width bookkeeping tracks the DECODER's table size explicitly:
-    # the decoder appends one entry per received code except the
-    # first after a clear, and EarlyChange widens when its table hits
-    # 2^width - 1 — with MSB packing the encoder/decoder off-by-ones
-    # do NOT cancel the way the GIF (LSB, non-early) variant's do, so
-    # simulating the decoder is the only non-fragile bookkeeping.
-    bits: list[tuple[int, int]] = []
-    table = {bytes([i]): i for i in range(256)}
-    next_code = _T_EOI + 1
-    width = 9
-    dec_len = _T_EOI + 1  # decoder table size
-    n_since_clear = 0
-
-    def emit(code: int) -> None:
-        nonlocal dec_len, width, n_since_clear
-        bits.append((code, width))
-        n_since_clear += 1
-        if n_since_clear >= 2:  # decoder appends for this code
-            dec_len += 1
-            if dec_len == (1 << width) - 1 and width < _MAX_CODE_WIDTH:
-                width += 1
-
-    def emit_clear() -> None:
-        nonlocal table, next_code, width, dec_len, n_since_clear
-        bits.append((_T_CLEAR, width))
-        table = {bytes([i]): i for i in range(256)}
-        next_code = _T_EOI + 1
-        width = 9
-        dec_len = _T_EOI + 1
-        n_since_clear = 0
-
-    emit_clear()
-    prefix = b""
-    for px in data:
-        cand = prefix + bytes([px])
-        if cand in table:
-            prefix = cand
-            continue
-        emit(table[prefix])
-        table[cand] = next_code
-        next_code += 1
-        if next_code >= (1 << _MAX_CODE_WIDTH) - 2:  # table nearly full
-            emit_clear()
-        prefix = bytes([px])
-    if prefix:
-        emit(table[prefix])
-    bits.append((_T_EOI, width))
-    # MSB-first packing
-    acc = 0
-    nbits = 0
-    out = bytearray()
-    for code, w in bits:
-        acc = (acc << w) | code
-        nbits += w
-        while nbits >= 8:
-            out.append((acc >> (nbits - 8)) & 0xFF)
-            nbits -= 8
-    if nbits:
-        out.append((acc << (8 - nbits)) & 0xFF)
-    return bytes(out)
-
-
-def _tlzw_decode(data: bytes, n_expected: int) -> bytes:
-    table: list[bytes] = [bytes([i]) for i in range(256)] + [b"", b""]
-    width = 9
-    out = bytearray()
-    acc = 0
-    nbits = 0
-    pos = 0
-    prev: bytes | None = None
-    while True:
-        while nbits < width:
-            if pos >= len(data):
-                raise ValueError("TIFF-LZW stream truncated (no EOI)")
-            acc = (acc << 8) | data[pos]
-            nbits += 8
-            pos += 1
-        code = (acc >> (nbits - width)) & ((1 << width) - 1)
-        nbits -= width
-        if code == _T_EOI:
-            break
-        if code == _T_CLEAR:
-            table = [bytes([i]) for i in range(256)] + [b"", b""]
-            width = 9
-            prev = None
-            continue
-        if prev is None:
-            if code >= 256:
-                raise ValueError(f"first TIFF-LZW code {code} not a root")
-            entry = table[code]
-        elif code < len(table):
-            entry = table[code]
-            table.append(prev + entry[:1])
-        elif code == len(table):
-            entry = prev + prev[:1]
-            table.append(entry)
-        else:
-            raise ValueError(
-                f"TIFF-LZW code {code} beyond table {len(table)}"
-            )
-        out += entry
-        if len(table) == (1 << width) - 1 and width < _MAX_CODE_WIDTH:
-            width += 1  # EarlyChange
-        prev = entry
-        if len(out) > n_expected:
-            raise ValueError("TIFF-LZW output exceeds strip size")
-    if len(out) != n_expected:
-        raise ValueError(
-            f"TIFF-LZW produced {len(out)} bytes, strip declares "
-            f"{n_expected}"
-        )
-    return bytes(out)
-
-
 # ---------------------------------------------------------------------------
 # container
 # ---------------------------------------------------------------------------
 
 _COMPRESSORS = {
     "none": (1, lambda b: b),
-    "lzw": (5, _tlzw_encode),
+    "lzw": (5, lambda b: lzw_encode(b, 8, msb=True, early_change=True)),
     "packbits": (32773, _packbits_encode),
 }
 
@@ -260,60 +110,12 @@ def encode_tiff_gray8(
         comp_fn(pixels[r * width : min(r + rps, height) * width])
         for r in range(0, height, rps)
     ]
-    n_strips = len(strips)
-    # layout: header(8) | strip data | [strip offset/count arrays] | IFD
-    pos = 8
-    offsets = []
-    for s in strips:
-        offsets.append(pos)
-        pos += len(s)
-    counts = [len(s) for s in strips]
-
-    def arr_or_inline(values: list[int]) -> tuple[int, bytes | None]:
-        """LONG array: inline if count==1, else appended after data."""
-        if len(values) == 1:
-            return values[0], None
-        return -1, struct.pack(f"{e}{len(values)}I", *values)
-
-    extra = b""
-    off_val, off_arr = arr_or_inline(offsets)
-    if off_arr is not None:
-        off_val = pos + len(extra)
-        extra += off_arr
-    cnt_val, cnt_arr = arr_or_inline(counts)
-    if cnt_arr is not None:
-        cnt_val = pos + len(extra)
-        extra += cnt_arr
-    ifd_off = pos + len(extra)
-
-    def entry(tag: int, typ: int, count: int, value: int) -> bytes:
-        # SHORT values inline in the LEADING bytes of the 4-byte value
-        # field in BOTH byte orders (TIFF 6.0 §2): pack the value at
-        # its type width, then pad to 4
-        size = {3: 2, 4: 4}[typ]
-        fmt = {3: "H", 4: "I"}[typ]
-        val = struct.pack(f"{e}{fmt}", value) + b"\x00" * (4 - size)
-        return struct.pack(f"{e}HHI", tag, typ, count) + val
-
-    entries = [
-        entry(256, 3, 1, width),        # ImageWidth SHORT
-        entry(257, 3, 1, height),       # ImageLength
-        entry(258, 3, 1, 8),            # BitsPerSample
-        entry(259, 3, 1, comp_tag),     # Compression
-        entry(262, 3, 1, 1),            # Photometric BlackIsZero
-        entry(273, 4, n_strips, off_val),  # StripOffsets LONG
-        entry(277, 3, 1, 1),            # SamplesPerPixel
-        entry(278, 3, 1, rps),          # RowsPerStrip
-        entry(279, 4, n_strips, cnt_val),  # StripByteCounts
-    ]
-    ifd = struct.pack(f"{e}H", len(entries)) + b"".join(entries) + b"\x00" * 4
-    head = b"II*\x00" if byte_order == "II" else b"MM\x00*"
-    return (
-        head
-        + struct.pack(f"{e}I", ifd_off)
-        + b"".join(strips)
-        + extra
-        + ifd
+    return _tiff_file(
+        byte_order,
+        strips,
+        [(256, width), (257, height), (258, 8), (259, comp_tag), (262, 1),
+         (277, 1), (278, rps)],
+        (273, 279),  # StripOffsets, StripByteCounts
     )
 
 
@@ -355,49 +157,61 @@ def encode_tiff_gray8_tiled(
                 tx * tile_width : tx * tile_width + cols,
             ]
             tiles.append(comp_fn(tile.tobytes()))
-    pos = 8
-    offsets = []
-    for t in tiles:
+    return _tiff_file(
+        byte_order,
+        tiles,
+        [(256, width), (257, height), (258, 8), (259, comp_tag), (262, 1),
+         (277, 1), (322, tile_width), (323, tile_length)],
+        (324, 325),  # TileOffsets, TileByteCounts
+    )
+
+
+def _tiff_file(
+    byte_order: str,
+    segments: list[bytes],
+    shorts: list[tuple[int, int]],
+    offset_tags: tuple[int, int],
+) -> bytes:
+    """Assemble a one-IFD grayscale TIFF: header(8) | segment data |
+    [offset/count LONG arrays] | IFD. `shorts` are (tag, value) SHORT
+    tags; the segments' offsets and byte counts go in the two LONG
+    tags of `offset_tags`, inline when there is one segment."""
+    e = "<" if byte_order == "II" else ">"
+    offsets, pos = [], 8
+    for seg in segments:
         offsets.append(pos)
-        pos += len(t)
-    counts = [len(t) for t in tiles]
+        pos += len(seg)
+    counts = [len(seg) for seg in segments]
     extra = b""
-    if len(offsets) == 1:
+    if len(segments) == 1:
         off_val, cnt_val = offsets[0], counts[0]
     else:
         off_val = pos
         extra += struct.pack(f"{e}{len(offsets)}I", *offsets)
         cnt_val = pos + len(extra)
         extra += struct.pack(f"{e}{len(counts)}I", *counts)
-    ifd_off = pos + len(extra)
 
-    def entry(tag: int, typ: int, count: int, value: int) -> bytes:
-        # inline values occupy the LEADING bytes of the value field
-        # in BOTH byte orders (TIFF 6.0 §2)
-        size = {3: 2, 4: 4}[typ]
-        fmt = {3: "H", 4: "I"}[typ]
-        val = struct.pack(f"{e}{fmt}", value) + b"\x00" * (4 - size)
-        return struct.pack(f"{e}HHI", tag, typ, count) + val
-
-    entries = [
-        entry(256, 3, 1, width),
-        entry(257, 3, 1, height),
-        entry(258, 3, 1, 8),
-        entry(259, 3, 1, comp_tag),
-        entry(262, 3, 1, 1),
-        entry(277, 3, 1, 1),
-        entry(322, 3, 1, tile_width),       # TileWidth
-        entry(323, 3, 1, tile_length),      # TileLength
-        entry(324, 4, len(tiles), off_val),  # TileOffsets
-        entry(325, 4, len(tiles), cnt_val),  # TileByteCounts
+    off_tag, cnt_tag = offset_tags
+    entries = [(tag, 3, 1, value) for tag, value in shorts] + [
+        (off_tag, 4, len(segments), off_val),
+        (cnt_tag, 4, len(segments), cnt_val),
     ]
-    entries.sort(key=lambda b: struct.unpack(f"{e}H", b[:2])[0])
-    ifd = struct.pack(f"{e}H", len(entries)) + b"".join(entries) + b"\x00" * 4
+    ifd = bytearray(struct.pack(f"{e}H", len(entries)))
+    for tag, typ, count, value in sorted(entries):
+        ifd += struct.pack(f"{e}HHI", tag, typ, count)
+        # inline values occupy the LEADING bytes of the 4-byte value
+        # field in BOTH byte orders (TIFF 6.0 §2): pack the value at
+        # its type width, then pad to 4
+        if typ == 3:
+            ifd += struct.pack(f"{e}H", value) + b"\x00\x00"
+        else:
+            ifd += struct.pack(f"{e}I", value)
+    ifd += b"\x00" * 4
     head = b"II*\x00" if byte_order == "II" else b"MM\x00*"
     return (
         head
-        + struct.pack(f"{e}I", ifd_off)
-        + b"".join(tiles)
+        + struct.pack(f"{e}I", pos + len(extra))
+        + b"".join(segments)
         + extra
         + ifd
     )
@@ -410,9 +224,11 @@ def _decode_segment(raw: bytes, comp: int, n_expected: int) -> bytes:
             raise ValueError("segment shorter than its pixel area")
         return raw[:n_expected]
     if comp == 32773:
-        return _packbits_decode(raw, n_expected)
+        return packbits_decode(raw, n_expected)
     if comp == 5:
-        return _tlzw_decode(raw, n_expected)
+        return lzw_decode(
+            raw, 8, msb=True, early_change=True, n_expected=n_expected
+        )
     raise NotImplementedError(f"TIFF compression {comp}")
 
 

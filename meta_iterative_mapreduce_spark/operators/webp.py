@@ -50,6 +50,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from meta_iterative_mapreduce_spark.io import load_table
+from meta_iterative_mapreduce_spark.operators.codecs import canonical_codes
 from meta_iterative_mapreduce_spark.registry import register
 
 # ---------------------------------------------------------------------------
@@ -184,25 +185,6 @@ def limited_code_lengths(freqs: list[int], limit: int) -> list[int]:
     return lengths
 
 
-def _canonical_codes(lengths: list[int]) -> list[int]:
-    max_len = max(lengths)
-    bl_count = [0] * (max_len + 1)
-    for l in lengths:
-        if l:
-            bl_count[l] += 1
-    next_code = [0] * (max_len + 2)
-    code = 0
-    for b in range(1, max_len + 1):
-        code = (code + bl_count[b - 1]) << 1
-        next_code[b] = code
-    codes = [0] * len(lengths)
-    for sym, l in enumerate(lengths):
-        if l:
-            codes[sym] = next_code[l]
-            next_code[l] += 1
-    return codes
-
-
 class _DecTable:
     """Flat decode table: index by the next `max_len` stream bits
     (bit-reversed prefix), yielding (symbol, code_length) in one
@@ -218,7 +200,7 @@ class _DecTable:
             self.max_len, self.table, self.const = 0, None, used[0][1]
             return
         self.const = None
-        codes = _canonical_codes(lengths)
+        codes = canonical_codes(lengths)
         self.max_len = max(l for l, _ in used)
         size = 1 << self.max_len
         table: list[tuple[int, int] | None] = [None] * size
@@ -253,7 +235,7 @@ class _EncCode:
         used = [s for s, l in enumerate(lengths) if l]
         self.lengths = lengths
         self.is_const = len(used) == 1
-        codes = _canonical_codes(lengths) if not self.is_const else None
+        codes = canonical_codes(lengths) if not self.is_const else None
         self.rev = (
             None
             if self.is_const

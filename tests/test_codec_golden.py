@@ -16,6 +16,7 @@ import numpy as np
 import pytest
 
 from meta_iterative_mapreduce_spark.operators import (
+    codecs,
     gif,
     multimodal,
     pdf,
@@ -40,7 +41,9 @@ def _gray(w: int, h: int, seed: int) -> bytes:
 
 
 def _gif_lzw(data: bytes, min_code_size: int) -> bytes:
-    return gif._lzw_encode(np.frombuffer(data, np.uint8), min_code_size)
+    return codecs.lzw_encode(
+        data, min_code_size, msb=False, early_change=False
+    )
 
 
 def _pages(seed: int, n_pages: int) -> list[str]:

@@ -6,18 +6,21 @@ from __future__ import annotations
 
 import struct
 
-import numpy as np
 import pytest
 
+from meta_iterative_mapreduce_spark.operators.codecs import (
+    lzw_decode,
+    lzw_encode,
+)
 from meta_iterative_mapreduce_spark.operators.gif import (
-    _lzw_decode,
-    _lzw_encode,
     decode_gif_gray8,
     encode_gif_gray8,
 )
 from meta_iterative_mapreduce_spark.operators.multimodal import (
     decode_image_features,
 )
+
+GIF_LZW = {"msb": False, "early_change": False}
 
 
 def test_lzw_round_trip_shapes():
@@ -32,18 +35,18 @@ def test_lzw_round_trip_shapes():
                 data = (b"abcabcd" * (n // 7 + 1))[:n]
             else:
                 data = b"\x42" * n
-            enc = _lzw_encode(np.frombuffer(data, np.uint8), 8)
-            assert _lzw_decode(enc, 8, n) == data
+            enc = lzw_encode(data, 8, **GIF_LZW)
+            assert lzw_decode(enc, 8, **GIF_LZW, n_expected=n) == data
 
 
 def test_lzw_kwkwk_case():
     # 'aaaa...' forces code == next free code immediately (KwKwK)
     data = b"\x01" * 50
-    enc = _lzw_encode(np.frombuffer(data, np.uint8), 2)
-    assert _lzw_decode(enc, 2, 50) == data
+    enc = lzw_encode(data, 2, **GIF_LZW)
+    assert lzw_decode(enc, 2, **GIF_LZW, n_expected=50) == data
     # indices beyond the root table must be rejected, not mis-encoded
     with pytest.raises(ValueError, match="roots"):
-        _lzw_encode(np.frombuffer(b"\x05", np.uint8), 2)
+        lzw_encode(b"\x05", 2, **GIF_LZW)
 
 
 def test_lzw_dictionary_reset_at_4096():

@@ -502,10 +502,11 @@ def test_png_adam7_truncated_pass_detected():
 
 
 def test_jpeg_entropy_vectorized():
-    """The r15 vectorized entropy coder (symbol streams + one numpy
+    """The vectorized entropy coder (symbol streams + one numpy
     bit-packing pass) must be byte-identical to the scalar
-    _BitWriter/_entropy_encode_block path it replaced, and the
-    frame-stack batch encoder to the per-frame encoder."""
+    _BitWriter/_entropy_encode_block reference — per frame, per
+    restart segment (DC predictors reset, RSTn joins), and across a
+    frame stack."""
     import numpy as np
 
     from meta_iterative_mapreduce_spark.operators import multimodal as M
@@ -527,15 +528,57 @@ def test_jpeg_entropy_vectorized():
                 )
         scalar = bw.flush()
         flat = zz.reshape(-1, 64)
-        vec = M._pack_entropy(
+        nb = flat.shape[0]
+        vec = M._pack_entropy_batch(
             [
                 M._component_symbols(
-                    flat, M._LUMA_TABS,
-                    np.arange(flat.shape[0], dtype=np.int64),
+                    flat, M._LUMA_TABS, np.arange(nb, dtype=np.int64),
                 )
-            ]
-        )
+            ],
+            nb,
+            1,
+        )[0]
         assert vec == scalar
+    # restart intervals: the scalar MCU loop with RSTn markers
+    for w, h, ri in [(1, 1, 1), (33, 37, 1), (17, 19, 3), (64, 48, 5),
+                     (40, 40, 4), (9, 30, 100)]:
+        rgb = rng.randint(0, 256, (h, w, 3), dtype=np.uint8)
+        img = rgb.astype(np.float64)
+        r, g, b = img[..., 0], img[..., 1], img[..., 2]
+        y = 0.299 * r + 0.587 * g + 0.114 * b
+        cb = -0.168736 * r - 0.331264 * g + 0.5 * b + 128.0
+        cr = 0.5 * r - 0.418688 * g - 0.081312 * b + 128.0
+        H16, W16 = -(-h // 16) * 16, -(-w // 16) * 16
+        pad = ((0, H16 - h), (0, W16 - w))
+        yzz = M._quantized_zigzag_blocks(np.pad(y, pad, mode="edge") - 128.0, M.QTAB)
+        cbzz = M._quantized_zigzag_blocks(
+            M._box2x2(np.pad(cb, pad, mode="edge")) - 128.0, M.CQTAB
+        )
+        crzz = M._quantized_zigzag_blocks(
+            M._box2x2(np.pad(cr, pad, mode="edge")) - 128.0, M.CQTAB
+        )
+        bw = M._BitWriter()
+        prev = [0, 0, 0]
+        mcu_i = 0
+        for my in range(H16 // 16):
+            for mx in range(W16 // 16):
+                if mcu_i and mcu_i % ri == 0:
+                    bw.restart_marker(mcu_i // ri - 1)
+                    prev = [0, 0, 0]
+                mcu_i += 1
+                for dy, dx in ((0, 0), (0, 1), (1, 0), (1, 1)):
+                    prev[0] = M._entropy_encode_block(
+                        bw, yzz[2 * my + dy, 2 * mx + dx], prev[0],
+                        M.DC_ENC, M.AC_ENC,
+                    )
+                prev[1] = M._entropy_encode_block(
+                    bw, cbzz[my, mx], prev[1], M.CDC_ENC, M.CAC_ENC
+                )
+                prev[2] = M._entropy_encode_block(
+                    bw, crzz[my, mx], prev[2], M.CDC_ENC, M.CAC_ENC
+                )
+        scalar = M._jfif_color_header(w, h, ri) + bw.flush() + b"\xFF\xD9"
+        assert M.encode_jpeg_color(w, h, rgb.tobytes(), ri) == scalar, (w, h, ri)
     stack = rng.randint(0, 256, size=(7, 19, 11, 3), dtype=np.uint8)
     assert M.encode_jpeg_color_batch(11, 19, stack) == [
         M.encode_jpeg_color(11, 19, f.tobytes()) for f in stack
@@ -543,3 +586,30 @@ def test_jpeg_entropy_vectorized():
     # and the decoder round-trips the vectorized stream exactly
     d = M.decode_jpeg_color(M.encode_jpeg_color_batch(11, 19, stack)[3])
     assert (d["width"], d["height"]) == (11, 19)
+
+
+def test_jpeg_single_component_scan_is_non_interleaved():
+    """A one-component scan has one block per MCU (ITU T.81 A.2.2)
+    whatever its SOF sampling factors: declaring 2x2 sampling on a
+    gray stream must not change the decoded pixels, in either
+    decoder."""
+    import numpy as np
+
+    from meta_iterative_mapreduce_spark.operators.multimodal import (
+        decode_jpeg_color,
+        decode_jpeg_gray,
+        encode_jpeg_gray,
+    )
+
+    rng = np.random.RandomState(4)
+    pix = rng.randint(0, 256, (21, 35), dtype=np.uint8)
+    stream = encode_jpeg_gray(35, 21, pix.tobytes())
+    sof = stream.index(b"\xff\xc0")
+    # SOF0: marker, length(2), precision, height(2), width(2), Nf,
+    # then component id and the sampling-factor byte
+    samp = sof + 2 + 2 + 1 + 4 + 1 + 1
+    assert stream[samp] == 0x11
+    resampled = stream[:samp] + b"\x22" + stream[samp + 1 :]
+    want = decode_jpeg_gray(stream)["pixels"]
+    assert (decode_jpeg_gray(resampled)["pixels"] == want).all()
+    assert (decode_jpeg_color(resampled)["pixels"][..., 0] == want).all()

@@ -157,10 +157,15 @@ def test_extract_pdf_pages_returns_one_entry_per_stream():
 
 # --- PDF 1.5 xref streams / ObjStm / incremental updates ------------
 
+from meta_iterative_mapreduce_spark.operators.codecs import (  # noqa: E402
+    lzw_decode,
+    lzw_encode,
+    packbits_decode,
+    png_filter,
+)
 from meta_iterative_mapreduce_spark.operators.pdf import (  # noqa: E402
-    _apply_png_up_predictor,
+    _decode_stream,
     _parse_xref_chain,
-    _undo_png_predictor,
     encode_pdf_incremental,
     encode_pdf_xref_stream,
 )
@@ -223,14 +228,24 @@ def test_incremental_round_trip_property(text):
     assert _rt(encode_pdf_incremental, text) == text
 
 
-def test_png_predictor_all_filters():
-    import zlib as _z  # noqa: F401
+def _unpredict(data: bytes, cols: int) -> bytes:
+    """Undo /Predictor 12 through the stream-filter chain."""
+    import zlib as _z
 
+    d = (
+        b"/Filter /FlateDecode /DecodeParms << /Predictor 12 /Columns "
+        + str(cols).encode()
+        + b" >>"
+    )
+    return _decode_stream(d, _z.compress(data))
+
+
+def test_png_predictor_all_filters():
     cols = 5
     rows = [bytes([(r * 7 + c * 13) % 256 for c in range(cols)]) for r in range(6)]
     flat = b"".join(rows)
     # Up-filter encode (what the writer emits) must invert exactly
-    assert _undo_png_predictor(_apply_png_up_predictor(rows), cols) == flat
+    assert _unpredict(png_filter(flat, cols, len(rows), 2), cols) == flat
     # hand-encode one row per filter type and invert
     prev = bytes(cols)
     enc = bytearray()
@@ -257,11 +272,11 @@ def test_png_predictor_all_filters():
                 out[i] = (out[i] - pr) & 0xFF
         enc += bytes([ft]) + out
         prev = row
-    assert _undo_png_predictor(bytes(enc), cols) == flat
+    assert _unpredict(bytes(enc), cols) == flat
     with pytest.raises(ValueError, match="filter"):
-        _undo_png_predictor(bytes([9]) + bytes(cols), cols)
+        _unpredict(bytes([9]) + bytes(cols), cols)
     with pytest.raises(ValueError, match="whole rows"):
-        _undo_png_predictor(b"\x00\x01", cols)
+        _unpredict(b"\x00\x01", cols)
 
 
 def test_xref_chain_maps_compressed_and_toplevel_objects():
@@ -336,8 +351,6 @@ from meta_iterative_mapreduce_spark.operators.pdf import (  # noqa: E402
     _ascii85_decode,
     _ascii85_encode,
     _asciihex_decode,
-    _pdf_lzw_decode,
-    _rle_decode,
     _rle_encode,
     encode_pdf_filter_chain,
 )
@@ -359,15 +372,14 @@ def test_ascii85_round_trip_property(blob):
 @given(st.binary(max_size=600))
 @settings(max_examples=80, deadline=None)
 def test_runlength_round_trip_property(blob):
-    assert _rle_decode(_rle_encode(blob)) == blob
+    assert packbits_decode(_rle_encode(blob)) == blob
 
 
 @given(st.binary(max_size=600))
 @settings(max_examples=40, deadline=None)
 def test_pdf_lzw_round_trip_property(blob):
-    from meta_iterative_mapreduce_spark.operators.tiff import _tlzw_encode
-
-    assert _pdf_lzw_decode(_tlzw_encode(blob)) == blob
+    pdf_lzw = {"msb": True, "early_change": True}
+    assert lzw_decode(lzw_encode(blob, 8, **pdf_lzw), 8, **pdf_lzw) == blob
 
 
 def test_filter_codec_edges_and_guards():
@@ -387,11 +399,11 @@ def test_filter_codec_edges_and_guards():
         _asciihex_decode(b"4G>")
     # RunLength: truncations and missing EOD are loud
     with pytest.raises(ValueError, match="EOD"):
-        _rle_decode(b"\x02abc")
+        packbits_decode(b"\x02abc")
     with pytest.raises(ValueError, match="truncated"):
-        _rle_decode(b"\x05ab")
+        packbits_decode(b"\x05ab")
     with pytest.raises(ValueError, match="truncated"):
-        _rle_decode(b"\xfe")
+        packbits_decode(b"\xfe")
     # unsupported filter stays an honest guard
     import zlib as _z
 

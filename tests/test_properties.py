@@ -220,17 +220,16 @@ def test_gif_lzw_round_trip_property(data, mcs):
     whose symbols fit the root table — hypothesis hunts the
     boundary cases (width growth points, KwKwK runs, table reset)
     that example tests enumerate by hand."""
-    import numpy as np
-
-    from meta_iterative_mapreduce_spark.operators.gif import (
-        _lzw_decode,
-        _lzw_encode,
+    from meta_iterative_mapreduce_spark.operators.codecs import (
+        lzw_decode,
+        lzw_encode,
     )
 
     if mcs < 8:
         data = bytes(b % (1 << mcs) for b in data)
-    enc = _lzw_encode(np.frombuffer(data, np.uint8), mcs)
-    assert _lzw_decode(enc, mcs, len(data)) == data
+    gif = {"msb": False, "early_change": False}
+    enc = lzw_encode(data, mcs, **gif)
+    assert lzw_decode(enc, mcs, **gif, n_expected=len(data)) == data
 
 
 @given(

@@ -10,32 +10,38 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from meta_iterative_mapreduce_spark.operators.codecs import (
+    lzw_decode,
+    lzw_encode,
+    packbits_decode,
+)
 from meta_iterative_mapreduce_spark.operators.tiff import (
-    _packbits_decode,
     _packbits_encode,
-    _tlzw_decode,
-    _tlzw_encode,
     decode_tiff_gray8,
     encode_tiff_gray8,
 )
+
+TIFF_LZW = {"msb": True, "early_change": True}
 
 
 @given(data=st.binary(min_size=0, max_size=3000))
 @settings(max_examples=120, deadline=None)
 def test_tiff_lzw_round_trip_property(data):
-    assert _tlzw_decode(_tlzw_encode(data), len(data)) == data
+    enc = lzw_encode(data, 8, **TIFF_LZW)
+    assert lzw_decode(enc, 8, **TIFF_LZW, n_expected=len(data)) == data
 
 
 @given(data=st.binary(min_size=0, max_size=3000))
 @settings(max_examples=120, deadline=None)
 def test_packbits_round_trip_property(data):
-    assert _packbits_decode(_packbits_encode(data), len(data)) == data
+    assert packbits_decode(_packbits_encode(data), len(data)) == data
 
 
 def test_lzw_earlychange_boundary():
     # enough distinct material to cross the 511/1023 width boundaries
     data = bytes((i * 7) % 256 for i in range(4000))
-    assert _tlzw_decode(_tlzw_encode(data), len(data)) == data
+    enc = lzw_encode(data, 8, **TIFF_LZW)
+    assert lzw_decode(enc, 8, **TIFF_LZW, n_expected=len(data)) == data
 
 
 def test_container_round_trip_all_compressions():
