@@ -221,7 +221,7 @@ def packbits_decode(data: bytes, n_expected: int | None = None) -> bytes:
     return bytes(out)
 
 
-def paeth(a: int, b: int, c: int) -> int:
+def _paeth(a: int, b: int, c: int) -> int:
     """PNG Paeth predictor (RFC 2083 §6.6)."""
     p = a + b - c
     pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
@@ -252,7 +252,7 @@ def png_filter(pix: bytes, width: int, height: int, filter_type: int) -> bytes:
             )
         elif filter_type == 4:  # Paeth
             enc = bytes(
-                (line[i] - paeth(line[i - 1] if i else 0, prev[i], prev[i - 1] if i else 0))
+                (line[i] - _paeth(line[i - 1] if i else 0, prev[i], prev[i - 1] if i else 0))
                 & 0xFF
                 for i in range(width)
             )
@@ -287,7 +287,7 @@ def png_unfilter(raw: bytes, width: int, height: int) -> bytes:
             for i in range(width):
                 left = line[i - 1] if i else 0
                 ul = prev[i - 1] if i else 0
-                line[i] = (line[i] + paeth(left, prev[i], ul)) & 0xFF
+                line[i] = (line[i] + _paeth(left, prev[i], ul)) & 0xFF
         elif ft != 0:
             raise ValueError(f"unknown scanline filter {ft}")
         prev = bytes(line)

@@ -19,6 +19,7 @@ DataFrame loop otherwise grows an unbounded plan tree.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -719,14 +720,15 @@ def link_predict_pairs(
     with >= 2 common neighbors through centers of degree <= center_cap,
     scored in integer basis points.
 
-    Cache ownership (ADVICE r14): the returned (lazy) DataFrame reads
-    the persisted `edges`/`nbrs` tables, so this function cannot
-    unpersist them — CALLERS own cache release once the result is
-    materialized (`spark.catalog.clearCache()` or unpersisting via
-    their own references); bench.py clears caches between queries."""
+    Cache ownership: the result is materialized with an eager
+    localCheckpoint, then the `edges`/`nbrs` tables this function
+    persisted are released before it returns (the dedup queries'
+    shape), so nothing stays cached in a long-lived session."""
     # edges feeds the neighbor aggregate AND the adjacency anti-join;
     # unpersisted, the whole upstream pair pipeline recomputes per leg
-    # (same rationale as q_graph_triangles' persisted `pairs`).
+    # (same rationale as q_graph_triangles' persisted `pairs`). A
+    # caller's own cache of `edges` is left alone.
+    owns_edges = edges.storageLevel == StorageLevel.NONE
     edges = edges.persist()
     # Wedges through each non-hub center are emitted INLINE from the
     # center's sorted neighbor array (C(d, 2) combinations via
@@ -741,6 +743,21 @@ def link_predict_pairs(
     nbrs = edges.groupBy("u").agg(
         F.sort_array(F.collect_list("v")).alias("vs")
     ).persist()
+    try:
+        return _link_predict_plan(edges, nbrs, center_cap).localCheckpoint(
+            eager=True
+        )
+    finally:
+        nbrs.unpersist()
+        if owns_edges:
+            edges.unpersist()
+
+
+def _link_predict_plan(
+    edges: DataFrame, nbrs: DataFrame, center_cap: int
+) -> DataFrame:
+    """The lazy scored-pair plan of link_predict_pairs over its
+    persisted edge and neighbor-list tables."""
     deg = nbrs.select("u", F.size("vs").alias("d"))
     per_center = nbrs.filter(F.size("vs") <= center_cap)
     wedge = (

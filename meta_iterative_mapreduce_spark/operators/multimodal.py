@@ -1357,6 +1357,10 @@ CAC_ENC = _huff_codes(CAC_BITS, CAC_VALS)
 
 
 class _BitWriter:
+    """Scalar JPEG bit writer: with _entropy_encode_block, the per-symbol
+    reference the vectorized coder is A/B-tested against. No library
+    path writes through it."""
+
     def __init__(self):
         self.buf = bytearray()
         self.acc = 0
@@ -1513,53 +1517,48 @@ def _pack_entropy_batch(streams, n_slots, n_frames):
     """Pack JPEG entropy symbols into n_frames byte-aligned segments.
     A segment is a whole frame of a same-geometry stack, or one
     restart interval of it (global slot = segment * n_slots +
-    in-segment slot). One lexsort orders every symbol; the bits go
-    into a single buffer with each segment padded to a byte with the
-    1s a JPEG flush emits, are packed and byte-stuffed once, and are
-    split at stuffing-adjusted segment offsets. Returns n_frames
-    entropy byte strings — one numpy pass for every frame of a video
-    payload instead of a Python call per symbol."""
-    codes = np.concatenate([s[0] for s in streams])
+    in-segment slot). Each segment gets one more symbol: the 1-bits a
+    JPEG flush pads it to a whole byte with, keyed after its last
+    symbol. One lexsort then orders everything into a single
+    contiguous bit stream, packed and byte-stuffed once and split at
+    stuffing-adjusted segment offsets. Returns n_frames entropy byte
+    strings — one numpy pass for every frame of a video payload
+    instead of a Python call per symbol."""
+    i64 = np.int64
     lens = np.concatenate([s[1] for s in streams])
     kslot = np.concatenate([s[2] for s in streams])
-    kpos = np.concatenate([s[3] for s in streams])
-    ksub = np.concatenate([s[4] for s in streams])
+    seg_bits = np.bincount(
+        kslot // n_slots, weights=lens, minlength=n_frames
+    ).astype(i64)
+    pad = -seg_bits % 8
+    seg = np.arange(n_frames, dtype=i64)
+    codes = np.concatenate([s[0] for s in streams] + [(i64(1) << pad) - 1])
+    lens = np.concatenate([lens, pad])
+    kslot = np.concatenate([kslot, seg * n_slots + n_slots - 1])
+    kpos = np.concatenate([s[3] for s in streams] + [np.full(n_frames, 64, i64)])
+    ksub = np.concatenate([s[4] for s in streams] + [np.zeros(n_frames, i64)])
     order = np.lexsort((ksub, kpos, kslot))
-    codes, lens, kslot = codes[order], lens[order], kslot[order]
-    frame = kslot // n_slots
-    tbits = np.bincount(frame, weights=lens, minlength=n_frames).astype(
-        np.int64
-    )
-    pbytes = (tbits + 7) // 8
-    pbits = pbytes * 8
-    base = np.concatenate(([np.int64(0)], np.cumsum(pbits)[:-1]))
-    byte_off = np.concatenate(([np.int64(0)], np.cumsum(pbytes)))
-    ends = np.cumsum(lens)
-    starts = ends - lens
-    first_idx = np.searchsorted(frame, np.arange(n_frames), side="left")
-    frame_start_bits = starts[first_idx]
-    within = starts - frame_start_bits[frame]
-    gstart = base[frame] + within
-    total_padded = int(pbits.sum())
-    buf = np.ones(total_padded, np.uint8)
+    codes, lens = codes[order], lens[order]
+    starts = np.cumsum(lens) - lens
     sym_of_bit = np.repeat(np.arange(len(lens)), lens)
-    seq = np.arange(int(lens.sum()), dtype=np.int64) - np.repeat(
-        starts, lens
+    bitpos = np.arange(int(lens.sum()), dtype=i64) - starts[sym_of_bit]
+    by = np.packbits(
+        ((codes[sym_of_bit] >> (lens[sym_of_bit] - 1 - bitpos)) & 1).astype(
+            np.uint8
+        )
     )
-    pos = np.repeat(gstart, lens) + seq
-    buf[pos] = (
-        (codes[sym_of_bit] >> (lens[sym_of_bit] - 1 - seq)) & 1
-    ).astype(np.uint8)
-    by = np.packbits(buf)
+    byte_off = np.concatenate(([i64(0)], np.cumsum((seg_bits + pad) // 8)))
     ff = np.nonzero(by == 0xFF)[0]
     if len(ff):
         by = np.insert(by, ff + 1, np.uint8(0))
         byte_off = byte_off + np.searchsorted(ff, byte_off, side="left")
     raw = by.tobytes()
-    return [
-        raw[byte_off[f]: byte_off[f + 1]] for f in range(n_frames)
-    ]
+    return [raw[byte_off[f]: byte_off[f + 1]] for f in range(n_frames)]
 
+
+# DQT payloads: the quant tables in zigzag order
+_QZ_LUMA = QTAB.ravel()[ZIGZAG].astype(np.uint8).tobytes()
+_QZ_CHROMA = CQTAB.ravel()[ZIGZAG].astype(np.uint8).tobytes()
 
 # Huffman lookup arrays for the vectorized entropy coder
 # (value -> code/len), one pair per table: luma DC(12)/AC(256) and
@@ -1591,7 +1590,8 @@ def _quantized_zigzag_blocks(plane, qtab):
 
 def _entropy_encode_block(bw, zz, prev_dc, dc_enc, ac_enc):
     """Huffman-encode one quantized zigzag vector (DC diff + AC
-    run-length); returns the block's DC."""
+    run-length) through a _BitWriter; returns the block's DC. The
+    scalar reference for tests only."""
     dc, diff = int(zz[0]), int(zz[0]) - prev_dc
     s = _category(diff)
     c, l = dc_enc[s]
@@ -1636,10 +1636,9 @@ def encode_jpeg_gray(w, h, pix):
     def seg(marker, payload):
         return struct.pack(">HH", marker, len(payload) + 2) + payload
 
-    qz = bytes(int(QTAB.ravel()[ZIGZAG][i]) for i in range(64))
     out = b"\xFF\xD8"  # SOI
     out += seg(0xFFE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    out += seg(0xFFDB, b"\x00" + qz)
+    out += seg(0xFFDB, b"\x00" + _QZ_LUMA)
     out += seg(0xFFC0, struct.pack(">BHHB", 8, h, w, 1) + b"\x01\x11\x00")
     out += seg(0xFFC4, b"\x00" + bytes(DC_BITS) + bytes(DC_VALS))
     out += seg(0xFFC4, b"\x10" + bytes(AC_BITS) + bytes(AC_VALS))
@@ -1675,11 +1674,9 @@ def _jfif_color_header(w, h, restart_interval=0):
     def seg(marker, payload):
         return struct.pack(">HH", marker, len(payload) + 2) + payload
 
-    qz0 = bytes(int(QTAB.ravel()[ZIGZAG][i]) for i in range(64))
-    qz1 = bytes(int(CQTAB.ravel()[ZIGZAG][i]) for i in range(64))
     out = b"\xFF\xD8"
     out += seg(0xFFE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    out += seg(0xFFDB, b"\x00" + qz0 + b"\x01" + qz1)
+    out += seg(0xFFDB, b"\x00" + _QZ_LUMA + b"\x01" + _QZ_CHROMA)
     out += seg(
         0xFFC0,
         struct.pack(">BHHB", 8, h, w, 3)

@@ -39,6 +39,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from meta_iterative_mapreduce_spark.io import fixture_fingerprint, load_table
+from meta_iterative_mapreduce_spark.operators.sketches import (
+    KLL_FOLD_SQL,
+    kll_rank_counts,
+    kll_rank_flags,
+)
 from meta_iterative_mapreduce_spark.registry import register
 from meta_iterative_mapreduce_spark.sources import versioned
 
@@ -229,13 +234,7 @@ def q_sketch_kll_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     glob = parts.agg(
         F.collect_list("sk").alias("sks"),
         F.sum("n_batch_rows").alias("n_rows"),
-    ).select(
-        F.expr(
-            "aggregate(slice(sks, 2, size(sks) - 1), sks[0],"
-            " (a, x) -> kll_sketch_merge_double(a, x))"
-        ).alias("sk"),
-        "n_rows",
-    )
+    ).select(F.expr(KLL_FOLD_SQL).alias("sk"), "n_rows")
     ests = glob.select(
         "n_rows",
         F.kll_sketch_get_quantile_double("sk", F.lit(0.5)).alias("e50"),
@@ -250,26 +249,12 @@ def q_sketch_kll_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "events")
         .crossJoin(F.broadcast(ests))
         .agg(
-            F.max("n_rows").alias("n_rows"),
+            # the manifests' count; 0, not NULL, when no row joins
+            F.coalesce(F.max("n_rows"), F.lit(0)).alias("n_rows"),
             F.count(F.lit(1)).alias("n_cnt"),
-            F.sum(F.when(v < F.col("e50"), 1).otherwise(0)).alias("lt50"),
-            F.sum(F.when(v <= F.col("e50"), 1).otherwise(0)).alias("le50"),
-            F.sum(F.when(v < F.col("e99"), 1).otherwise(0)).alias("lt99"),
-            F.sum(F.when(v <= F.col("e99"), 1).otherwise(0)).alias("le99"),
+            *kll_rank_counts(v),
         )
     )
     return counts.select(
-        F.lit("ALL").alias("scope"),
-        "n_rows",
-        (
-            (F.col("le50") * 5 >= F.col("n_cnt") * 2)
-            & (F.col("lt50") * 5 <= F.col("n_cnt") * 3)
-        ).alias("median_ok"),
-        (
-            (F.col("le99") * 100 >= F.col("n_cnt") * 97)
-            & (
-                (F.col("lt99") < F.col("n_cnt"))
-                | (F.col("n_cnt") == 0)  # vacuous truth on empty input
-            )
-        ).alias("p99_ok"),
+        F.lit("ALL").alias("scope"), "n_rows", *kll_rank_flags("n_cnt")
     )

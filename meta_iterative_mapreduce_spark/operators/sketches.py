@@ -242,6 +242,46 @@ def q_sketch_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     return per_out.unionAll(glob_out)
 
 
+# Fold of the KLL partials in array column `sks` into one sketch.
+# kll_sketch_merge is binary, so the global sketch is an aggregate over
+# the partial list; an empty list (empty input) gives a NULL sketch
+# instead of failing on sks[0].
+KLL_FOLD_SQL = (
+    "CASE WHEN size(sks) > 0 THEN aggregate(slice(sks, 2, size(sks) - 1),"
+    " sks[0], (a, x) -> kll_sketch_merge_double(a, x)) END"
+)
+
+
+def kll_rank_counts(v: F.Column) -> list[F.Column]:
+    """Counts of values <, <= the sketch estimates e50 and e99 — 0, not
+    NULL, over zero rows, so empty inputs certify TRUE."""
+    return [
+        F.coalesce(F.sum(F.when(cmp, 1).otherwise(0)), F.lit(0)).alias(name)
+        for name, cmp in (
+            ("lt50", v < F.col("e50")),
+            ("le50", v <= F.col("e50")),
+            ("lt99", v < F.col("e99")),
+            ("le99", v <= F.col("e99")),
+        )
+    ]
+
+
+def kll_rank_flags(n: str) -> list[F.Column]:
+    """median_ok / p99_ok from kll_rank_counts against `n` rows: the
+    median estimate's rank lies in [0.40n, 0.60n], the p99 estimate's
+    rank is >= 0.97n and it is <= the maximum (vacuously TRUE at n=0)."""
+    return [
+        (
+            (F.col("le50") * 5 >= F.col(n) * 2)
+            & (F.col("lt50") * 5 <= F.col(n) * 3)
+        ).alias("median_ok"),
+        (
+            (F.col("le99") * 100 >= F.col(n) * 97)
+            & ((F.col("lt99") < F.col(n)) | (F.col(n) == 0))
+        ).alias("p99_ok"),
+    ]
+
+
 @register(
     "q_sketch_kll",
     oracle="""
@@ -287,10 +327,7 @@ def q_sketch_kll(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the global sketch is a fold over the per-group partials — the
     # partial list is group-count-sized (3 flags), never data-sized.
     glob = per.agg(F.collect_list("sk").alias("sks")).select(
-        F.expr(
-            "aggregate(slice(sks, 2, size(sks) - 1), sks[0],"
-            " (a, x) -> kll_sketch_merge_double(a, x))"
-        ).alias("sk")
+        F.expr(KLL_FOLD_SQL).alias("sk")
     )
     ests = glob.select(
         F.kll_sketch_get_quantile_double("sk", F.lit(0.5)).alias("e50"),
@@ -299,25 +336,10 @@ def q_sketch_kll(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = F.col("l_extendedprice")
     counts = li.crossJoin(F.broadcast(ests)).agg(
         F.count(F.lit(1)).alias("n_rows"),
-        F.sum(F.when(p < F.col("e50"), 1).otherwise(0)).alias("lt50"),
-        F.sum(F.when(p <= F.col("e50"), 1).otherwise(0)).alias("le50"),
-        F.sum(F.when(p < F.col("e99"), 1).otherwise(0)).alias("lt99"),
-        F.sum(F.when(p <= F.col("e99"), 1).otherwise(0)).alias("le99"),
+        *kll_rank_counts(p),
     )
     return counts.select(
-        F.lit("ALL").alias("scope"),
-        "n_rows",
-        (
-            (F.col("le50") * 5 >= F.col("n_rows") * 2)
-            & (F.col("lt50") * 5 <= F.col("n_rows") * 3)
-        ).alias("median_ok"),
-        (
-            (F.col("le99") * 100 >= F.col("n_rows") * 97)
-            & (
-                (F.col("lt99") < F.col("n_rows"))
-                | (F.col("n_rows") == 0)  # vacuous truth on empty input
-            )
-        ).alias("p99_ok"),
+        F.lit("ALL").alias("scope"), "n_rows", *kll_rank_flags("n_rows")
     )
 
 

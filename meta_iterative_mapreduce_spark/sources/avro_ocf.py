@@ -1265,17 +1265,21 @@ def register_avro_source(spark: SparkSession) -> None:
             # Python data source API accepts RecordBatches directly.
             import pyarrow as pa
 
-            rows = list(recs)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(
-                        [r[n] for r in rows], type=pa.type_for_alias(t)
-                    )
-                    for n, t in zip(names, pa_types)
-                ],
-                names=names,
+            from meta_iterative_mapreduce_spark.sources.arrow_batch import (
+                checked_batch,
             )
-            return
+
+            recs = list(recs)
+            batch = checked_batch(
+                [[r[n] for r in recs] for n in names],
+                [pa.type_for_alias(t) for t in pa_types],
+                names,
+            )
+            if batch is not None:
+                yield batch
+                return
+            # a decoded value that does not convert exactly to its
+            # declared type: per-record tuples, converted per value
         for rec in recs:
             yield tuple(rec[n] for n in names)
 

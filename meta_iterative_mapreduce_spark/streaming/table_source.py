@@ -401,6 +401,10 @@ def _read_cdc_spec(spec: dict):
         if arrow_ok:
             import pyarrow as pa
 
+            from meta_iterative_mapreduce_spark.sources.arrow_batch import (
+                CAST_ERRORS,
+            )
+
             others = [i for i in range(len(fields)) if i != ki]
             names = (
                 [key, "op"]
@@ -426,9 +430,9 @@ def _read_cdc_spec(spec: dict):
                     out_batches.append(
                         pa.RecordBatch.from_arrays(cols, names=names)
                     )
-            except pa.lib.ArrowInvalid:
-                # physical/declared type mismatch (ADVICE r14): route
-                # this file through the row path's per-value coercion
+            except CAST_ERRORS:
+                # physical/declared type mismatch: route this file
+                # through the row path's per-value conversion
                 pass
             else:
                 yield from out_batches
@@ -518,6 +522,10 @@ def _read_cdc_spec(spec: dict):
         return
     import pyarrow as pa
 
+    from meta_iterative_mapreduce_spark.sources.arrow_batch import (
+        checked_batch,
+    )
+
     rows = list(_diff_rows())
     key_t = pa.type_for_alias(_PA_OF_TYPE[fields[ki][2]])
     col_ts = [key_t, pa.string()] + [
@@ -528,19 +536,13 @@ def _read_cdc_spec(spec: dict):
         + [f"old_{fields[i][0]}" for i in others]
         + [f"new_{fields[i][0]}" for i in others]
     )
-    try:
-        batch = pa.RecordBatch.from_arrays(
-            [
-                pa.array([r[c] for r in rows], type=t)
-                for c, t in enumerate(col_ts)
-            ],
-            names=names,
-        )
-    except pa.lib.ArrowInvalid:
-        # a schema-evolved file fed _file_rows values whose physical
-        # type defeats the declared-type array build (ADVICE r14
-        # class): fall back to the pickled-tuple path, whose per-value
-        # coercion is the documented behavior
+    batch = checked_batch(
+        [[r[c] for r in rows] for c in range(len(col_ts))], col_ts, names
+    )
+    if batch is None:
+        # a schema-evolved file fed _file_rows values that do not
+        # convert exactly to the declared types: the pickled-tuple
+        # path, converted per value
         yield from rows
         return
     yield batch
@@ -573,6 +575,10 @@ def _file_batches(path: str, fields: list[tuple], part_vals: dict):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    from meta_iterative_mapreduce_spark.sources.arrow_batch import (
+        checked_column,
+    )
+
     tbl = pq.read_table(path)
     n = tbl.num_rows
     names = set(tbl.schema.names)
@@ -580,7 +586,7 @@ def _file_batches(path: str, fields: list[tuple], part_vals: dict):
     for logical, phys, typ in fields:
         t = pa.type_for_alias(_PA_OF_TYPE[typ])
         if phys in names:
-            arrays.append(tbl.column(phys).cast(t))
+            arrays.append(checked_column(tbl.column(phys), t))
         elif phys in part_vals:
             raw = part_vals[phys]
             v = (
@@ -615,24 +621,23 @@ def _read_spec(spec: dict):
         if phys in part_vals
     )
     if arrow_ok:
+        from meta_iterative_mapreduce_spark.sources.arrow_batch import (
+            CAST_ERRORS,
+        )
+
         try:
             # materialized before yielding: every cast in
             # _file_batches happens while the file's table is built,
-            # so an ArrowInvalid can only fire before the first batch
+            # so a refused cast can only fire before the first batch
             # is emitted — the fallback never duplicates rows
             batches = list(
                 _file_batches(spec["path"], fields, part_vals)
             )
-        except Exception as exc:  # noqa: BLE001
-            import pyarrow as pa
-
-            if not isinstance(exc, pa.lib.ArrowInvalid):
-                raise
-            # ADVICE r14: a schema-evolved file whose PHYSICAL column
-            # type differs from the declared one (e.g. stored double,
-            # declared long) fails the safe arrow cast — route that
-            # file through the row path, whose per-value coercion is
-            # the documented behavior
+        except CAST_ERRORS:
+            # a schema-evolved file whose PHYSICAL column type does
+            # not convert exactly to the declared one (e.g. stored
+            # 1.5, declared long): route that file through the row
+            # path, converted per value
             yield from _file_rows(spec["path"], fields, part_vals)
             return
         yield from batches

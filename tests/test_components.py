@@ -168,3 +168,16 @@ def test_link_predict_equals_brute_force(spark):
         for r in link_predict_pairs(edges, center_cap=cap).collect()
     }
     assert got == expect and len(expect) >= 3
+
+
+def test_link_predict_leaves_nothing_cached(spark, sf_dir):
+    """q_graph_link_predict persists its edge and neighbor tables for
+    the plan, and must release both before returning: after the query
+    (and a read of its checkpointed result) the session's cache is
+    empty."""
+    from meta_iterative_mapreduce_spark import registry
+
+    spark.catalog.clearCache()
+    out = registry.queries()["q_graph_link_predict"](spark, sf_dir)
+    assert out.count() >= 0
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -119,3 +119,28 @@ def test_hll_partitioning_invariant(spark, sf_dir):
         .collect()[0]["e"]
     )
     assert e1 == e16 == via_union
+
+
+def test_kll_flags_true_on_empty_input(spark, sf_dir, tmp_path):
+    """Both KLL certifications are vacuously TRUE on an empty table —
+    n_rows 0 and median_ok/p99_ok TRUE, not NULL — which is what their
+    oracles (COUNT(*), TRUE, TRUE) return there."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
+
+    empty = tmp_path / "sf_empty"
+    empty.mkdir()
+    for t in ("lineitem", "events"):
+        schema = ds.dataset(os.path.join(sf_dir, f"{t}.parquet")).schema
+        pq.write_table(
+            pa.Table.from_batches([], schema=schema),
+            str(empty / f"{t}.parquet"),
+        )
+    for name in ("q_sketch_kll", "q_sketch_kll_persisted"):
+        rows = [
+            tuple(r) for r in registry.queries()[name](spark, str(empty)).collect()
+        ]
+        assert rows == [("ALL", 0, True, True)], name
