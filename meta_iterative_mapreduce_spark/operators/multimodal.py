@@ -1825,34 +1825,34 @@ class _BitReader:
                 self.n += 8
                 self.pad += 8
 
-    def _skip(self, k):
-        if k > self.n - self.pad:
-            raise ValueError("truncated entropy data")
-        self.n -= k
-        self.acc &= (1 << self.n) - 1
-
-    def bit(self):
-        self._fill(1)
-        v = (self.acc >> (self.n - 1)) & 1
-        self._skip(1)
-        return v
-
     def bits(self, k):
+        """The next k bits; consuming virtual padding is truncation.
+        The accumulator holds exactly n bits, so no mask is needed."""
         if k == 0:
             return 0
-        self._fill(k)
-        v = (self.acc >> (self.n - k)) & ((1 << k) - 1)
-        self._skip(k)
+        if self.n < k:
+            self._fill(k)
+        n = self.n - k
+        if n < self.pad:
+            raise ValueError("truncated entropy data")
+        v = self.acc >> n
+        self.n = n
+        self.acc &= (1 << n) - 1
         return v
 
     def read_huff(self, window_table):
         """Decode one Huffman symbol via the 16-bit window table."""
-        self._fill(16)
+        if self.n < 16:
+            self._fill(16)
         e = window_table[(self.acc >> (self.n - 16)) & 0xFFFF]
         ln = e & 31
         if not ln:
             raise ValueError("invalid huffman code")
-        self._skip(ln)
+        n = self.n - ln
+        if n < self.pad:
+            raise ValueError("truncated entropy data")
+        self.n = n
+        self.acc &= (1 << n) - 1
         return e >> 5
 
     def consume_restart(self):
@@ -1996,17 +1996,19 @@ def _decode_scan(w, h, comps, restart_interval, data):
     mcux = -(-w // (8 * hmax))
     mcuy = -(-h // (8 * vmax))
     zzs = [[] for _ in comps]
+    units = [(zz, hi * vi, dct, act) for zz, (_, hi, vi, _, dct, act) in zip(zzs, comps)]
     prev = [0] * len(comps)
     br = _BitReader(data)
     for m in range(mcux * mcuy):
         if restart_interval and m and m % restart_interval == 0:
             br.consume_restart()  # byte-align + RSTn
             prev = [0] * len(comps)  # DC predictors reset
-        for ci, (_, hi, vi, _, dct, act) in enumerate(comps):
-            out = zzs[ci]
-            for _ in range(hi * vi):
-                zz, prev[ci] = _decode_entropy_block(br, dct, act, prev[ci])
+        for ci, (out, n_blocks, dct, act) in enumerate(units):
+            dc = prev[ci]
+            for _ in range(n_blocks):
+                zz, dc = _decode_entropy_block(br, dct, act, dc)
                 out.append(zz)
+            prev[ci] = dc
     planes = []
     for (_, hi, vi, q, _, _), zz in zip(comps, zzs):
         # blocks arrive MCU by MCU, each MCU's vi x hi blocks row-major
