@@ -9,8 +9,20 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    BooleanType,
+    DoubleType,
+    FloatType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 TABLES = (
     "region",
@@ -57,6 +69,54 @@ def fixture_fingerprint(sf_dir: str, *tables: str) -> str:
     return h.hexdigest()[:12]
 
 
+# Parquet leaf types whose Spark type no session setting changes, keyed
+# on (physical, logical, converted) type as the footer stores them.
+# Every other leaf (timestamps, dates, decimals, small or unsigned ints,
+# un-annotated binary, enum/JSON strings, nested or repeated fields) is
+# left to Spark's own inference.
+_FOOTER_TYPES = {
+    ("INT32", "NONE", "NONE"): IntegerType(),
+    ("INT64", "NONE", "NONE"): LongType(),
+    ("FLOAT", "NONE", "NONE"): FloatType(),
+    ("DOUBLE", "NONE", "NONE"): DoubleType(),
+    ("BOOLEAN", "NONE", "NONE"): BooleanType(),
+    ("BYTE_ARRAY", "STRING", "UTF8"): StringType(),
+}
+
+
+def _footer_schema(path: str) -> StructType | None:
+    """The schema `spark.read.parquet(path)` infers for ONE flat
+    Parquet file, read from its footer in the driver, or None where
+    Spark must infer it itself. Spark's inference always runs a job,
+    even for one file; this read costs a few milliseconds.
+
+    Decided from the Parquet physical/logical types, never from the
+    Arrow schema a writer may have stored beside them, since Spark
+    reads only the former. None for a directory (or a missing, hidden
+    or unreadable path: Spark then raises its own error), any leaf
+    outside `_FOOTER_TYPES`, names that collide when case is ignored,
+    and Spark-written files (their footer carries Spark's own schema).
+    Nothing is cached: each call reads the footer as it is now."""
+    if not os.path.isfile(path) or os.path.basename(path)[0] in "._":
+        return None
+    try:
+        meta = pq.read_metadata(path)
+    except (OSError, pa.ArrowException):
+        return None
+    if b"org.apache.spark.sql.parquet.row.metadata" in (meta.metadata or {}):
+        return None
+    fields = []
+    for i in range(meta.num_columns):
+        c = meta.schema.column(i)
+        t = _FOOTER_TYPES.get((c.physical_type, c.logical_type.type, c.converted_type))
+        if t is None or c.path != c.name or c.max_repetition_level:
+            return None
+        fields.append(StructField(c.name, t, True))
+    if not fields or len({f.name.lower() for f in fields}) < len(fields):
+        return None
+    return StructType(fields)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         # events.ts arrives in whatever flavor the fixture generator
@@ -97,7 +157,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 ),
             )
         return df
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    schema = _footer_schema(path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -36,6 +36,10 @@ from meta_iterative_mapreduce_spark.registry import register
 # DuckDB oracle threshold identically.
 _COMPONENT_JACCARD_THRESHOLD = 0.4
 
+# Seconds connected_components waits for a round's observed signature
+# before treating it as unknown (and proving the fixpoint exactly).
+_SIGNATURE_WAIT_S = 60.0
+
 
 def _large_star(e: DataFrame) -> DataFrame:
     """Large-star round: for every node u, connect every LARGER
@@ -84,17 +88,19 @@ def connected_components(
     stable). Each round shuffles only the current edge set — which
     shrinks toward one star edge per non-root node — and the cheap
     per-round fixpoint test is a one-pass (count, xor-hash) signature;
-    the exact subtract runs only when the signature matches.
+    the exact subtract runs only when the signature matches, or when a
+    signature was not posted within `_SIGNATURE_WAIT_S` (then both ways).
 
     `on_round(round_idx, n_edges, seconds)` is an optional profiling
     hook (tools/cc_profile.py) — instrumentation shares THIS loop
-    instead of forking a copy that could drift.
+    instead of forking a copy that could drift. `n_edges` is None for
+    a round whose signature is unknown.
     """
     import time as _time
 
     from pyspark.sql import Observation
 
-    def _ckpt_with_sig(df: DataFrame) -> tuple[DataFrame, tuple[int, int]]:
+    def _ckpt_with_sig(df: DataFrame) -> tuple[DataFrame, tuple[int, int] | None]:
         """Eagerly checkpoint the edge set and return its one-pass
         (count, xxhash64 xor-fold) signature, collected via observe()
         DURING the checkpoint job — no separate signature job per
@@ -107,19 +113,21 @@ def connected_components(
         while the content keeps changing for ~log(diameter) more
         rounds. XOR fold, not SUM: overflow-free under ANSI mode and
         order-independent; the edge set is distinct so nothing
-        self-cancels."""
+        self-cancels. The signature is None (unknown) when it is not
+        posted in time."""
         obs = Observation()
         d = df.observe(
             obs,
             F.count(F.lit(1)).alias("n"),
             F.bit_xor(F.xxhash64("u", "v")).alias("h"),
         ).localCheckpoint(eager=True)
-        # ADVICE r14: obs.get blocks until the QueryExecutionListener
-        # posts the checkpoint job's metrics; on a runtime where the
-        # checkpoint action never fires the listener (e.g. Spark
-        # Connect) that wait would hang the CC loop silently. Fetch on
-        # a daemon thread with a generous deadline so a listener miss
-        # fails LOUDLY instead.
+        # obs.get blocks until the QueryExecutionListener posts the
+        # checkpoint job's metrics; on a runtime where the checkpoint
+        # action never fires the listener (e.g. Spark Connect), or a
+        # driver too slow to post it, that wait would hang the CC loop.
+        # Fetch on a daemon thread with a deadline; a miss leaves the
+        # round's signature unknown and the loop proves its fixpoint
+        # with the exact two-way set test instead.
         import threading
 
         holder: dict = {}
@@ -132,17 +140,12 @@ def connected_components(
 
         t = threading.Thread(target=_fetch, daemon=True)
         t.start()
-        t.join(60)
+        t.join(_SIGNATURE_WAIT_S)
         if "err" in holder:
             raise holder["err"]  # the REAL failure, not a fake timeout
         if "m" not in holder:
-            # the daemon fetch thread stays parked in obs.get, but the
-            # loop dies loudly here instead of hanging the session
-            raise RuntimeError(
-                "connected_components: observed metrics not posted "
-                "within 60s of the eager localCheckpoint — the "
-                "runtime did not fire the observation listener"
-            )
+            # the daemon fetch thread stays parked in obs.get
+            return d, None
         m = holder["m"]
         return d, (m["n"] or 0, m["h"] or 0)
 
@@ -152,17 +155,23 @@ def connected_components(
         .distinct()
     )
     for i in range(max_iter):
-        if prev_sig[0] == 0:
+        if prev_sig is not None and prev_sig[0] == 0:
             break
         t0 = _time.time()
         e_new, new_sig = _ckpt_with_sig(_small_star(_large_star(e)))
-        # signature match is necessary but not sufficient (xor-hash
-        # collisions exist in principle), so the fixpoint is always
-        # CONFIRMED by the exact set test — which now runs only when
-        # the signature says it can possibly pass.
-        converged = new_sig == prev_sig and e_new.subtract(e).isEmpty()
+        if new_sig is None or prev_sig is None:
+            # a signature is unknown: set equality, both ways
+            converged = e_new.subtract(e).isEmpty() and e.subtract(e_new).isEmpty()
+        else:
+            # signature match is necessary but not sufficient (xor-hash
+            # collisions exist in principle), so the fixpoint is always
+            # CONFIRMED by the exact set test — which runs only when the
+            # signature says it can possibly pass (equal counts, so one
+            # direction proves equality).
+            converged = new_sig == prev_sig and e_new.subtract(e).isEmpty()
         if on_round is not None:
-            on_round(i + 1, new_sig[0], round(_time.time() - t0, 1))
+            n_edges = None if new_sig is None else new_sig[0]
+            on_round(i + 1, n_edges, round(_time.time() - t0, 1))
         old = e
         e, prev_sig = e_new, new_sig
         old.unpersist()

@@ -11,8 +11,13 @@ Spark-first re-expression:
 - A GPU block's fused sufficient-statistics pass (Σx, Σy, Σx², Σxy —
   kernel.cu:53-59) is one partial hash-aggregate; the closed-form solve
   (kernel.cu:62-63) is Spark's built-in `regr_slope`/`regr_intercept`.
-- The two reduce levels are two nested groupBys (deterministic chunk
-  keys `l_orderkey % K`, never engine hashes — SURVEY.md §2.2 rule b).
+- The per-chunk fit is one groupBy over all partitions (deterministic
+  chunk keys `l_orderkey % K`, never engine hashes — SURVEY.md §2.2
+  rule b). Its O(chunks) result is coalesced into ONE partition, so
+  the reduce tail (super-chunk average, global average, batch order)
+  runs where that table already sits with no further exchange — the
+  reference's single averaging host (kernel.cu:148-157, 165-166),
+  still as lazy DataFrame operators.
 - The interactive batch loop (kernel.cu:190-196) becomes either a
   driver loop over cached DataFrames (`iterative_fit_loop`, faithful)
   or — because the reference's weight "rebroadcast" is dead code
@@ -98,7 +103,8 @@ def chunked_fit(df: DataFrame, x: str, y: str, chunk: Column) -> DataFrame:
 
     Each chunk is a GPU block's sub-range (kernel.cu:44-53), made
     deterministic with an arithmetic bucket key instead of a physical
-    range. Returns one row per chunk with (w0, w1, n_rows).
+    range. Returns one row per chunk with (w0, w1, n_rows), in one
+    partition: any reduce over it then plans no exchange.
     """
     return (
         df.groupBy(chunk.alias("chunk"))
@@ -107,6 +113,7 @@ def chunked_fit(df: DataFrame, x: str, y: str, chunk: Column) -> DataFrame:
             F.regr_slope(F.col(y), F.col(x)).alias("w1"),
             F.regr_count(F.col(y), F.col(x)).alias("n_rows"),
         )
+        .coalesce(1)
     )
 
 
@@ -125,9 +132,10 @@ def meta_fit(df: DataFrame, x: str, y: str, chunk: Column, super_chunk: Column) 
     """Two-level (meta) averaged fit: chunk → super-chunk → global.
 
     The reference's primary+secondary reduce tree (kernel.cu:148-157
-    block average, then kernel.cu:165-166/173-174 process average) as
-    two nested aggregations — Spark's partial/final aggregation plus an
-    explicit intermediate level (the `treeAggregate(depth=2)` shape).
+    block average, then kernel.cu:165-166/173-174 process average).
+    The per-chunk fit is the one distributed aggregation; its O(chunks)
+    rows are coalesced into one partition, where the super-chunk and
+    global averages run with no exchange — one shuffle per round.
     """
     per_chunk = (
         df.groupBy(super_chunk.alias("super_chunk"), chunk.alias("chunk"))
@@ -135,6 +143,7 @@ def meta_fit(df: DataFrame, x: str, y: str, chunk: Column, super_chunk: Column) 
             F.regr_intercept(F.col(y), F.col(x)).alias("w0"),
             F.regr_slope(F.col(y), F.col(x)).alias("w1"),
         )
+        .coalesce(1)
     )
     per_super = per_chunk.groupBy("super_chunk").agg(
         F.avg("w0").alias("w0"), F.avg("w1").alias("w1")
@@ -167,8 +176,10 @@ def batch_fits(
     """Every batch's chunk-averaged fit, in ONE aggregation.
 
     groupBy(batch, chunk) → per-chunk OLS → groupBy(batch) → uniform
-    average. One shuffle keyed on (batch, chunk); output is O(#batches)
-    rows, safe to collect at any scale.
+    average. One shuffle keyed on (batch, chunk); the O(#batches ×
+    chunks) per-chunk table is coalesced into one partition, so the
+    batch average and any later sort or window over batches plan no
+    exchange. Output is O(#batches) rows, safe to collect at any scale.
     """
     per_chunk = (
         df.select(batch.alias("batch"), chunk.alias("chunk"), F.col(x), F.col(y))
@@ -177,6 +188,7 @@ def batch_fits(
             F.regr_intercept(F.col(y), F.col(x)).alias("w0"),
             F.regr_slope(F.col(y), F.col(x)).alias("w1"),
         )
+        .coalesce(1)
     )
     return per_chunk.groupBy("batch").agg(
         F.avg("w0").alias("f0"), F.avg("w1").alias("f1")
@@ -246,19 +258,25 @@ def iterative_fit_loop(
         batch.alias("batch"), chunk.alias("chunk"), F.col(x), F.col(y)
     ).cache()
     try:
-        batches = [r["batch"] for r in tagged.select("batch").distinct().orderBy("batch").collect()]
+        # O(#batches) keys, ordered here as Spark's ascending sort
+        # would (NULL first, NaN last) with no range-partitioning job
+        batches = sorted(
+            (r["batch"] for r in tagged.select("batch").distinct().collect()),
+            key=lambda b: (b is not None, b != b, b),
+        )
         w0 = w1 = None
         n_iters, converged = 0, False
         for b in batches:
             if n_iters >= max_iter:
                 break
             fit = (
-                tagged.filter(F.col("batch") == b)
+                tagged.filter(F.col("batch").eqNullSafe(b))
                 .groupBy("chunk")
                 .agg(
                     F.regr_intercept(F.col(y), F.col(x)).alias("w0"),
                     F.regr_slope(F.col(y), F.col(x)).alias("w1"),
                 )
+                .coalesce(1)
                 .agg(F.avg("w0").alias("f0"), F.avg("w1").alias("f1"))
                 .collect()[0]
             )
@@ -428,7 +446,8 @@ def q_regression_iterative_ema(spark: SparkSession, sf_dir: str) -> DataFrame:
         batch=F.year("l_shipdate") * 100 + F.month("l_shipdate"),
         chunk=F.col("l_orderkey") % 8,
     )
-    # The window is over O(#months) rows — a single tiny partition is fine.
+    # The window is over O(#months) rows, already in batch_fits' one
+    # partition: it plans no exchange.
     w = W.orderBy("batch")
     ranked = per_batch.select(
         "f0",

@@ -20,6 +20,7 @@ from meta_iterative_mapreduce_spark.operators.dedup import (
     jaccard_pairs,
 )
 from meta_iterative_mapreduce_spark.registry import register
+from meta_iterative_mapreduce_spark.session import register_data_source
 
 
 @register(
@@ -172,7 +173,7 @@ def q_udtf_python(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _register_synthetic_source(spark: SparkSession) -> None:
+def _make_synthetic_source() -> type:
     """Python Data Source API (Spark 4): a deterministic generator
     source that partitions like any scan. Each InputPartition owns a
     disjoint id slice, so parallelism and row content are independent
@@ -210,11 +211,7 @@ def _register_synthetic_source(spark: SparkSession) -> None:
         def reader(self, schema):
             return SyntheticReader(self.options)
 
-    try:
-        spark.dataSource.register(SyntheticEventsSource)
-    except Exception as exc:  # already registered in this session
-        if "already" not in str(exc).lower():
-            raise
+    return SyntheticEventsSource
 
 
 @register(
@@ -233,7 +230,7 @@ def q_source_python_ds(spark: SparkSession, sf_dir: str) -> DataFrame:
     form with generate_series, proving the partitioned Python reader
     yields exactly the declared row set (no loss/dup at partition
     boundaries)."""
-    _register_synthetic_source(spark)
+    register_data_source(spark, "mimr_synthetic", _make_synthetic_source)
     src = (
         spark.read.format("mimr_synthetic")
         .option("n", 10000)

@@ -9,8 +9,14 @@ a real cluster (override via MIMR_SHUFFLE_PARTITIONS).
 from __future__ import annotations
 
 import os
+import weakref
+from typing import Callable
 
 from pyspark.sql import SparkSession
+
+# Python data source names registered on each live session. A session
+# built after a stop is a new object, so it registers again.
+_REGISTERED: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def get_spark(
@@ -45,3 +51,16 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def register_data_source(
+    spark: SparkSession, name: str, make_source: Callable[[], type]
+) -> None:
+    """Register the Python data source class `make_source()` under
+    format `name`, once per live session. Registering again would
+    rebuild the class and replace the session's copy (Spark logs a
+    warning each time); later calls on the same session do nothing."""
+    names = _REGISTERED.setdefault(spark, set())
+    if name not in names:
+        spark.dataSource.register(make_source())
+        names.add(name)

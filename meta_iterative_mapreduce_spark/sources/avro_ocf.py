@@ -68,6 +68,7 @@ from meta_iterative_mapreduce_spark.sources.snappy_codec import (
     snappy_decompress,
 )
 from meta_iterative_mapreduce_spark.registry import register
+from meta_iterative_mapreduce_spark.session import register_data_source
 
 _MAGIC = b"Obj\x01"
 _SYNC_LEN = 16
@@ -1153,6 +1154,11 @@ def spark_schema_of(schema: dict) -> str:
 
 
 def register_avro_source(spark: SparkSession) -> None:
+    """Register `mimr_avro` (see `_make_avro_source`) once per session."""
+    register_data_source(spark, "mimr_avro", _make_avro_source)
+
+
+def _make_avro_source() -> type:
     """Python Data Source `mimr_avro`: .option('path', <dir or file>)
     scans every *.avro under it, ONE InputPartition per data block
     (driver cost = the O(blocks) metadata walk of index_avro_blocks;
@@ -1450,11 +1456,7 @@ def register_avro_source(spark: SparkSession) -> None:
         def streamReader(self, schema):
             return AvroStreamReader(self.options)
 
-    try:
-        spark.dataSource.register(AvroSource)
-    except Exception as exc:  # already registered in this session
-        if "already" not in str(exc).lower():
-            raise
+    return AvroSource
 
 
 # ----------------------------------------------------------------- sink

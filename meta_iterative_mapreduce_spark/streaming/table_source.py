@@ -47,6 +47,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from meta_iterative_mapreduce_spark.session import register_data_source
 from meta_iterative_mapreduce_spark.sources.versioned import (
     _mapping_state,
     file_byte_size,
@@ -1055,12 +1056,8 @@ def make_versioned_table_source():
 
 def register_stream_source(spark: SparkSession) -> None:
     """Register the source under format 'mimr_versioned_table'
-    (idempotent per session)."""
-    try:
-        spark.dataSource.register(make_versioned_table_source())
-    except Exception as exc:  # already registered in this session
-        if "already" not in str(exc).lower():
-            raise
+    (once per session)."""
+    register_data_source(spark, "mimr_versioned_table", make_versioned_table_source)
 
 
 def stream_id_for_checkpoint(checkpoint: str) -> str:

@@ -181,3 +181,42 @@ def test_link_predict_leaves_nothing_cached(spark, sf_dir):
     out = registry.queries()["q_graph_link_predict"](spark, sf_dir)
     assert out.count() >= 0
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_cc_unposted_signature_falls_back_to_exact_test(spark, monkeypatch):
+    """A round whose observed signature is not posted within the
+    deadline is settled by the exact two-way set test instead of
+    raising: with every signature withheld the labels equal the
+    signature path's and the union-find model's."""
+    import threading
+
+    from pyspark.sql import Observation
+
+    from meta_iterative_mapreduce_spark.operators import components as C
+
+    rng = random.Random(11)
+    n = 80
+    edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(60)]
+    chain = rng.sample(range(n), 20)
+    edges += list(zip(chain, chain[1:]))
+    df = spark.createDataFrame(edges, "u long, v long")
+    want = {r.node: r.component_id for r in connected_components(df).collect()}
+    model = _union_find_components(n, edges)
+    assert want == {node: model[node] for node in want}
+
+    release, rounds = threading.Event(), []
+    monkeypatch.setattr(C, "_SIGNATURE_WAIT_S", 0.0)
+    monkeypatch.setattr(
+        Observation, "get", property(lambda self: release.wait() and {})
+    )
+    try:
+        got = {
+            r.node: r.component_id
+            for r in connected_components(
+                df, on_round=lambda i, n_edges, s: rounds.append(n_edges)
+            ).collect()
+        }
+    finally:
+        release.set()
+    assert got == want
+    assert len(rounds) >= 2 and all(n_edges is None for n_edges in rounds)

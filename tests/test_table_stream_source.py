@@ -668,7 +668,12 @@ def test_paced_restart_resumes_from_partial_offset(spark, tmp_path):
     batches = []
 
     def sink(bdf, bid):
-        bdf.write.mode("append").parquet(staging)
+        # idempotent per batch id: a stop that lands after the write
+        # but before Spark commits the batch makes the restart replay
+        # that same batch (foreachBatch is at-least-once); a replay
+        # overwrites its own directory, while a re-emit of files from
+        # a COMMITTED batch arrives under a new id and still counts twice
+        bdf.write.mode("overwrite").parquet(os.path.join(staging, f"bid={bid}"))
         batches.append(bdf.count())
 
     from meta_iterative_mapreduce_spark.streaming.table_source import (
@@ -1051,3 +1056,52 @@ def test_drain_available_now_multi_batch_bounded_restart(spark, tmp_path):
     # 10 one-file versions / cap 2 files => at least 5 bounded batches
     assert len(rows_per_batch) >= 5, (p1, p2)
     assert max(rows_per_batch) <= 20
+
+
+def test_stream_cdc_registers_its_source_once_per_session(
+    spark, tmp_path, monkeypatch
+):
+    """A second stream_cdc on the same session registers nothing (the
+    first registers at most once, if no earlier call on this session
+    did), both drains stay exactly-once, and registration is counted
+    per session object, so a session rebuilt after a stop (a new
+    object) registers again."""
+    from pyspark.sql.datasource import DataSourceRegistration
+
+    from meta_iterative_mapreduce_spark.session import register_data_source
+
+    calls = []
+    real = DataSourceRegistration.register
+
+    def counting(self, ds):
+        calls.append(ds.name())
+        return real(self, ds)
+
+    monkeypatch.setattr(DataSourceRegistration, "register", counting)
+    table = str(tmp_path / "t")
+    df = spark.range(0, 60).select(
+        F.col("id").alias("k"), (F.col("id") * 2).alias("v")
+    )
+    V.write_version(df.filter("k < 50"), table)
+    staging, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    _run_cdc(spark, table, "k", staging, ckpt)
+    assert spark.read.parquet(staging).count() == 50
+    assert len(calls) <= 1
+    first = len(calls)
+    V.append_version(df.filter("k >= 50"), table)
+    _run_cdc(spark, table, "k", staging, ckpt)
+    got = spark.read.parquet(staging)
+    assert got.count() == 60 and got.select("k").distinct().count() == 60
+    assert len(calls) == first
+
+    class Session:  # stand-in with the one attribute the helper uses
+        def __init__(self):
+            self.dataSource, self.sources = self, []
+
+        def register(self, ds):
+            self.sources.append(ds)
+
+    old, rebuilt = Session(), Session()
+    for s in (old, old, rebuilt, rebuilt):
+        register_data_source(s, "mimr_x", lambda: object)
+    assert old.sources == rebuilt.sources == [object]
