@@ -24,6 +24,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from meta_iterative_mapreduce_spark.cache import owned, persist
 from meta_iterative_mapreduce_spark.functions.vectors import dot_const, l2_norm
 from meta_iterative_mapreduce_spark.io import load_table
 from meta_iterative_mapreduce_spark.registry import register
@@ -134,8 +135,8 @@ def kmeans(
     The per-iteration SSE falls out of the same sufficient-stats pass
     (see _update_centers), so the Lloyd monotonicity guarantee is
     certifiable at zero extra scans."""
-    cached = df.select(vec_col).cache()
-    try:
+    with owned():
+        cached = persist(df.select(vec_col))
         centers = [list(c) for c in init_centers]
         sses: list[float] = []
         n_assigned: list[int] = []
@@ -148,8 +149,6 @@ def kmeans(
             n_assigned.append(n_tot)
             centers = [n if n is not None else old for n, old in zip(new, centers)]
         return KMeansResult(centers, n_iters, sses, n_assigned)
-    finally:
-        cached.unpersist()
 
 
 def _init_centers(spark: SparkSession, sf_dir: str, k: int) -> list[list[float]]:
@@ -362,13 +361,10 @@ def pq_train(
     """Train the M×K PQ codebook. init_ids: the K smallest vec_ids'
     rows (deterministic seeding, like _init_centers). Returns
     books[sub_id][code] = centroid (list of _PQ_DIM floats). Pass a
-    pre-cached `sub` (_pq_subvectors output) to share the exploded
-    table with a following pq_encode — the caller then owns its
-    lifecycle."""
-    owns = sub is None
-    if owns:
-        sub = _pq_subvectors(df, vec_col).cache()
-    try:
+    `sub` (_pq_subvectors output) persisted in the caller's block to
+    share the exploded table with a following pq_encode."""
+    with owned():
+        sub = persist(_pq_subvectors(df, vec_col) if sub is None else sub)
         seed = {
             (r["sub_id"], r["vec_id"]): [float(x) for x in r["sv"]]
             for r in _pq_subvectors(init_ids, vec_col).collect()
@@ -400,9 +396,6 @@ def pq_train(
                 for s in range(_PQ_M)
             ]
         return books
-    finally:
-        if owns:
-            sub.unpersist()
 
 
 def pq_encode(
@@ -456,15 +449,13 @@ def ensure_pq_index(spark: SparkSession, sf_dir: str) -> tuple[str, list]:
     )
     if len(versioned.versions(table)) == 0:
         e = load_table(spark, sf_dir, "embeddings")
-        sub = _pq_subvectors(e, "embedding").cache()
-        try:
+        with owned():
+            sub = persist(_pq_subvectors(e, "embedding"))
             books = pq_train(
                 e, "embedding", e.filter(F.col("vec_id") < _PQ_K), sub=sub
             )
             enc = pq_encode(e, "embedding", books, sub=sub)
             versioned.write_version(enc, table, pq_books=books)
-        finally:
-            sub.unpersist()
     return table, versioned.manifest_info(table)["pq_books"]
 
 
@@ -700,26 +691,24 @@ def ensure_ivfpq_index(
     if len(versioned.versions(table)) == 0:
         e = load_table(spark, sf_dir, "embeddings")
         centers = _init_centers(spark, sf_dir, _IVF_K)
-        sub = _pq_subvectors(e, "embedding").cache()
-        try:
+        assigned = assign_clusters(e, "embedding", centers).select(
+            "vec_id", F.col("cluster").cast("int").alias("cluster")
+        )
+        with owned():
+            sub = persist(_pq_subvectors(e, "embedding"))
             books = pq_train(
                 e, "embedding", e.filter(F.col("vec_id") < _PQ_K), sub=sub
             )
             enc = pq_encode(e, "embedding", books, sub=sub)
-        finally:
-            sub.unpersist()
-        assigned = assign_clusters(e, "embedding", centers).select(
-            "vec_id", F.col("cluster").cast("int").alias("cluster")
-        )
-        versioned.write_version(
-            enc.join(assigned, "vec_id").repartition(
-                _IVF_K, F.col("cluster")
-            ),
-            table,
-            partition_by="cluster",
-            pq_books=books,
-            ivf_centers=centers,
-        )
+            versioned.write_version(
+                enc.join(assigned, "vec_id").repartition(
+                    _IVF_K, F.col("cluster")
+                ),
+                table,
+                partition_by="cluster",
+                pq_books=books,
+                ivf_centers=centers,
+            )
     m = versioned.manifest_info(table)
     return table, m["pq_books"], m["ivf_centers"]
 

@@ -14,15 +14,16 @@ convergence scalar), alongside the meta-averaged regression and
 k-means.
 
 Per-round lineage is truncated with localCheckpoint — an iterative
-DataFrame loop otherwise grows an unbounded plan tree.
+DataFrame loop otherwise grows an unbounded plan tree — and each
+superseded round's checkpoint is released as soon as the next exists.
 """
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from meta_iterative_mapreduce_spark.cache import owned, persist, release
 from meta_iterative_mapreduce_spark.io import load_table
 from meta_iterative_mapreduce_spark.operators.dedup import (
     _JACCARD_PAIRS_CTE,
@@ -172,9 +173,8 @@ def connected_components(
         if on_round is not None:
             n_edges = None if new_sig is None else new_sig[0]
             on_round(i + 1, n_edges, round(_time.time() - t0, 1))
-        old = e
+        release(e)
         e, prev_sig = e_new, new_sig
-        old.unpersist()
         if converged:
             break
     else:
@@ -234,10 +234,12 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph at jaccard >= 0.4, every document labeled with its
     component's min doc_id, keep = "this is the canonical copy".
     The oracle is the same closure as a DuckDB recursive CTE."""
-    edges = jaccard_pairs(spark, sf_dir).where(
-        F.col("jaccard") >= _COMPONENT_JACCARD_THRESHOLD
-    ).select("doc_a", "doc_b")
-    labels = connected_components(edges)
+    # the labels read only the CC loop's last checkpoint: free the cache
+    with owned():
+        edges = jaccard_pairs(spark, sf_dir).where(
+            F.col("jaccard") >= _COMPONENT_JACCARD_THRESHOLD
+        ).select("doc_a", "doc_b")
+        labels = connected_components(edges)
     d = load_table(spark, sf_dir, "documents").select("doc_id")
     return d.join(labels, d.doc_id == labels.node, "left").select(
         "doc_id",
@@ -404,8 +406,9 @@ def pagerank(edges_sym: DataFrame, n_iter: int = 3, damping: float = 0.85) -> Da
     connected_components. Per iteration: ranks (node-sized) join deg
     on u, join edges on u, one contribution shuffle on v — edge-linear
     work, no N² anywhere. `edges_sym` and its degree table are
-    persisted: each feeds every iteration, and Catalyst would
-    otherwise re-inline the distinct self-join n_iter times.
+    persisted in the caller's `owned()` block: each feeds every
+    iteration, and Catalyst would otherwise re-inline the distinct
+    self-join n_iter times.
 
     Returns (ranks, n): ranks is (u, pr) with SUM(pr) = 1 over nodes
     incident to an edge; n is the node count (an O(1) driver scalar —
@@ -419,8 +422,8 @@ def pagerank(edges_sym: DataFrame, n_iter: int = 3, damping: float = 0.85) -> Da
     # RETURNS u-partitioned edges (its dedup rides the same exchange),
     # so no repartition here: a caller passing unpartitioned edges
     # still gets correct results, just per-iteration exchanges.
-    edges_sym = edges_sym.persist()
-    deg = edges_sym.groupBy("u").agg(F.count(F.lit(1)).alias("d")).persist()
+    edges_sym = persist(edges_sym)
+    deg = persist(edges_sym.groupBy("u").agg(F.count(F.lit(1)).alias("d")))
     n = deg.count()
     ranks = deg.select("u", F.lit(1.0 / n).alias("pr"))
     for _ in range(n_iter):
@@ -455,12 +458,12 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero. The symmetric graph has no dangling nodes by construction,
     so the (1-d)/N teleport plus in-neighbor sum is the complete
     update. Oracle: the identical three iterations as chained CTEs."""
-    edges = copurchase_edges(spark, sf_dir)
-    ranks, n = pagerank(edges, n_iter=3)
-    return ranks.select(
-        F.col("u").alias("part"),
-        F.round(F.col("pr") * n, 4).alias("pr_scaled"),
-    )
+    with owned():
+        ranks, n = pagerank(copurchase_edges(spark, sf_dir), n_iter=3)
+        return ranks.select(
+            F.col("u").alias("part"),
+            F.round(F.col("pr") * n, 4).alias("pr_scaled"),
+        ).localCheckpoint(eager=True)
 
 
 # ~5M (s, t) long pairs ≈ 80 MB hashed — comfortably broadcastable on
@@ -505,9 +508,10 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     whose highest-degree node produces a quadratic wedge set. Each
     triangle has exactly one vertex with two out-edges under this
     acyclic orientation, so COUNT is exact with no deduplication.
-    `oriented` is persisted because it feeds both the adjacency
+    `oriented` is checkpointed because it feeds both the adjacency
     aggregate and the edge-stream probe (Catalyst would re-inline the
-    orientation pipeline per leg).
+    orientation pipeline per leg); the count then reads only that
+    checkpoint, so the edge cache is released before return.
 
     EDGE-ITERATOR closure (r14): each oriented edge (s, t) contributes
     |N⁺(s) ∩ N⁺(t)| triangles, so the count is one join of the EDGE
@@ -520,12 +524,11 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     table is broadcast (O(E) longs) and the closure is shuffle-free;
     past it the same joins run as shuffles — still the correct
     MapReduce triangle shape at 100 TB."""
-    pairs = (
-        copurchase_edges(spark, sf_dir)
-        .filter(F.col("u") < F.col("v"))
-        .persist()
-    )
-    return triangle_stats(pairs)
+    with owned():
+        pairs = persist(
+            copurchase_edges(spark, sf_dir).filter(F.col("u") < F.col("v"))
+        )
+        return triangle_stats(pairs)
 
 
 def triangle_stats(pairs: DataFrame, force_shuffle: bool = False) -> DataFrame:
@@ -547,23 +550,22 @@ def triangle_stats(pairs: DataFrame, force_shuffle: bool = False) -> DataFrame:
     fwd = (F.col("du") < F.col("dv")) | (
         (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
     )
+    # materialize `oriented` DETERMINISTICALLY before the join legs
+    # fan out: otherwise the broadcast builds and the probe leg race to
+    # compute it concurrently across all cores — sometimes 3x the
+    # orientation work, and the reason q_graph_triangles topped
+    # BENCH_DELTA's noise list three rounds running (3.9→7.2→5.8 s on
+    # unchanged code; VERDICT r8 item 7)
     oriented = with_deg.select(
         F.when(fwd, F.col("u")).otherwise(F.col("v")).alias("s"),
         F.when(fwd, F.col("v")).otherwise(F.col("u")).alias("t"),
-    ).persist()
+    ).localCheckpoint(eager=True)
     n_wedges = (
         deg.agg(F.sum(F.col("d") * (F.col("d") - 1)).alias("w2"))
         .collect()[0]["w2"]
         // 2
     )
     n_edges = pairs.count()  # cached — no recompute
-    # populate the oriented cache DETERMINISTICALLY before the join
-    # legs fan out: otherwise the broadcast builds and the probe leg
-    # race to compute it concurrently across all cores — sometimes
-    # 3x the orientation work, and the reason q_graph_triangles topped
-    # BENCH_DELTA's noise list three rounds running (3.9→7.2→5.8 s on
-    # unchanged code; VERDICT r8 item 7)
-    oriented.count()
     # EDGE-ITERATOR closure (optimization r14, guide §2.3/§2.4):
     # each oriented edge (s, t) contributes |N⁺(s) ∩ N⁺(t)| triangles,
     # so the count is one join of the EDGE stream (|E| rows) against
@@ -637,9 +639,11 @@ def q_graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 3.0 s warm at sf0.1; saves max_hops-1 edge shuffles at scale).
     # copurchase_edges already returns u-partitioned edges, so the
     # explicit repartition (one extra exchange of the full symmetric
-    # edge set) is gone (optimization r15).
-    edges = copurchase_edges(spark, sf_dir).persist()
-    return bfs_hop_histogram(edges, _BFS_MAX_HOPS)
+    # edge set) is gone (optimization r15). The histogram reads only
+    # the last round's checkpoint, so the edge cache is released here.
+    with owned():
+        edges = persist(copurchase_edges(spark, sf_dir))
+        return bfs_hop_histogram(edges, _BFS_MAX_HOPS)
 
 
 def bfs_hop_histogram(edges_sym: DataFrame, max_hops: int) -> DataFrame:
@@ -656,13 +660,15 @@ def bfs_hop_histogram(edges_sym: DataFrame, max_hops: int) -> DataFrame:
         # localCheckpoint per round (as in connected_components): the
         # distance table is ≤ |V| rows, and cutting lineage keeps round
         # k from replanning rounds 1..k-1's joins (10.6 s → ~3 s at
-        # sf0.1 for the 4-round unroll)
-        dist = (
+        # sf0.1 for the 4-round unroll); the superseded round is freed
+        new = (
             dist.unionAll(nxt)
             .groupBy("node")
             .agg(F.min("d").alias("d"))
-            .localCheckpoint()
+            .localCheckpoint(eager=True)
         )
+        release(dist)
+        dist = new
     return (
         dist.groupBy(F.col("d").alias("hops"))
         .agg(F.count(F.lit(1)).alias("n_nodes"))
@@ -727,18 +733,10 @@ def link_predict_pairs(
     """Common-neighbor Jaccard link prediction over a symmetric (u, v)
     edge list — see q_graph_link_predict. Returns non-adjacent pairs
     with >= 2 common neighbors through centers of degree <= center_cap,
-    scored in integer basis points.
-
-    Cache ownership: the result is materialized with an eager
-    localCheckpoint, then the `edges`/`nbrs` tables this function
-    persisted are released before it returns (the dedup queries'
-    shape), so nothing stays cached in a long-lived session."""
+    scored in integer basis points."""
     # edges feeds the neighbor aggregate AND the adjacency anti-join;
     # unpersisted, the whole upstream pair pipeline recomputes per leg
-    # (same rationale as q_graph_triangles' persisted `pairs`). A
-    # caller's own cache of `edges` is left alone.
-    owns_edges = edges.storageLevel == StorageLevel.NONE
-    edges = edges.persist()
+    # (same rationale as q_graph_triangles' persisted `pairs`).
     # Wedges through each non-hub center are emitted INLINE from the
     # center's sorted neighbor array (C(d, 2) combinations via
     # higher-order functions) instead of the edge-table self-join on u
@@ -749,54 +747,40 @@ def link_predict_pairs(
     # C(d ≤ cap, 2) either way, and the degree table now falls out of
     # the SAME neighbor aggregate (size(vs)) instead of its own
     # count shuffle.
-    nbrs = edges.groupBy("u").agg(
-        F.sort_array(F.collect_list("v")).alias("vs")
-    ).persist()
-    try:
-        return _link_predict_plan(edges, nbrs, center_cap).localCheckpoint(
-            eager=True
+    with owned():
+        edges = persist(edges)
+        nbrs = persist(
+            edges.groupBy("u").agg(F.sort_array(F.collect_list("v")).alias("vs"))
         )
-    finally:
-        nbrs.unpersist()
-        if owns_edges:
-            edges.unpersist()
-
-
-def _link_predict_plan(
-    edges: DataFrame, nbrs: DataFrame, center_cap: int
-) -> DataFrame:
-    """The lazy scored-pair plan of link_predict_pairs over its
-    persisted edge and neighbor-list tables."""
-    deg = nbrs.select("u", F.size("vs").alias("d"))
-    per_center = nbrs.filter(F.size("vs") <= center_cap)
-    wedge = (
-        per_center.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(vs, (x, i) -> "
-                    "transform(slice(vs, i + 2, size(vs) - i - 1), "
-                    "y -> struct(x AS x, y AS y))))"
-                )
-            ).alias("w")
+        deg = nbrs.select("u", F.size("vs").alias("d"))
+        per_center = nbrs.filter(F.size("vs") <= center_cap)
+        wedge = (
+            per_center.select(
+                F.explode(
+                    F.expr(
+                        "flatten(transform(vs, (x, i) -> "
+                        "transform(slice(vs, i + 2, size(vs) - i - 1), "
+                        "y -> struct(x AS x, y AS y))))"
+                    )
+                ).alias("w")
+            )
+            .groupBy("w.x", "w.y")
+            .agg(F.count(F.lit(1)).alias("n_common"))
+            .filter(F.col("n_common") >= 2)
         )
-        .groupBy("w.x", "w.y")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-        .filter(F.col("n_common") >= 2)
-    )
-    # drop already-adjacent pairs (edges is symmetric; (x, y) has x < y)
-    adj = edges.select(F.col("u").alias("x"), F.col("v").alias("y"))
-    cand = wedge.join(adj, ["x", "y"], "left_anti")
-    du = deg.select(F.col("u").alias("x"), F.col("d").alias("dx"))
-    dv = deg.select(F.col("u").alias("y"), F.col("d").alias("dy"))
-    return (
-        cand.join(du, "x")
-        .join(dv, "y")
-        .select(
-            F.col("x").alias("u"),
-            F.col("y").alias("v"),
-            "n_common",
-            F.expr(
-                "n_common * 10000 div (dx + dy - n_common)"
-            ).alias("jaccard_bp"),
+        # drop already-adjacent pairs (edges is symmetric; (x, y) has x < y)
+        adj = edges.select(F.col("u").alias("x"), F.col("v").alias("y"))
+        cand = wedge.join(adj, ["x", "y"], "left_anti")
+        du = deg.select(F.col("u").alias("x"), F.col("d").alias("dx"))
+        dv = deg.select(F.col("u").alias("y"), F.col("d").alias("dy"))
+        return (
+            cand.join(du, "x")
+            .join(dv, "y")
+            .select(
+                F.col("x").alias("u"),
+                F.col("y").alias("v"),
+                "n_common",
+                F.expr("n_common * 10000 div (dx + dy - n_common)").alias("jaccard_bp"),
+            )
+            .localCheckpoint(eager=True)
         )
-    )

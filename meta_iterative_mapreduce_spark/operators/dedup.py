@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from meta_iterative_mapreduce_spark.cache import owned, persist
 from meta_iterative_mapreduce_spark.io import load_table
 from meta_iterative_mapreduce_spark.registry import register
 
@@ -166,16 +167,18 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
       candidate generation is MinHash/SimHash); use
       q_dedup_near_minhash for recall across length changes.
     """
-    return jaccard_pairs(spark, sf_dir).select(
-        "doc_a", "doc_b", F.round("jaccard", 4).alias("jaccard")
-    )
+    with owned():
+        return jaccard_pairs(spark, sf_dir).select(
+            "doc_a", "doc_b", F.round("jaccard", 4).alias("jaccard")
+        ).localCheckpoint(eager=True)
 
 
 def jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_a, doc_b, jaccard) with the UNROUNDED jaccard double — the
     shared pair builder behind q_dedup_ngram_jaccard (which rounds for
     output hygiene) and q_dedup_components (which thresholds the raw
-    value; one IEEE division of exact ints is engine-deterministic)."""
+    value; one IEEE division of exact ints is engine-deterministic).
+    The token table is persisted in the caller's `owned()` block."""
     d = load_table(spark, sf_dir, "documents")
     toks0 = d.select(
         "doc_id",
@@ -199,7 +202,7 @@ def jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pass — the same call the minhash signature build makes; at 100 TB
     # MEMORY_AND_DISK spills gracefully and is still far cheaper than
     # 4 corpus re-scans.
-    toks = toks0.join(keep_keys, ["token", "lang", "tlen"], "left_semi").persist()
+    toks = persist(toks0.join(keep_keys, ["token", "lang", "tlen"], "left_semi"))
     sizes = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_tok"))
     a = toks.alias("a")
     b = toks.alias("b")
@@ -343,17 +346,13 @@ _SHINGLE_JACCARD_CTE = f"""
 """
 
 
-def shingle_jaccard_pairs(
-    spark: SparkSession, sf_dir: str, caches: list | None = None
-) -> DataFrame:
+def shingle_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_a, doc_b, jaccard) under EXACT word-3-shingle Jaccard with
     the df cutoff — the ground-truth tier the minhash containment
     certification compares against (must mirror _SHINGLE_JACCARD_CTE
     and minhash_signatures' shingle definition exactly). The filtered
-    shingle table is persisted (it feeds sizes + both self-join
-    sides); pass `caches` to receive the persisted DataFrame so the
-    caller can release it once the result is materialized (the cert
-    twin's try/finally) — without it the caller owns cache release."""
+    shingle table is persisted in the caller's `owned()` block (it
+    feeds sizes + both self-join sides)."""
     d = load_table(spark, sf_dir, "documents")
     ex = d.select(
         "doc_id",
@@ -367,9 +366,7 @@ def shingle_jaccard_pairs(
     )
     # persisted: feeds sizes + both self-join sides (same rationale as
     # jaccard_pairs)
-    t = ex.join(keep, "sh", "left_semi").persist()
-    if caches is not None:
-        caches.append(t)
+    t = persist(ex.join(keep, "sh", "left_semi"))
     sizes = t.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     a = t.alias("a")
     b = t.alias("b")
@@ -504,15 +501,9 @@ def q_dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # every downstream reference AND recomputes it for both sides of
     # the self-join (O(64×) work). The signature table is tiny
     # (n_docs × 32 bigints), so caching is the scale-correct plan too.
-    # try/finally + eager 1-row localCheckpoint: the cache is released
-    # before return (VERDICT r14 item 9 — the old lazy form leaked the
-    # persisted signature table into long-lived sessions).
-    sigs = minhash_signatures(d).persist()
-    try:
-        out = near_minhash_summary(sigs).localCheckpoint(eager=True)
-    finally:
-        sigs.unpersist()
-    return out
+    with owned():
+        sigs = persist(minhash_signatures(d))
+        return near_minhash_summary(sigs).localCheckpoint(eager=True)
 
 
 @register(
@@ -548,14 +539,13 @@ def q_dedup_near_minhash_cert(spark: SparkSession, sf_dir: str) -> DataFrame:
     necessarily a code bug. The candidate-pair surface itself stays
     pinned by tests/test_dedup.py."""
     d = load_table(spark, sf_dir, "documents")
-    sigs = minhash_signatures(d).persist()
-    caches: list = []
-    try:
+    with owned():
+        sigs = persist(minhash_signatures(d))
         cands = minhash_band_pairs(sigs).select("doc_a", "doc_b")
-        high = shingle_jaccard_pairs(spark, sf_dir, caches).filter(
+        high = shingle_jaccard_pairs(spark, sf_dir).filter(
             F.col("jaccard") >= _MINHASH_RECALL_J
         )
-        out = (
+        return (
             high.join(
                 cands.withColumn("__hit", F.lit(True)),
                 ["doc_a", "doc_b"],
@@ -570,15 +560,8 @@ def q_dedup_near_minhash_cert(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
             )
             .orderBy("doc_a", "doc_b")
+            .localCheckpoint(eager=True)
         )
-        # materialize before unpersist: the returned DataFrame must not
-        # depend on a cache this function already released
-        out = out.localCheckpoint(eager=True)
-    finally:
-        sigs.unpersist()
-        for c in caches:
-            c.unpersist()
-    return out
 
 
 def band_rows(sigs: DataFrame) -> DataFrame:
@@ -792,8 +775,8 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     import math
 
     d = load_table(spark, sf_dir, "documents")
-    votes = simhash_votes(d).persist()
-    try:
+    with owned():
+        votes = persist(simhash_votes(d))
         fp = votes.select("doc_id", _fingerprint_expr().alias("simhash"))
         # one job: corpus size (drives the sample modulus) + the
         # corpus-wide range flag from the same cached votes
@@ -879,8 +862,6 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .collect()[0]
         )
-    finally:
-        votes.unpersist()
     return spark.createDataFrame(
         [
             (
@@ -900,9 +881,7 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 def simhash_blocked_rows(fp: DataFrame) -> DataFrame:
     """(doc_id, simhash, block_id, block_val): each fingerprint
     exploded into its 4 pigeonhole block keys — the bucket table the
-    Hamming join self-joins. Split out (optimization r15) so callers
-    own the persist/unpersist of the dual-consumed table instead of
-    simhash_hamming_pairs leaking a cache entry per call."""
+    Hamming join self-joins (optimization r15)."""
     block_mask = (1 << _SIMHASH_BLOCK_BITS) - 1
     return fp.select(
         "doc_id",
@@ -921,9 +900,7 @@ def simhash_blocked_rows(fp: DataFrame) -> DataFrame:
 
 
 def simhash_hamming_pairs(
-    fp: DataFrame,
-    max_hamming: int = _SIMHASH_MAX_HAMMING,
-    caches: list | None = None,
+    fp: DataFrame, max_hamming: int = _SIMHASH_MAX_HAMMING
 ) -> DataFrame:
     """EXACT-recall blocked Hamming join over (doc_id, simhash).
 
@@ -940,14 +917,9 @@ def simhash_hamming_pairs(
 
     Requires max_hamming < n_blocks for the pigeonhole guarantee.
     The blocked table feeds both self-join sides, so it is persisted
-    here; pass `caches` to receive the persisted DataFrame for
-    release once the result is materialized (the shingle_jaccard_pairs
-    convention) — the registered queries instead build
-    simhash_blocked_rows themselves under try/finally.
+    in the caller's `owned()` block.
     """
-    blocked = simhash_blocked_rows(fp).persist()
-    if caches is not None:
-        caches.append(blocked)
+    blocked = persist(simhash_blocked_rows(fp))
     return simhash_pairs_from_blocked(blocked, max_hamming)
 
 
@@ -1021,15 +993,10 @@ def q_dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-wide from the same blocked table the join consumes). Empty
     pair sets certify vacuously (coalesce TRUE)."""
     fp = simhash_fingerprints(load_table(spark, sf_dir, "documents"))
-    # blocked feeds both self-join sides AND the corpus-wide head agg;
-    # persist + try/finally so no cache survives the return (VERDICT
-    # r14 item 9).
-    blocked = simhash_blocked_rows(fp).persist()
-    try:
-        out = simhash_pairs_summary(blocked).localCheckpoint(eager=True)
-    finally:
-        blocked.unpersist()
-    return out
+    # blocked feeds both self-join sides AND the corpus-wide head agg
+    with owned():
+        blocked = persist(simhash_blocked_rows(fp))
+        return simhash_pairs_summary(blocked).localCheckpoint(eager=True)
 
 
 def simhash_pairs_summary(blocked: DataFrame) -> DataFrame:
@@ -1117,12 +1084,10 @@ def q_dedup_simhash_pairs_cert(spark: SparkSession, sf_dir: str) -> DataFrame:
     flag and fails the hash. (The full-corpus pair surface remains
     property-tested against brute force in tests/test_dedup.py;
     fingerprint range ⊂ [0, 2^60) is the second flag.)"""
-    fp = (
-        simhash_fingerprints(load_table(spark, sf_dir, "documents"))
-        .persist()
-    )
-    blocked_rows_t = None
-    try:
+    with owned():
+        fp = persist(
+            simhash_fingerprints(load_table(spark, sf_dir, "documents"))
+        )
         in_range = fp.agg(
             F.bool_and(
                 (F.col("simhash") >= 0)
@@ -1132,10 +1097,9 @@ def q_dedup_simhash_pairs_cert(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).collect()[0]
         mod = simhash_cert_mod(int(in_range["n"]))
         sample = fp.filter(F.col("doc_id") % mod == 0)
-        blocked_rows_t = simhash_blocked_rows(sample).persist()
-        blocked = simhash_pairs_from_blocked(blocked_rows_t).select(
-            "doc_a", "doc_b"
-        )
+        blocked = simhash_pairs_from_blocked(
+            persist(simhash_blocked_rows(sample))
+        ).select("doc_a", "doc_b")
         a = sample.alias("a")
         b = sample.alias("b")
         ham = F.bit_count(
@@ -1169,10 +1133,6 @@ def q_dedup_simhash_pairs_cert(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).collect()[0]
         sym_diff = int(row["sym_diff"])
         n_sample = int(row["n_sample"])
-    finally:
-        if blocked_rows_t is not None:
-            blocked_rows_t.unpersist()
-        fp.unpersist()
     return spark.createDataFrame(
         [
             (
@@ -1341,41 +1301,42 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("df") <= _JACCARD_DF_CUTOFF)
         .drop("df")
     )
-    toks = toks0.join(keep, "token", "left_semi").persist()
-    sizes = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_tok"))
-    a, b = toks.alias("a"), toks.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.token") == F.col("b.token"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    sa, sb = sizes.alias("sa"), sizes.alias("sb")
-    scored = (
-        inter.join(sa, F.col("doc_a") == F.col("sa.doc_id"))
-        .join(sb, F.col("doc_b") == F.col("sb.doc_id"))
-        .select(
-            "doc_a",
-            "doc_b",
-            "n_inter",
-            F.floor(
-                F.col("n_inter").cast("double")
-                / F.least("sa.n_tok", "sb.n_tok")
-                * 10000
-                + F.lit(0.5)
+    with owned():
+        toks = persist(toks0.join(keep, "token", "left_semi"))
+        sizes = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_tok"))
+        a, b = toks.alias("a"), toks.alias("b")
+        inter = (
+            a.join(
+                b,
+                (F.col("a.token") == F.col("b.token"))
+                & (F.col("a.doc_id") < F.col("b.doc_id")),
             )
-            .cast("long")
-            .alias("containment_e4"),
+            .groupBy(
+                F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
+            )
+            .agg(F.count(F.lit(1)).alias("n_inter"))
         )
-    )
-    return scored.filter(
-        F.col("containment_e4") >= _CONTAINMENT_THRESHOLD_E4
-    )
+        sa, sb = sizes.alias("sa"), sizes.alias("sb")
+        scored = (
+            inter.join(sa, F.col("doc_a") == F.col("sa.doc_id"))
+            .join(sb, F.col("doc_b") == F.col("sb.doc_id"))
+            .select(
+                "doc_a",
+                "doc_b",
+                "n_inter",
+                F.floor(
+                    F.col("n_inter").cast("double")
+                    / F.least("sa.n_tok", "sb.n_tok")
+                    * 10000
+                    + F.lit(0.5)
+                )
+                .cast("long")
+                .alias("containment_e4"),
+            )
+        )
+        return scored.filter(
+            F.col("containment_e4") >= _CONTAINMENT_THRESHOLD_E4
+        ).localCheckpoint(eager=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1502,15 +1463,12 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = d.filter(F.col("doc_id") % 4 == 0)
     # The batch band table feeds TWO legs of incremental_band_pairs
     # (the left join side and the corpus∪batch union) — persist so the
-    # batch's shingle/signature pass runs once, released before return.
-    new_bands = band_rows(minhash_signatures(batch)).persist()
-    try:
-        out = incremental_summary(d, new_bands, corpus_bands).localCheckpoint(
+    # batch's shingle/signature pass runs once.
+    with owned():
+        new_bands = persist(band_rows(minhash_signatures(batch)))
+        return incremental_summary(d, new_bands, corpus_bands).localCheckpoint(
             eager=True
         )
-    finally:
-        new_bands.unpersist()
-    return out
 
 
 def incremental_summary(
@@ -1611,17 +1569,17 @@ def q_dedup_incremental_cert(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (optimization r14 — was three minhash_signatures pipelines; the
     # certified band-join contract is unchanged because the joins still
     # run on exactly the same signature values).
-    full_sigs = minhash_signatures(ds).persist()
-    base_sigs = full_sigs.filter(F.col("doc_id") % 4 != 0)
-    new_bands = band_rows(
-        full_sigs.filter(F.col("doc_id") % 4 == 0)
-    ).persist()
-    # The pair sets feeding two counts each stay persisted, or every
-    # set-op re-runs the band self-joins (the expensive legs).
-    inc = incremental_band_pairs(new_bands, corpus_bands).persist()
-    base_pairs = minhash_band_pairs(base_sigs).persist()
-    full = minhash_band_pairs(full_sigs)
-    try:
+    with owned():
+        full_sigs = persist(minhash_signatures(ds))
+        base_sigs = full_sigs.filter(F.col("doc_id") % 4 != 0)
+        new_bands = persist(
+            band_rows(full_sigs.filter(F.col("doc_id") % 4 == 0))
+        )
+        # The pair sets feeding two counts each stay persisted, or every
+        # set-op re-runs the band self-joins (the expensive legs).
+        inc = persist(incremental_band_pairs(new_bands, corpus_bands))
+        base_pairs = persist(minhash_band_pairs(base_sigs))
+        full = minhash_band_pairs(full_sigs)
         key = ["doc_a", "doc_b", "jaccard_est"]
         got = base_pairs.select(*key).union(inc.select(*key))
         # multiset equality in ONE pass: tag got rows +1 and full rows
@@ -1654,11 +1612,6 @@ def q_dedup_incremental_cert(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).collect()[0]
         n_base = int(counts["n_base"] or 0)
         n_batch = int(counts["n_batch"] or 0)
-    finally:
-        # ADVICE r13: release the cached signature/band/pair state
-        # instead of letting it accumulate across a full registry run
-        for cached in (new_bands, full_sigs, inc, base_pairs):
-            cached.unpersist()
     return spark.createDataFrame(
         [
             (

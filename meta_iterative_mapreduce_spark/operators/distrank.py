@@ -36,6 +36,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
+from meta_iterative_mapreduce_spark.cache import owned, persist
+
 
 def with_distributed_row_number(
     df: DataFrame,
@@ -71,26 +73,21 @@ def with_distributed_row_number(
         .sortWithinPartitions(*cols)
         .withColumn("_pid", F.spark_partition_id())
     )
-    cached = None
-    if reliable:
-        if df.sparkSession.sparkContext.getCheckpointDir() is None:
-            raise ValueError(
-                "reliable=True requires sparkContext.setCheckpointDir(...) "
-                "pointing at fault-tolerant storage (HDFS/object store) "
-                "before ranking"
-            )
-        cached = part.persist()
-        part = cached.checkpoint(eager=False)
-    else:
-        part = part.localCheckpoint(eager=False)
-    hist = {
-        r["_pid"]: r["cnt"]
-        for r in part.groupBy("_pid").agg(F.count(F.lit(1)).alias("cnt")).collect()
-    }
-    if cached is not None:
-        # checkpoint files were written during the collect's job; the
-        # cache has served its recompute-avoidance purpose.
-        cached.unpersist()
+    if reliable and df.sparkSession.sparkContext.getCheckpointDir() is None:
+        raise ValueError(
+            "reliable=True requires sparkContext.setCheckpointDir(...) "
+            "pointing at fault-tolerant storage (HDFS/object store) "
+            "before ranking"
+        )
+    with owned():
+        if reliable:
+            part = persist(part).checkpoint(eager=False)
+        else:
+            part = part.localCheckpoint(eager=False)
+        hist = {
+            r["_pid"]: r["cnt"]
+            for r in part.groupBy("_pid").agg(F.count(F.lit(1)).alias("cnt")).collect()
+        }
     total = int(sum(hist.values()))
     offsets, acc = {}, 0
     for pid in sorted(hist):

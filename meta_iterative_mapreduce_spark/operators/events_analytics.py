@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from meta_iterative_mapreduce_spark.cache import owned, persist
 from meta_iterative_mapreduce_spark.io import load_table
 from meta_iterative_mapreduce_spark.operators.distrank import (
     with_multi_axis_ntile,
@@ -944,24 +945,25 @@ def q_events_dau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
         # divergent on negative epochs (the repo's documented trap)
         "user_id", F.floor(ts_us("ts") / _1D).cast("long").alias("day")
     )
-    pairs = ev.distinct().persist()
-    dau = pairs.groupBy("day").agg(F.count(F.lit(1)).alias("dau"))
-    wau = (
-        pairs.select(
-            "user_id",
-            F.explode(F.sequence(F.col("day"), F.col("day") + 6)).alias("d0"),
+    with owned():
+        pairs = persist(ev.distinct())
+        dau = pairs.groupBy("day").agg(F.count(F.lit(1)).alias("dau"))
+        wau = (
+            pairs.select(
+                "user_id",
+                F.explode(F.sequence(F.col("day"), F.col("day") + 6)).alias("d0"),
+            )
+            .groupBy("d0")
+            .agg(F.count_distinct("user_id").alias("wau"))
         )
-        .groupBy("d0")
-        .agg(F.count_distinct("user_id").alias("wau"))
-    )
-    return dau.join(wau, dau["day"] == wau["d0"]).select(
-        "day",
-        "dau",
-        "wau",
-        F.floor(F.col("dau") * 10000.0 / F.col("wau") + F.lit(0.5))
-        .cast("long")
-        .alias("stickiness_e4"),
-    )
+        return dau.join(wau, dau["day"] == wau["d0"]).select(
+            "day",
+            "dau",
+            "wau",
+            F.floor(F.col("dau") * 10000.0 / F.col("wau") + F.lit(0.5))
+            .cast("long")
+            .alias("stickiness_e4"),
+        ).localCheckpoint(eager=True)
 
 
 @register(

@@ -40,6 +40,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from meta_iterative_mapreduce_spark.cache import owned, persist
 from meta_iterative_mapreduce_spark.io import load_table
 from meta_iterative_mapreduce_spark.registry import register
 
@@ -254,10 +255,10 @@ def iterative_fit_loop(
     input once; `localCheckpoint` would cut lineage for long loops
     (not needed here since each batch fit reads the same cached df).
     """
-    tagged = df.select(
-        batch.alias("batch"), chunk.alias("chunk"), F.col(x), F.col(y)
-    ).cache()
-    try:
+    with owned():
+        tagged = persist(
+            df.select(batch.alias("batch"), chunk.alias("chunk"), F.col(x), F.col(y))
+        )
         # O(#batches) keys, ordered here as Spark's ascending sort
         # would (NULL first, NaN last) with no range-partitioning job
         batches = sorted(
@@ -299,8 +300,6 @@ def iterative_fit_loop(
             len(batches),
             converged,
         )
-    finally:
-        tagged.unpersist()
 
 
 # ---------------------------------------------------------------------------

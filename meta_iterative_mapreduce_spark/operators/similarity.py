@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from meta_iterative_mapreduce_spark.cache import owned, persist
 from meta_iterative_mapreduce_spark.functions.vectors import (
     dot_const,
     dot_pair,
@@ -97,6 +98,19 @@ def _probe_bucket() -> int:
         if sum(a * b for a, b in zip(_PROBE, p)) > 0:
             bucket |= 1 << j
     return bucket
+
+
+def _lsh_bucketed(e: DataFrame) -> DataFrame:
+    """(vec_id, embedding, bucket, nrm), persisted in the caller's
+    block: the plane dot products run once, not once per join side."""
+    return persist(
+        e.select(
+            "vec_id",
+            "embedding",
+            sign_lsh_bucket(F.col("embedding"), _PLANES).alias("bucket"),
+            l2_norm(F.col("embedding")).alias("nrm"),
+        )
+    )
 
 
 @register(
@@ -235,35 +249,29 @@ def q_sim_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_sim_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-duplicate pairs, the scale path: sign-LSH
     bucket join (same-bucket candidates only — never the n² cross
-    product), exact cosine verification within buckets, threshold 0.4.
-
-    The bucketed projection is persisted so the plane dot products
-    compute once, not once per join side."""
+    product), exact cosine verification within buckets, threshold 0.4."""
     e = load_table(spark, sf_dir, "embeddings")
-    bucketed = e.select(
-        "vec_id",
-        "embedding",
-        sign_lsh_bucket(F.col("embedding"), _PLANES).alias("bucket"),
-        l2_norm(F.col("embedding")).alias("nrm"),
-    ).persist()
-    a, b = bucketed.alias("a"), bucketed.alias("b")
-    cos = dot_pair(F.col("a.embedding"), F.col("b.embedding")) / (
-        F.col("a.nrm") * F.col("b.nrm")
-    )
-    return (
-        a.join(
-            b,
-            (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
+    with owned():
+        bucketed = _lsh_bucketed(e)
+        a, b = bucketed.alias("a"), bucketed.alias("b")
+        cos = dot_pair(F.col("a.embedding"), F.col("b.embedding")) / (
+            F.col("a.nrm") * F.col("b.nrm")
         )
-        .select(
-            F.col("a.vec_id").alias("id_a"),
-            F.col("b.vec_id").alias("id_b"),
-            cos.alias("cos_raw"),
+        return (
+            a.join(
+                b,
+                (F.col("a.bucket") == F.col("b.bucket"))
+                & (F.col("a.vec_id") < F.col("b.vec_id")),
+            )
+            .select(
+                F.col("a.vec_id").alias("id_a"),
+                F.col("b.vec_id").alias("id_b"),
+                cos.alias("cos_raw"),
+            )
+            .filter(F.col("cos_raw") >= 0.4)
+            .select("id_a", "id_b", F.round("cos_raw", 4).alias("cos_sim"))
+            .localCheckpoint(eager=True)
         )
-        .filter(F.col("cos_raw") >= 0.4)
-        .select("id_a", "id_b", F.round("cos_raw", 4).alias("cos_sim"))
-    )
 
 
 @register(
@@ -628,26 +636,23 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     e = load_table(spark, sf_dir, "embeddings")
-    bucketed = e.select(
-        "vec_id",
-        "embedding",
-        sign_lsh_bucket(F.col("embedding"), _PLANES).alias("bucket"),
-        l2_norm(F.col("embedding")).alias("nrm"),
-    ).persist()
-    a, b = bucketed.alias("a"), bucketed.alias("b")
-    cos = dot_pair(F.col("a.embedding"), F.col("b.embedding")) / (
-        F.col("a.nrm") * F.col("b.nrm")
-    )
-    edges = (
-        a.join(
-            b,
-            (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
+    # the labels read only the CC loop's last checkpoint: free the cache
+    with owned():
+        bucketed = _lsh_bucketed(e)
+        a, b = bucketed.alias("a"), bucketed.alias("b")
+        cos = dot_pair(F.col("a.embedding"), F.col("b.embedding")) / (
+            F.col("a.nrm") * F.col("b.nrm")
         )
-        .filter(cos >= _SEMANTIC_THRESHOLD)
-        .select(F.col("a.vec_id").alias("u"), F.col("b.vec_id").alias("v"))
-    )
-    labels = connected_components(edges)
+        edges = (
+            a.join(
+                b,
+                (F.col("a.bucket") == F.col("b.bucket"))
+                & (F.col("a.vec_id") < F.col("b.vec_id")),
+            )
+            .filter(cos >= _SEMANTIC_THRESHOLD)
+            .select(F.col("a.vec_id").alias("u"), F.col("b.vec_id").alias("v"))
+        )
+        labels = connected_components(edges)
     return e.select("vec_id").join(
         labels, F.col("vec_id") == F.col("node"), "left"
     ).select(

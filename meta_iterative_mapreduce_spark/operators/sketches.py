@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from meta_iterative_mapreduce_spark.cache import owned, persist
 from meta_iterative_mapreduce_spark.io import load_table
 from meta_iterative_mapreduce_spark.registry import register
 
@@ -101,8 +102,8 @@ def q_sketch_count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_total = toks.count()
     # tiny (≤ depth×width rows) but consumed twice: once for the
     # conservation audit, once broadcast into the estimate join
-    sketch = cms_build(toks).persist()
-    try:
+    with owned():
+        sketch = persist(cms_build(toks))
         depth_stats = (
             sketch.groupBy("d")
             .agg(
@@ -119,8 +120,6 @@ def q_sketch_count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .collect()[0]
         )
-    finally:
-        sketch.unpersist()
     depths_ok = len(depth_stats) == _DEPTH and all(
         r["total"] == n_total for r in depth_stats
     )

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from meta_iterative_mapreduce_spark.cache import checkpoint, owned, release
 from meta_iterative_mapreduce_spark.io import load_table
 from meta_iterative_mapreduce_spark.registry import register
 
@@ -685,47 +686,45 @@ def bpe_learn(words: DataFrame, n_rounds: int = _BPE_ROUNDS) -> list[tuple]:
     # 6.2 s -> 1.5 s at sf0.1 with identical merges). The vocab table
     # is tiny (|vocab| rows), so per-round materialization is the
     # scale-correct plan too, and the checkpoint cuts the lineage the
-    # old cache+fold form grew per round.
-    syms = words.select(
-        "freq", F.split("word", "").alias("symbols")
-    ).localCheckpoint(eager=True)
-    merges: list[tuple] = []
-    for r in range(1, n_rounds + 1):
-        pairs = (
-            syms.select(
-                "freq",
-                F.explode(
-                    F.zip_with(
-                        F.col("symbols"),
-                        F.slice(
+    # old cache+fold form grew per round. Each superseded round's
+    # checkpoint is released as soon as the next exists.
+    with owned():
+        syms = checkpoint(words.select("freq", F.split("word", "").alias("symbols")))
+        merges: list[tuple] = []
+        for r in range(1, n_rounds + 1):
+            pairs = (
+                syms.select(
+                    "freq",
+                    F.explode(
+                        F.zip_with(
                             F.col("symbols"),
-                            2,
-                            F.greatest(F.size("symbols") - 1, F.lit(0)),
-                        ),
-                        lambda a, b: F.struct(a.alias("l"), b.alias("r")),
-                    )
-                ).alias("p"),
+                            F.slice(
+                                F.col("symbols"),
+                                2,
+                                F.greatest(F.size("symbols") - 1, F.lit(0)),
+                            ),
+                            lambda a, b: F.struct(a.alias("l"), b.alias("r")),
+                        )
+                    ).alias("p"),
+                )
+                .filter(F.col("p.r").isNotNull())  # zip_with pads the tail
+                .groupBy("p.l", "p.r")
+                .agg(F.sum("freq").alias("pf"))
+                .orderBy(F.col("pf").desc(), F.col("l").asc(), F.col("r").asc())
+                .limit(1)
+                .collect()
             )
-            .filter(F.col("p.r").isNotNull())  # zip_with pads the tail
-            .groupBy("p.l", "p.r")
-            .agg(F.sum("freq").alias("pf"))
-            .orderBy(F.col("pf").desc(), F.col("l").asc(), F.col("r").asc())
-            .limit(1)
-            .collect()
-        )
-        if not pairs:
-            break
-        row = pairs[0]
-        merges.append(
-            (r, row["l"], row["r"], row["l"] + row["r"], int(row["pf"]))
-        )
-        if r < n_rounds:
-            syms = syms.select(
-                "freq",
-                _merge_pair(
-                    F.col("symbols"), row["l"], row["r"]
-                ).alias("symbols"),
-            ).localCheckpoint(eager=True)
+            if not pairs:
+                break
+            row = pairs[0]
+            merges.append(
+                (r, row["l"], row["r"], row["l"] + row["r"], int(row["pf"]))
+            )
+            if r < n_rounds:
+                merged = _merge_pair(F.col("symbols"), row["l"], row["r"])
+                new = checkpoint(syms.select("freq", merged.alias("symbols")))
+                release(syms)
+                syms = new
     return merges
 
 

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from meta_iterative_mapreduce_spark.cache import owned
 from meta_iterative_mapreduce_spark.io import load_table
 from meta_iterative_mapreduce_spark.operators.dedup import (
     _JACCARD_PAIRS_CTE,
@@ -47,22 +48,17 @@ def q_cte_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle — and the fixpoint it computes cross-checks the
     DataFrame-loop connected components (q_dedup_components) from a
     third, engine-native direction."""
-    # persist: the recursive executor joins this view once per
-    # recursion level — unpersisted, each level re-runs the whole
-    # token-explode pair pipeline
-    pairs = (
-        jaccard_pairs(spark, sf_dir)
-        .where(F.col("jaccard") >= 0.4)
-        .select("doc_a", "doc_b")
-        .persist()
-    )
-    # populate the cache DETERMINISTICALLY before the recursive
-    # executor fans out over the view: the recursion's per-level scans
-    # otherwise race to compute the unpopulated cache concurrently and
-    # can re-run the whole token-explode pair pipeline per level
-    # (measured 1.9 s typical but 13.2 s on a bad race at sf0.1 —
-    # the q_graph_triangles fix, VERDICT r8 item 7, applied here)
-    pairs.count()
+    # eager checkpoint: the recursive executor joins this view once per
+    # level, and a lazy source re-runs the token-explode pair pipeline
+    # per level or races to compute it (1.9 s typical, 13.2 s on a bad
+    # race at sf0.1 — the q_graph_triangles fix, VERDICT r8 item 7)
+    with owned():
+        pairs = (
+            jaccard_pairs(spark, sf_dir)
+            .where(F.col("jaccard") >= 0.4)
+            .select("doc_a", "doc_b")
+            .localCheckpoint(eager=True)
+        )
     pairs.createOrReplaceTempView("mimr_pair_edges")
     return spark.sql(
         """

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from meta_iterative_mapreduce_spark.cache import owned, persist
 from meta_iterative_mapreduce_spark.io import load_table
 from meta_iterative_mapreduce_spark.registry import register
 
@@ -292,46 +293,47 @@ def q_tpch_q21_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("o_orderstatus") == "F")
         .select("o_orderkey", "o_orderdate")
     )
-    lo = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .select(
-            "l_orderkey",
-            "l_suppkey",
-            # + INTERVAL (not date_add): keeps any time-of-day component,
-            # exactly matching the oracle's o_orderdate + INTERVAL 90 DAY
-            (
-                F.col("l_shipdate")
-                > F.col("o_orderdate") + F.expr("INTERVAL 90 DAYS")
-            ).alias("late"),
+    with owned():
+        lo = persist(  # feeds l1, the semi arm, and the anti arm
+            li.join(o, li.l_orderkey == o.o_orderkey)
+            .select(
+                "l_orderkey",
+                "l_suppkey",
+                # + INTERVAL (not date_add): keeps any time-of-day component,
+                # exactly matching the oracle's o_orderdate + INTERVAL 90 DAY
+                (
+                    F.col("l_shipdate")
+                    > F.col("o_orderdate") + F.expr("INTERVAL 90 DAYS")
+                ).alias("late"),
+            )
         )
-        .persist()  # feeds l1, the semi arm, and the anti arm
-    )
-    l1 = lo.filter(F.col("late")).select("l_orderkey", "l_suppkey")
-    others = lo.select(
-        F.col("l_orderkey").alias("o_k"), F.col("l_suppkey").alias("o_s")
-    )
-    l1_semi = l1.join(
-        others,
-        (F.col("l_orderkey") == F.col("o_k"))
-        & (F.col("l_suppkey") != F.col("o_s")),
-        "left_semi",
-    )
-    others_late = lo.filter(F.col("late")).select(
-        F.col("l_orderkey").alias("a_k"), F.col("l_suppkey").alias("a_s")
-    )
-    l1_final = l1_semi.join(
-        others_late,
-        (F.col("l_orderkey") == F.col("a_k"))
-        & (F.col("l_suppkey") != F.col("a_s")),
-        "left_anti",
-    )
-    return (
-        l1_final.join(s, l1_final.l_suppkey == s.s_suppkey)
-        .groupBy("s_suppkey", "s_name")
-        .agg(F.count(F.lit(1)).alias("numwait"))
-        .orderBy(F.desc("numwait"), "s_suppkey")
-        .limit(100)
-    )
+        l1 = lo.filter(F.col("late")).select("l_orderkey", "l_suppkey")
+        others = lo.select(
+            F.col("l_orderkey").alias("o_k"), F.col("l_suppkey").alias("o_s")
+        )
+        l1_semi = l1.join(
+            others,
+            (F.col("l_orderkey") == F.col("o_k"))
+            & (F.col("l_suppkey") != F.col("o_s")),
+            "left_semi",
+        )
+        others_late = lo.filter(F.col("late")).select(
+            F.col("l_orderkey").alias("a_k"), F.col("l_suppkey").alias("a_s")
+        )
+        l1_final = l1_semi.join(
+            others_late,
+            (F.col("l_orderkey") == F.col("a_k"))
+            & (F.col("l_suppkey") != F.col("a_s")),
+            "left_anti",
+        )
+        return (
+            l1_final.join(s, l1_final.l_suppkey == s.s_suppkey)
+            .groupBy("s_suppkey", "s_name")
+            .agg(F.count(F.lit(1)).alias("numwait"))
+            .orderBy(F.desc("numwait"), "s_suppkey")
+            .limit(100)
+            .localCheckpoint(eager=True)
+        )
 
 
 @register(

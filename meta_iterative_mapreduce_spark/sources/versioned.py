@@ -65,6 +65,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
+from meta_iterative_mapreduce_spark.cache import owned, persist
+
 _MANIFEST_DIR = "_manifests"
 _DATA_DIR = "data"
 
@@ -2592,15 +2594,13 @@ def delete_where(
         # consume cached positions. (The r10 shape recomputed this
         # scan inside a coalesce(1) — one serial task re-reading every
         # candidate file on a wide DELETE.)
-        matches = (
-            tagged.filter(cond)
-            .select(
-                F.col("__file").alias("file"),
-                F.col("__row_index").alias("row_index"),
+        with owned():
+            matches = persist(
+                tagged.filter(cond).select(
+                    F.col("__file").alias("file"),
+                    F.col("__row_index").alias("row_index"),
+                )
             )
-            .persist()
-        )
-        try:
             n_del = matches.count()
             amm = _prune_may_match(m, prune)
             if n_del == 0:
@@ -2611,8 +2611,6 @@ def delete_where(
             new_dv, dv_map = _write_dv_files(
                 matches, table, m["version"] + 1
             )
-        finally:
-            matches.unpersist()
         return _commit_dv(
             spark, table, m, [], new_dv, -n_del, added_may_match=amm,
             dv_map=dv_map, operation="DELETE",
@@ -2703,8 +2701,8 @@ def update_where(
     cond = F.expr(predicate)
     if mode == "dv":
         amm = _prune_may_match(m, prune)
-        matched = tagged.filter(cond).cache()
-        try:
+        with owned():
+            matched = persist(tagged.filter(cond))
             n_upd = matched.count()
             if n_upd == 0:
                 return _commit_rewrite(
@@ -2743,8 +2741,6 @@ def update_where(
                 table,
                 v,
             )
-        finally:
-            matched.unpersist()
         # every masked row reappears updated: n_rows unchanged
         return _commit_dv(
             spark, table, m, new_files, new_dv, 0, added_may_match=amm,
@@ -3012,39 +3008,36 @@ def merge_version(
         return df.select(*cols)
 
     if mode == "dv":
-        mask_pos = tagged.join(keys, key, "left_semi").select(
-            F.col("__file").alias("file"),
-            F.col("__row_index").alias("row_index"),
-        )
-        appended = updates
-        bysrc = None
-        if not_matched_by_source is not None:
-            # live target rows absent from the batch, clause-filtered;
-            # DVs already applied by _read_files_logical so a masked
-            # row can't be re-deleted or re-written
-            bysrc = (
-                tagged.join(keys, key, "left_anti")
-                .filter(bys_cond)
-                .cache()
+        with owned():
+            mask_pos = tagged.join(keys, key, "left_semi").select(
+                F.col("__file").alias("file"),
+                F.col("__row_index").alias("row_index"),
             )
-            mask_pos = mask_pos.unionByName(
-                bysrc.select(
-                    F.col("__file").alias("file"),
-                    F.col("__row_index").alias("row_index"),
+            appended = updates
+            if not_matched_by_source is not None:
+                # live target rows absent from the batch, clause-filtered;
+                # DVs already applied by _read_files_logical so a masked
+                # row can't be re-deleted or re-written
+                bysrc = persist(
+                    tagged.join(keys, key, "left_anti").filter(bys_cond)
                 )
-            )
-            if isinstance(not_matched_by_source, dict):
-                # update form: mask the old position AND append the
-                # rewritten image (position-delete + insert, the
-                # Iceberg v2 update shape)
-                rewritten = _bys_set_projection(
-                    bysrc.drop("__file", "__row_index")
+                mask_pos = mask_pos.unionByName(
+                    bysrc.select(
+                        F.col("__file").alias("file"),
+                        F.col("__row_index").alias("row_index"),
+                    )
                 )
-                appended = updates.unionByName(
-                    rewritten, allowMissingColumns=schema_evo is not None
-                ).select(*target_cols)
-        matched = mask_pos.cache()
-        try:
+                if isinstance(not_matched_by_source, dict):
+                    # update form: mask the old position AND append the
+                    # rewritten image (position-delete + insert, the
+                    # Iceberg v2 update shape)
+                    rewritten = _bys_set_projection(
+                        bysrc.drop("__file", "__row_index")
+                    )
+                    appended = updates.unionByName(
+                        rewritten, allowMissingColumns=schema_evo is not None
+                    ).select(*target_cols)
+            matched = persist(mask_pos)
             n_masked = matched.count()
             n_app = appended.count()
             if n_masked == 0 and n_app == 0:
@@ -3082,10 +3075,6 @@ def merge_version(
             dv_map: dict[str, list[str]] = {}
             if n_masked:
                 new_dv, dv_map = _write_dv_files(matched, table, v)
-        finally:
-            matched.unpersist()
-            if bysrc is not None:
-                bysrc.unpersist()
         return _commit_dv(
             spark,
             table,

@@ -9,6 +9,7 @@ import random
 
 from pyspark.sql import functions as F
 
+from meta_iterative_mapreduce_spark.cache import owned
 from meta_iterative_mapreduce_spark.operators.dedup import (
     _SIMHASH_BITS,
     _SIMHASH_MAX_HAMMING,
@@ -52,10 +53,8 @@ def test_simhash_pairs_exact_recall_synthetic(spark):
 
     expected = _brute_force_pairs(fps, _SIMHASH_MAX_HAMMING)
     df = spark.createDataFrame(fps, "doc_id long, simhash long")
-    got = {
-        (r.doc_a, r.doc_b)
-        for r in simhash_hamming_pairs(df).collect()
-    }
+    with owned():
+        got = {(r.doc_a, r.doc_b) for r in simhash_hamming_pairs(df).collect()}
     assert got == expected
     assert expected, "fixture must exercise at least one matching pair"
 
@@ -70,10 +69,8 @@ def test_simhash_pairs_exact_recall_on_documents(spark, sf_dir):
     fp_df = simhash_fingerprints(load_table(spark, sf_dir, "documents"))
     fps = [(r.doc_id, r.simhash) for r in fp_df.collect()]
     expected = _brute_force_pairs(fps, _SIMHASH_MAX_HAMMING)
-    got = {
-        (r.doc_a, r.doc_b)
-        for r in simhash_hamming_pairs(fp_df).collect()
-    }
+    with owned():
+        got = {(r.doc_a, r.doc_b) for r in simhash_hamming_pairs(fp_df).collect()}
     assert got == expected
     cert = q_dedup_simhash_pairs_cert(spark, sf_dir).collect()[0]
     assert cert["blocking_exact_on_sample"] is True
@@ -113,7 +110,9 @@ def test_simhash_mutation_certification_flags(spark, sf_dir):
 def test_simhash_pairs_hamming_column_is_true_distance(spark):
     fps = [(1, 0b1011), (2, 0b1010), (3, 0b1011 ^ (1 << (_SIMHASH_BITS - 1)))]
     df = spark.createDataFrame(fps, "doc_id long, simhash long")
-    rows = {(r.doc_a, r.doc_b): r.hamming for r in simhash_hamming_pairs(df).collect()}
+    with owned():
+        pairs = simhash_hamming_pairs(df).collect()
+    rows = {(r.doc_a, r.doc_b): r.hamming for r in pairs}
     assert rows[(1, 2)] == 1
     assert rows[(1, 3)] == 1
     assert rows[(2, 3)] == 2

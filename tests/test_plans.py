@@ -272,21 +272,34 @@ def test_mode_and_distribution_single_key_exchange(spark, sf_dir):
 def test_graph_iteratives_reuse_cached_subtrees(spark, sf_dir):
     """PageRank and triangle counting re-read their edge subtree many
     times (3 iterations x 3 joins; 3 join legs): every re-read must be
-    an InMemoryTableScan of the persisted edge/degree tables, never a
-    re-inlined lineitem self-join, and the whole pipeline stays
-    JVM-side."""
-    qs = registry.queries()
-    for name, min_scans in (("q_graph_pagerank", 6), ("q_graph_triangles", 3)):
-        plan = _plan(qs[name](spark, sf_dir))
-        assert plan.count("InMemoryTableScan") >= min_scans, name
-        # no Python evaluation outside cached-plan descriptions
-        top = [
-            line
-            for line in plan.splitlines()
-            if "InMemoryRelation" not in line
-        ]
-        assert not any("Python" in line for line in top), name
-        spark.catalog.clearCache()
+    a scan of the persisted edge/degree tables or of the checkpointed
+    orientation, never a re-inlined lineitem self-join, and the whole
+    pipeline stays JVM-side. (The registered queries return eager
+    checkpoints, so the plans are taken from the operators.)"""
+    from meta_iterative_mapreduce_spark.cache import owned, persist
+    from meta_iterative_mapreduce_spark.operators.components import (
+        copurchase_edges,
+        pagerank,
+        triangle_stats,
+    )
+
+    with owned():
+        edges = copurchase_edges(spark, sf_dir)
+        ranks, _ = pagerank(edges, n_iter=3)
+        tri = triangle_stats(persist(edges.filter(F.col("u") < F.col("v"))))
+        for name, plan, scan, min_scans in (
+            ("pagerank", _plan(ranks), "InMemoryTableScan", 6),
+            ("triangles", _plan(tri), "Scan ExistingRDD", 3),
+        ):
+            assert plan.count(scan) >= min_scans, name
+            # no Python evaluation outside cached-plan descriptions
+            top = [
+                line
+                for line in plan.splitlines()
+                if "InMemoryRelation" not in line
+            ]
+            assert not any("Python" in line for line in top), name
+        assert "Scan parquet" not in _plan(tri)
 
 
 def test_tpch_q1_single_exchange(spark, sf_dir):

@@ -37,6 +37,25 @@ def _run(spark, table, staging, ckpt, **opts):
     return n["batches"]
 
 
+def _bid_sink(staging, batches=None):
+    """foreachBatch sink idempotent per batch id: each batch overwrites
+    `staging/bid=<id>`, and `batches` holds one row count per batch id.
+    A stop that lands after the write but before Spark commits the
+    batch makes the restart replay that same batch (foreachBatch is
+    at-least-once); the replay replaces its own directory and count,
+    while a re-emit of a COMMITTED batch's rows arrives under a new id
+    and still counts twice."""
+    counts = {}
+
+    def sink(bdf, bid):
+        bdf.write.mode("overwrite").parquet(os.path.join(staging, f"bid={bid}"))
+        if batches is not None:
+            counts[bid] = bdf.count()  # count AFTER the write is durable
+            batches[:] = [counts[b] for b in sorted(counts)]
+
+    return sink
+
+
 def test_stream_source_exactly_once_across_restarts(spark, tmp_path):
     """Three commits consumed over two separate runs sharing one
     checkpoint: every row arrives exactly once, a metadata-only commit
@@ -526,17 +545,13 @@ def test_max_files_per_trigger_paces_live_appends(spark, tmp_path):
     staging = str(tmp_path / "out")
     batches = []
 
-    def sink(bdf, bid):
-        bdf.write.mode("append").parquet(staging)
-        batches.append(bdf.count())  # count AFTER the write is durable
-
     from meta_iterative_mapreduce_spark.streaming.table_source import (
         stream_changes,
     )
 
     q = (
         stream_changes(spark, table, max_files_per_trigger=2)
-        .writeStream.foreachBatch(sink)
+        .writeStream.foreachBatch(_bid_sink(staging, batches))
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(processingTime="1 seconds")
         .start()
@@ -583,15 +598,9 @@ def test_starting_version_skips_snapshot(spark, tmp_path):
     assert got.agg(F.min("k")).collect()[0][0] == 40
     # CDC: same subscription point, rows arrive as inserts from v2 on
     staging2, ckpt2 = str(tmp_path / "out2"), str(tmp_path / "ck2")
-    n = {"b": 0}
-
-    def sink(bdf, bid):
-        bdf.write.mode("append").parquet(staging2)
-        n["b"] += 1
-
     q = (
         stream_cdc(spark, table, "k", starting_version=3)
-        .writeStream.foreachBatch(sink)
+        .writeStream.foreachBatch(_bid_sink(staging2))
         .option("checkpointLocation", ckpt2)
         .trigger(availableNow=True)
         .start()
@@ -666,15 +675,7 @@ def test_paced_restart_resumes_from_partial_offset(spark, tmp_path):
     V.write_version(df.filter("k < 20").coalesce(1), table)  # v1: 1 file
     staging, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
     batches = []
-
-    def sink(bdf, bid):
-        # idempotent per batch id: a stop that lands after the write
-        # but before Spark commits the batch makes the restart replay
-        # that same batch (foreachBatch is at-least-once); a replay
-        # overwrites its own directory, while a re-emit of files from
-        # a COMMITTED batch arrives under a new id and still counts twice
-        bdf.write.mode("overwrite").parquet(os.path.join(staging, f"bid={bid}"))
-        batches.append(bdf.count())
+    sink = _bid_sink(staging, batches)
 
     from meta_iterative_mapreduce_spark.streaming.table_source import (
         stream_changes,
@@ -819,9 +820,7 @@ def test_starting_timestamp_resolves_to_first_version_at_or_after(
         .option("path", table)
         .option("startingtimestamp", "1500")
         .load()
-        .writeStream.foreachBatch(
-            lambda bdf, bid: bdf.write.mode("append").parquet(staging)
-        )
+        .writeStream.foreachBatch(_bid_sink(staging))
         .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
         .start()
@@ -838,8 +837,8 @@ def test_starting_timestamp_resolves_to_first_version_at_or_after(
 
 def _paced_drain(spark, table, staging, ckpt, batches, deadline_s=120, **kw):
     """Run a processingTime-paced stream until the staging dir holds
-    every table row (or the deadline passes), appending per-batch row
-    counts to `batches`."""
+    every table row (or the deadline passes), recording one row count
+    per batch id in `batches`."""
     import time
 
     from meta_iterative_mapreduce_spark.streaming.table_source import (
@@ -853,14 +852,9 @@ def _paced_drain(spark, table, staging, ckpt, batches, deadline_s=120, **kw):
         else 0
     )
     want = total - already
-
-    def sink(bdf, bid):
-        bdf.write.mode("append").parquet(staging)
-        batches.append(bdf.count())
-
     q = (
         stream_changes(spark, table, **kw)
-        .writeStream.foreachBatch(sink)
+        .writeStream.foreachBatch(_bid_sink(staging, batches))
         .option("checkpointLocation", ckpt)
         .trigger(processingTime="1 seconds")
         .start()
@@ -1033,9 +1027,7 @@ def test_drain_available_now_multi_batch_bounded_restart(spark, tmp_path):
                 max_files_per_trigger=2,
                 checkpoint=ckpt,
             )
-            .writeStream.foreachBatch(
-                lambda bdf, bid: bdf.write.mode("append").parquet(staging)
-            )
+            .writeStream.foreachBatch(_bid_sink(staging))
             .option("checkpointLocation", ckpt)
         )
 

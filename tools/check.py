@@ -4,6 +4,7 @@ Runs every registered query on Spark and its oracle SQL on DuckDB at a
 given sf dir, then compares row count, sorted column names, and values
 (columns sorted by name, rows sorted, exact match after the queries'
 own ROUND(...,4) hygiene; tiny float tolerance report as diagnostics).
+A query that leaves anything in the session cache is a LEAK failure.
 
 Usage:  python tools/check.py [sf_dir] [query ...]
 """
@@ -105,11 +106,15 @@ def main() -> int:
         try:
             sdf = fn(spark, sf_dir)
             spdf = sdf.toPandas()
-            # drop per-query persisted subtrees so caches don't pile up
-            # (and skew timings) across the shared session
-            spark.catalog.clearCache()
         except Exception:
             print(f"FAIL  {name}: spark error\n{traceback.format_exc()}")
+            n_fail += 1
+            continue
+        # a query must release every cache it made: a leftover would
+        # pile up (and skew timings) across the shared session
+        if not spark._jsparkSession.sharedState().cacheManager().isEmpty():
+            print(f"LEAK  {name}: the session cache is not empty after the query")
+            spark.catalog.clearCache()
             n_fail += 1
             continue
         if name not in oracles:

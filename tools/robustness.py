@@ -37,7 +37,7 @@ def main() -> int:
             cmd = [sys.executable, os.path.join(REPO, "tools", "check.py"), sf_dir, *queries]
             print(f"=== {cfg_name} @ {sf_dir}", flush=True)
             proc = subprocess.run(cmd, env=env, capture_output=True, text=True)
-            tail = [l for l in proc.stdout.splitlines() if l.startswith(("PASS", "FAIL", "ROWS")) or " fail," in l]
+            tail = [l for l in proc.stdout.splitlines() if l.startswith(("PASS", "FAIL", "ROWS", "LEAK")) or " fail," in l]
             for line in tail:
                 print(" ", line)
             if proc.returncode != 0:

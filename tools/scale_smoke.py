@@ -105,6 +105,7 @@ def main() -> None:
     assert n_comp == expected_comp, (n_comp, expected_comp)
 
     # --- simhash pigeonhole pair join on 2M synthetic fingerprints ---
+    from meta_iterative_mapreduce_spark.cache import owned
     from meta_iterative_mapreduce_spark.operators.dedup import (
         _SIMHASH_MASK,
         simhash_hamming_pairs,
@@ -123,7 +124,8 @@ def main() -> None:
         .alias("simhash"),
     )
     t0 = time.time()
-    n_pairs = simhash_hamming_pairs(fp).count()
+    with owned():
+        n_pairs = simhash_hamming_pairs(fp).count()
     print(
         f"simhash_hamming_pairs over {n_docs:,} fingerprints: "
         f"{time.time()-t0:.1f}s -> {n_pairs:,} pairs"
