@@ -52,6 +52,31 @@ LATER column re-using the dropped logical name gets a fresh id and a
 fresh physical name, so it can never resurrect the dropped data).
 Readers translate physical→logical per the manifest of the version
 being read, so time travel shows each version under its own names.
+
+One commit loop (Delta/Iceberg optimistic concurrency): every commit
+builds its manifest from its parent with `_carry` — each layout key
+(schema, column mapping, partition spec, constraints, bloom index,
+deletion vectors) carries unless the verb changes it — and every
+writer that stages files publishes through `_publish`, which calls
+the put-if-absent `_commit`. Of two racing writers exactly one takes
+a version number. The loser first checks the head's batch-id ledger:
+a batch the winner already committed is skipped. Otherwise the
+commit's own test decides whether to rebase onto the head:
+
+- appends (append_version, versioned_batch_sink) always rebase,
+  reusing their files unless the head changed the physical layout
+  they were written under;
+- copy-on-write and merge-on-read DML (_commit_rewrite, _commit_dv)
+  rebase only when no interleaved commit removed a file they rewrite
+  or mask, added a file their predicate may match, masked the rows
+  they rewrite (DV commits: the same rows), or changed the layout —
+  otherwise CommitConflict tells the caller to re-run;
+- snapshot writes never rebase.
+
+A commit rebases at most _COMMIT_RETRIES times, and any failure
+deletes the files the transaction wrote before it propagates.
+Metadata-only verbs write no files and call _commit once: losing the
+race raises VersionTaken.
 """
 
 from __future__ import annotations
@@ -208,6 +233,11 @@ def versions(table: str) -> list[int]:
     return sorted(out)
 
 
+class VersionTaken(ValueError):
+    """_commit lost the put-if-absent race: another writer published
+    that version number first."""
+
+
 def _commit(
     table: str, version: int, files: list[str], n_rows: int, **extra
 ) -> None:
@@ -261,7 +291,7 @@ def _commit(
     try:
         os.link(tmp, final)  # atomic put-if-absent: EEXIST if committed
     except FileExistsError:
-        raise ValueError(f"version {version} already committed") from None
+        raise VersionTaken(f"version {version} already committed") from None
     except OSError as exc:  # pragma: no cover - filesystem-dependent
         raise OSError(
             f"versioned table at {table!r} needs a filesystem with hard "
@@ -831,33 +861,6 @@ def _bloom_probe_ok(m: dict, logical_col: str, value) -> bool:
     return fam is not None and _probe_family(value) == fam
 
 
-def _bloom_carry(
-    prev: dict, files: list[str], bloom_cols: list[str] | None = None
-) -> dict:
-    """Manifest extras carrying the bloom index through a commit that
-    does not write data files (constraints, rename/drop, DV deletes):
-    the declared columns plus each retained file's bitsets. Omitting
-    this silently ERASES the index — and every later append inherits
-    the empty bloom_cols and stops building blooms (ADVICE r9, the
-    same carry class as partition_by). `bloom_cols` overrides the
-    declared list for rename/drop commits; entries for files no longer
-    referenced are dropped."""
-    bcols = (
-        list(prev.get("bloom_cols", [])) if bloom_cols is None else bloom_cols
-    )
-    if not bcols:
-        return {}
-    live = set(files)
-    return {
-        "bloom_cols": bcols,
-        "file_blooms": {
-            f: b
-            for f, b in prev.get("file_blooms", {}).items()
-            if f in live
-        },
-    }
-
-
 def _file_may_match(
     stats: dict | None, col: str, op: str, value
 ) -> bool:
@@ -948,28 +951,13 @@ def add_constraint(
         f"existing data of {table}",
     )
     cons[name] = sql_expr
-    mapping, retired, max_id = _mapping_state(m, m["schema"])
     v = m["version"] + 1
     _commit(
         table,
         v,
         m["files"],
         m["n_rows"],
-        schema=m["schema"],
-        column_mapping=mapping,
-        retired_physical=retired,
-        max_column_id=max_id,
-        file_stats=m.get("file_stats", {}),
-        added=[],
-        removed=[],
-        **_dv_carry(m),
-        constraints=cons,
-        **(
-            {"partition_by": list(m["partition_by"])}
-            if m.get("partition_by")
-            else {}
-        ),
-        **_bloom_carry(m, m["files"]),
+        **_carry(table, m, m["files"], constraints=cons),
         operation="ADD CONSTRAINT",
     )
     return v
@@ -982,28 +970,13 @@ def drop_constraint(table: str, name: str) -> int:
     if name not in cons:
         raise ValueError(f"no constraint {name!r} (have {sorted(cons)})")
     del cons[name]
-    mapping, retired, max_id = _mapping_state(m, m["schema"])
     v = m["version"] + 1
     _commit(
         table,
         v,
         m["files"],
         m["n_rows"],
-        schema=m["schema"],
-        column_mapping=mapping,
-        retired_physical=retired,
-        max_column_id=max_id,
-        file_stats=m.get("file_stats", {}),
-        added=[],
-        removed=[],
-        **_dv_carry(m),
-        constraints=cons,
-        **(
-            {"partition_by": list(m["partition_by"])}
-            if m.get("partition_by")
-            else {}
-        ),
-        **_bloom_carry(m, m["files"]),
+        **_carry(table, m, m["files"], constraints=cons),
         operation="DROP CONSTRAINT",
     )
     return v
@@ -1304,74 +1277,61 @@ def write_version(
     skipping. Readers restore partition columns from the path; DML
     rewrites materialize them physically — both shapes coexist in one
     table."""
-    vs = versions(table)
-    v = (vs[-1] + 1) if vs else 1
+    prev = _head(table)
     schema = df.schema.jsonValue()
     mapping, retired, max_id = _mapping_state(None, schema)
-    prev_files = (
-        manifest_info(table, vs[-1])["files"] if vs else []
-    )
-    cons = (
-        dict(manifest_info(table, vs[-1]).get("constraints", {})) if vs else {}
-    )
+    cons = dict(prev.get("constraints", {})) if prev else {}
     if cons:
         _check_constraints(df, cons, f"snapshot write to {table}")
-    pby = [partition_by] if isinstance(partition_by, str) else partition_by
+    pby = [partition_by] if isinstance(partition_by, str) else (partition_by or [])
     types = {f["name"]: f["type"] for f in schema["fields"]}
-    if pby:
-        for c in pby:
-            _validate_pspec(c, types)
+    for c in pby:
+        _validate_pspec(c, types)
     blooms = [bloom_cols] if isinstance(bloom_cols, str) else (bloom_cols or [])
-    btypes = {f["name"]: f["type"] for f in schema["fields"]}
     for c in blooms:
-        if c not in btypes:
+        if c not in types:
             raise ValueError(f"bloom column {c!r} not in schema")
-        if btypes[c] not in _BLOOMABLE_TYPES:
+        if types[c] not in _BLOOMABLE_TYPES:
             raise ValueError(
-                f"bloom column {c!r} has type {btypes[c]!r}; only "
+                f"bloom column {c!r} has type {types[c]!r}; only "
                 f"{sorted(_BLOOMABLE_TYPES)} canonicalize safely (a "
                 "float/decimal bloom can false-negative and drop rows)"
             )
-    if pby:
-        dfw, path_cols = _with_pspec_cols(df, pby, {}, types)
-        files = _write_data_files(dfw, table, v, path_cols)
-    else:
-        files = _write_data_files(df, table, v, None)
-    stats = _collect_file_stats(table, files)
-    if pby:
-        pstats = _pspec_stats(files, pby, {}, types)
-        stats = {
-            f: {**stats.get(f, {}), **pstats.get(f, {})} for f in files
-        }
-    _commit(
-        table,
-        v,
-        files,
-        df.count(),
-        schema=schema,
-        column_mapping=mapping,
-        retired_physical=retired,
-        max_column_id=max_id,
-        file_stats=stats,
-        added=files,
-        removed=prev_files,
-        **({"partition_by": pby} if pby else {}),
-        **({"constraints": cons} if cons else {}),
-        **(
-            {
-                "bloom_cols": blooms,
-                "file_blooms": _collect_file_blooms(table, files, blooms),
-            }
-            if blooms
-            else {}
-        ),
-        operation="WRITE",
-        **extra,
+    dfw, path_cols = _with_pspec_cols(df, pby, {}, types)
+    files = _write_data_files(
+        dfw, table, prev["version"] + 1 if prev else 1, path_cols or None
     )
-    return v
+    return _publish(
+        table,
+        prev,
+        lambda _parent: (
+            files,
+            df.count(),
+            _carry(
+                table,
+                None,
+                files,
+                files,
+                schema=schema,
+                column_mapping=mapping,
+                retired_physical=retired,
+                max_column_id=max_id,
+                removed=prev["files"] if prev else [],
+                partition_by=pby,
+                constraints=cons,
+                bloom_cols=blooms,
+                operation="WRITE",
+                **extra,
+            ),
+        ),
+        files,
+        _no_rebase,
+    )
 
 
-def append_version(df: DataFrame, table: str, max_retries: int = 10) -> int:
+def append_version(
+    df: DataFrame, table: str, batch_id: int | None = None
+) -> int:
     """Commit df's rows APPENDED to the latest version: writes only the
     new files; the manifest references the previous files unchanged
     (log-structured append — no rewrite of existing data). The batch's
@@ -1384,115 +1344,64 @@ def append_version(df: DataFrame, table: str, max_retries: int = 10) -> int:
     partitioning (physical names) and its partition values join the
     manifest stats, so pruning spans old and new files alike.
 
-    OPTIMISTIC CONCURRENCY (the Delta/Iceberg commit protocol): the
-    manifest publish is an atomic put-if-absent (_commit), so of two
-    racing writers exactly one takes a version number. The loser
-    REBASES: appends never semantically conflict — they reference
-    disjoint new files — so it re-reads the new head, re-merges the
-    schema, and recommits at the next number, REUSING its
-    already-written data files. Only if the interleaved commit changed
-    the physical layout the batch was written under (a racing
-    new-column registration stealing the physical name, or a partition
-    relayout) are the files rewritten under the fresh mapping — the
-    stale ones are deleted, correctness first, reuse second."""
+    Appends never conflict: a lost race rebases onto the new head,
+    reusing the written files unless the head changed the physical
+    layout they were written under. `batch_id` is the
+    versioned_batch_sink contract: a batch id already in the table's
+    ledger is skipped (the latest version is returned), and the commit
+    records the id under the operation STREAM APPEND. Returns the
+    committed version."""
+    if batch_id is not None and batch_id in committed_batch_ids(table):
+        return versions(table)[-1]
     n_new = df.count()
-    written: list[str] | None = None
-    written_key: tuple | None = None
-    checked: frozenset | None = None
-    for _ in range(max_retries):
-        vs = versions(table)
-        if not vs:
-            try:
-                return write_version(df, table)
-            except ValueError:
-                continue  # lost the v1 race: rebase as a real append
-        prev = json.load(open(_manifest_path(table, vs[-1])))
-        prev_schema = _prev_schema(df.sparkSession, table, prev)
+    written: list[str] = []
+    state: dict = {}  # layout `written` was written under; checked constraints
+
+    def build(prev: dict | None):
+        p = prev or {}
+        prev_schema = _prev_schema(df.sparkSession, table, prev) if prev else None
         schema = _merged_schema(prev_schema, df.schema.jsonValue())
         mapping, retired, max_id = _mapping_state(prev, prev_schema)
         max_id = _assign_new_columns(schema, mapping, retired, max_id)
-        v = vs[-1] + 1
-        cons = dict(prev.get("constraints", {}))
-        key_cons = frozenset(cons.items())
-        if cons and checked != key_cons:  # re-validate only if they changed
+        cons = p.get("constraints", {})
+        if cons and state.get("constraints") != cons:
             _check_constraints(df, cons, f"append to {table}")
-            checked = key_cons
-        pby = list(prev.get("partition_by", []))
+            state["constraints"] = cons
+        pby = list(p.get("partition_by", []))
         phys_of = {mp["name"]: mp["physical"] for mp in mapping}
-        types_l = {f["name"]: f["type"] for f in schema["fields"]}
         path_cols = [_pspec_path_col(c, phys_of) for c in pby]
         key = (
             tuple(sorted((c, phys_of.get(c, c)) for c in df.columns)),
             tuple(path_cols),
         )
-        if written is None or written_key != key:
-            if written:  # stale layout: drop our own uncommitted files
-                for f in written:
-                    p = os.path.join(table, f)
-                    if os.path.exists(p):
-                        os.unlink(p)
+        if state.get("key") != key:  # first write, or a relayout raced us
+            _drop_files(table, written)
+            types = {f["name"]: f["type"] for f in schema["fields"]}
             dfw, _ = _with_pspec_cols(
-                _to_physical(df, mapping), pby, phys_of, types_l
+                _to_physical(df, mapping), pby, phys_of, types
             )
-            written = _write_data_files(dfw, table, v, path_cols or None)
-            written_key = key
-        carried = {
-            f: s
-            for f, s in prev.get("file_stats", {}).items()
-            if f in set(prev["files"])
-        }
-        bcols = list(prev.get("bloom_cols", []))
-        bcols_phys = [phys_of.get(c, c) for c in bcols]
-        carried_blooms = {
-            f: b
-            for f, b in prev.get("file_blooms", {}).items()
-            if f in set(prev["files"])
-        }
-        stats = _collect_file_stats(table, written)
-        if pby:
-            pstats = _pspec_stats(written, pby, phys_of, types_l)
-            stats = {
-                f: {**stats.get(f, {}), **pstats.get(f, {})} for f in written
-            }
-        try:
-            _commit(
-                table,
-                v,
-                prev["files"] + written,
-                prev["n_rows"] + n_new,
-                schema=schema,
-                column_mapping=mapping,
-                retired_physical=retired,
-                max_column_id=max_id,
-                file_stats={**carried, **stats},
-                added=written,
-                removed=[],
-                **_dv_carry(prev),
-                **({"partition_by": pby} if pby else {}),
-                **({"constraints": cons} if cons else {}),
-                **(
-                    {
-                        "bloom_cols": bcols,
-                        "file_blooms": {
-                            **carried_blooms,
-                            **_collect_file_blooms(
-                                table, written, bcols_phys
-                            ),
-                        },
-                    }
-                    if bcols
-                    else {}
-                ),
-                operation="APPEND",
+            written[:] = _write_data_files(
+                dfw, table, p.get("version", 0) + 1, path_cols or None
             )
-            return v
-        except ValueError as exc:
-            if "already committed" not in str(exc):
-                raise  # a real failure (e.g. constraint), not a race
-            continue  # another writer took v: rebase onto the new head
-    raise RuntimeError(
-        f"append to {table!r} lost {max_retries} straight commit races"
-    )
+            state["key"] = key
+        files = p.get("files", []) + written
+        if batch_id is not None:
+            label = {"operation": "STREAM APPEND", "batch_id": batch_id}
+        else:
+            label = {"operation": "APPEND" if prev else "WRITE"}
+        return files, p.get("n_rows", 0) + n_new, _carry(
+            table,
+            prev,
+            files,
+            written,
+            schema=schema,
+            column_mapping=mapping,
+            retired_physical=retired,
+            max_column_id=max_id,
+            **label,
+        )
+
+    return _publish(table, _head(table), build, written, batch_id=batch_id)
 
 
 def rename_column(
@@ -1505,10 +1414,7 @@ def rename_column(
     every pre-rename file serves the renamed column. Time travel to
     older versions still shows the old name (each manifest maps for
     itself). Returns the new version."""
-    vs = versions(table)
-    if not vs:
-        raise FileNotFoundError(f"no committed versions in {table}")
-    prev = json.load(open(_manifest_path(table, vs[-1])))
+    prev = manifest_info(table)
     prev_schema = _prev_schema(spark, table, prev)
     names = [f["name"] for f in prev_schema["fields"]]
     if old not in names:
@@ -1527,14 +1433,12 @@ def rename_column(
         if m["name"] == old:
             m["name"] = new
     for cname, cexpr in prev.get("constraints", {}).items():
-        import re as _re
-
-        if _re.search(rf"\b{_re.escape(old)}\b", cexpr):
+        if re.search(rf"\b{re.escape(old)}\b", cexpr):
             raise ValueError(
                 f"cannot rename {old!r}: referenced by constraint "
                 f"{cname!r} ({cexpr!r}); drop the constraint first"
             )
-    v = vs[-1] + 1
+    v = prev["version"] + 1
     # partition specs follow the rename — including transform sources
     # ('days(old)' -> 'days(new)'). Path column names key on the
     # PHYSICAL source, which a rename never changes, so every recorded
@@ -1549,32 +1453,27 @@ def rename_column(
             return f"{kind}({param}, {new})"
         return f"{kind}({new})"
 
-    pby = [_pspec_renamed(c) for c in prev.get("partition_by", [])]
     _commit(
         table,
         v,
         prev["files"],
         prev["n_rows"],
-        schema=schema,
-        column_mapping=mapping,
-        retired_physical=retired,
-        max_column_id=max_id,
-        file_stats=prev.get("file_stats", {}),
-        added=[],
-        removed=[],
-        **_dv_carry(prev),
-        **({"partition_by": pby} if pby else {}),
-        **(
-            {"constraints": dict(prev["constraints"])}
-            if prev.get("constraints")
-            else {}
-        ),
-        # bloom_cols are LOGICAL names (rename follows); file_blooms
-        # key by PHYSICAL column name, which a rename never moves.
-        **_bloom_carry(
+        **_carry(
+            table,
             prev,
             prev["files"],
-            [new if c == old else c for c in prev.get("bloom_cols", [])],
+            schema=schema,
+            column_mapping=mapping,
+            retired_physical=retired,
+            max_column_id=max_id,
+            partition_by=[
+                _pspec_renamed(c) for c in prev.get("partition_by", [])
+            ],
+            # bloom_cols are LOGICAL names (rename follows); file_blooms
+            # key by PHYSICAL column name, which a rename never moves.
+            bloom_cols=[
+                new if c == old else c for c in prev.get("bloom_cols", [])
+            ],
         ),
         operation="RENAME COLUMN",
     )
@@ -1588,10 +1487,7 @@ def drop_column(spark: SparkSession, table: str, name: str) -> int:
     physical name is recorded so a later column re-using the logical
     name gets a fresh physical name instead of resurrecting the
     dropped data. Returns the new version."""
-    vs = versions(table)
-    if not vs:
-        raise FileNotFoundError(f"no committed versions in {table}")
-    prev = json.load(open(_manifest_path(table, vs[-1])))
+    prev = manifest_info(table)
     prev_schema = _prev_schema(spark, table, prev)
     names = [f["name"] for f in prev_schema["fields"]]
     if name not in names:
@@ -1611,43 +1507,32 @@ def drop_column(spark: SparkSession, table: str, name: str) -> int:
             "unpartitioned (write_version) first"
         )
     for cname, cexpr in prev.get("constraints", {}).items():
-        import re as _re
-
-        if _re.search(rf"\b{_re.escape(name)}\b", cexpr):
+        if re.search(rf"\b{re.escape(name)}\b", cexpr):
             raise ValueError(
                 f"cannot drop {name!r}: referenced by constraint "
                 f"{cname!r} ({cexpr!r}); drop the constraint first"
             )
     retired = retired + [m["physical"] for m in mapping if m["name"] == name]
     mapping = [m for m in mapping if m["name"] != name]
-    v = vs[-1] + 1
-    pby = list(prev.get("partition_by", []))
+    v = prev["version"] + 1
     _commit(
         table,
         v,
         prev["files"],
         prev["n_rows"],
-        schema=schema,
-        column_mapping=mapping,
-        retired_physical=retired,
-        max_column_id=max_id,
-        file_stats=prev.get("file_stats", {}),
-        added=[],
-        removed=[],
-        **_dv_carry(prev),
-        **({"partition_by": pby} if pby else {}),
-        **(
-            {"constraints": dict(prev["constraints"])}
-            if prev.get("constraints")
-            else {}
-        ),
-        # the dropped column leaves the index; stale per-file bitsets
-        # for its physical name are dead weight only (a re-added name
-        # gets a FRESH physical, so they can never be probed again).
-        **_bloom_carry(
+        **_carry(
+            table,
             prev,
             prev["files"],
-            [c for c in prev.get("bloom_cols", []) if c != name],
+            schema=schema,
+            column_mapping=mapping,
+            retired_physical=retired,
+            max_column_id=max_id,
+            # the dropped column leaves the index; stale per-file
+            # bitsets for its physical name are dead weight only (a
+            # re-added name gets a FRESH physical, so they can never be
+            # probed again).
+            bloom_cols=[c for c in prev.get("bloom_cols", []) if c != name],
         ),
         operation="DROP COLUMN",
     )
@@ -1841,43 +1726,25 @@ def _relevant_dvs(m: dict, files: list[str]) -> list[str]:
     return sorted(set(rel))
 
 
-def _dv_carry(m: dict) -> dict:
-    """The DV manifest keys a metadata-only commit carries unchanged
-    from its parent (dv_files list + per-file dv_map + per-DV row
-    counts when present)."""
-    out: dict = {"dv_files": list(m.get("dv_files", []))}
-    if m.get("dv_map"):
-        out["dv_map"] = {f: list(d) for f, d in m["dv_map"].items()}
-    if m.get("dv_rows"):
-        out["dv_rows"] = dict(m["dv_rows"])
-    return out
-
-
 def _dv_prune(m: dict, removed: set[str]) -> dict:
     """The DV manifest keys after a rewrite removes `removed` data
     files: per-file DVs mapped to a removed file are DEAD (their
     relpath can never be referenced again — version subdirs are
-    unique), so they leave dv_files/dv_map entirely and become
+    unique), so they leave dv_files/dv_map/dv_rows entirely and become
     vacuum-reclaimable immediately, instead of riding inert forever.
     Legacy unmapped DVs stay (their entries for removed relpaths are
     inert but may also mask carried files)."""
-    dv_files = list(m.get("dv_files", []))
     dv_map = m.get("dv_map") or {}
-    if not dv_files or not dv_map or not removed:
-        return _dv_carry(m)
     dropped = {d for f, dvs in dv_map.items() if f in removed for d in dvs}
-    kept_map = {
-        f: list(d) for f, d in dv_map.items() if f not in removed
+    return {
+        "dv_files": [d for d in m.get("dv_files", []) if d not in dropped],
+        "dv_map": {f: list(d) for f, d in dv_map.items() if f not in removed},
+        "dv_rows": {
+            d: n
+            for d, n in (m.get("dv_rows") or {}).items()
+            if d not in dropped
+        },
     }
-    out = {"dv_files": [d for d in dv_files if d not in dropped]}
-    if kept_map:
-        out["dv_map"] = kept_map
-    kept_rows = {
-        d: n for d, n in (m.get("dv_rows") or {}).items() if d not in dropped
-    }
-    if kept_rows:
-        out["dv_rows"] = kept_rows
-    return out
 
 
 def _read_files_logical(
@@ -2059,34 +1926,227 @@ def _prune_may_match(m: dict, prune):
     return lambda fstats: all(c(fstats) for c in checks)
 
 
+# ---------------------------------------------------------------------------
+# THE COMMIT LOOP (see the module docstring). Every writer derives its
+# manifest from its parent through _carry; every writer that stages
+# files publishes through _publish, the log's one optimistic-
+# concurrency loop; DML commits prove a lost race harmless with
+# _dml_check before rebasing.
+# ---------------------------------------------------------------------------
+
+_COMMIT_RETRIES = 10  # lost races one commit rebases through, then fails
+
+# The physical layout a DML transaction's files were written under: an
+# interleaved change to any of these conflicts the commit.
+_LAYOUT_KEYS = (
+    "schema",
+    "column_mapping",
+    "partition_by",
+    "constraints",
+    "bloom_cols",
+)
+
+
 class CommitConflict(ValueError):
-    """A concurrent commit truly overlapped this DML transaction's
-    read or write set — the caller must re-run the operation against
-    the new head (re-executing IS the correct resolution; the data it
-    computed is stale)."""
+    """A concurrent commit truly overlapped this transaction's read or
+    write set — the caller must re-run the operation against the new
+    head (re-executing IS the correct resolution; the data it computed
+    is stale)."""
 
 
-def _dv_delta_hits(
-    table: str, base: dict, head: dict, touched: set[str]
-) -> bool:
-    """True if any deletion-vector file committed between `base` and
-    `head` masks rows in a file of `touched` — rows this transaction's
-    rewrite would resurrect (its replacement was computed under the
-    base DV set)."""
+def _head(table: str) -> dict | None:
+    """The latest committed manifest, None for an empty table."""
+    vs = versions(table)
+    return json.load(open(_manifest_path(table, vs[-1]))) if vs else None
+
+
+def _carry(
+    table: str,
+    parent: dict | None,
+    files: list[str],
+    new: list[str] | None = None,
+    **changes,
+) -> dict:
+    """Manifest extras of a commit whose parent is `parent` (None: the
+    table's first version) and whose live file list is `files`. Every
+    layout key carries from the parent — schema, column mapping
+    (synthesized for pre-mapping parents), partition spec,
+    constraints, bloom index, deletion vectors — with per-file stats
+    and blooms restricted to live files. `new` names the files this
+    commit wrote: they become `added`, and their footer stats,
+    partition values and blooms are harvested here under the commit's
+    own mapping and spec. `changes` are what the commit alters,
+    applied over the carried keys; an empty partition spec, constraint
+    set, bloom index, DV map or DV row count is left out."""
+    p = parent or {}
+    live = set(files)
+    mapping, retired, max_id = _mapping_state(parent, p.get("schema"))
+    out = {
+        "schema": p.get("schema"),
+        "column_mapping": mapping,
+        "retired_physical": retired,
+        "max_column_id": max_id,
+        "file_stats": {
+            f: s for f, s in p.get("file_stats", {}).items() if f in live
+        },
+        "added": list(new or []),
+        "removed": [],
+        "partition_by": list(p.get("partition_by", [])),
+        "constraints": dict(p.get("constraints", {})),
+        "bloom_cols": list(p.get("bloom_cols", [])),
+        "file_blooms": {
+            f: b for f, b in p.get("file_blooms", {}).items() if f in live
+        },
+    }
+    if parent is not None:
+        out["dv_files"] = list(p.get("dv_files", []))
+        out["dv_map"] = {f: list(d) for f, d in (p.get("dv_map") or {}).items()}
+        out["dv_rows"] = dict(p.get("dv_rows") or {})
+    out.update(changes)
+    if new:
+        phys_of = {m["name"]: m["physical"] for m in out["column_mapping"]}
+        types = {f["name"]: f["type"] for f in out["schema"]["fields"]}
+        stats = _collect_file_stats(table, new)
+        pstats = _pspec_stats(new, out["partition_by"], phys_of, types)
+        out["file_stats"].update(
+            {f: {**stats.get(f, {}), **pstats.get(f, {})} for f in new}
+        )
+        if out["bloom_cols"]:
+            out["file_blooms"].update(
+                _collect_file_blooms(
+                    table, new, [phys_of.get(c, c) for c in out["bloom_cols"]]
+                )
+            )
+    for k in ("partition_by", "constraints", "dv_map", "dv_rows"):
+        if not out.get(k):
+            out.pop(k, None)
+    if not out["bloom_cols"]:
+        del out["bloom_cols"], out["file_blooms"]
+    return out
+
+
+def _drop_files(table: str, files: list[str]) -> None:
+    for f in files:
+        p = os.path.join(table, f)
+        if os.path.exists(p):
+            os.unlink(p)
+
+
+def _publish(
+    table: str,
+    base: dict | None,
+    build,
+    written: list[str],
+    check=None,
+    batch_id: int | None = None,
+) -> int:
+    """The commit loop. `build(parent)` returns (files, n_rows, extras)
+    of the manifest derived from `parent` — `base` first, then each
+    head a lost race rebases onto — and _commit publishes it as
+    version parent + 1 (1 for an empty table). On a lost race a
+    `batch_id` already in the ledger was committed by the winner: the
+    commit is skipped and the head's version returned. Otherwise
+    `check(parent, head)` raises CommitConflict unless rebasing is
+    sound (None: always sound), and the loop rebuilds on the head, at
+    most _COMMIT_RETRIES times. Any failure deletes `written` — the
+    transaction's uncommitted files, which build may replace — before
+    it propagates. Returns the committed version."""
+    parent = base
+    try:
+        for _ in range(_COMMIT_RETRIES):
+            v = parent["version"] + 1 if parent else 1
+            files, n_rows, extras = build(parent)
+            try:
+                _commit(table, v, files, n_rows, **extras)
+                return v
+            except VersionTaken:
+                head = _head(table)
+            if batch_id is not None and batch_id in committed_batch_ids(table):
+                _drop_files(table, written)
+                return head["version"]
+            if check is not None:
+                check(parent, head)
+            parent = head
+        raise RuntimeError(
+            f"commit to {table!r} lost {_COMMIT_RETRIES} straight races"
+        )
+    except BaseException:
+        _drop_files(table, written)
+        raise
+
+
+def _no_rebase(parent: dict | None, head: dict) -> None:
+    """The lost-race test of a snapshot write: it never rebases."""
+    raise CommitConflict(
+        f"a concurrent commit published v{head['version']} first — "
+        "re-run the snapshot write against it"
+    )
+
+
+def _dv_positions(table: str, dvs: list[str]) -> set[tuple[str, int]]:
+    """(data file, row index) pairs masked by the deletion vectors."""
     import pyarrow.parquet as pq
 
-    before = set(base.get("dv_files", []))
-    for dv in head.get("dv_files", []):
-        if dv in before:
-            continue
-        names = set(
-            pq.read_table(
-                os.path.join(table, dv), columns=["file"]
-            )["file"].to_pylist()
+    out: set[tuple[str, int]] = set()
+    for dv in dvs:
+        t = pq.read_table(os.path.join(table, dv), columns=["file", "row_index"])
+        out.update(
+            zip(t.column("file").to_pylist(), t.column("row_index").to_pylist())
         )
-        if names & touched:
-            return True
-    return False
+    return out
+
+
+def _dml_check(
+    table: str, base: dict, touched: set[str], added_may_match, hits
+):
+    """The lost-race test of a DML commit built on `base`. Rebasing
+    onto the head is sound only when the interleaved commits are
+    disjoint from this transaction's read and write sets:
+
+    - none removed a file in `touched` (the files this commit rewrites
+      or masks — a write-write conflict, or a mask made inert);
+    - every file one added fails `added_may_match(file_stats)` — the
+      caller's prune hint or merge key range; None means the whole
+      table was read, so any add conflicts;
+    - no deletion vector added since `base` masks a position `hits`
+      claims (copy-on-write: any row of a rewritten file, which the
+      rewrite would resurrect; merge-on-read: the same row, whose
+      update would append a second image);
+    - the layout (_LAYOUT_KEYS) is unchanged, because this
+      transaction's files were written under it."""
+
+    def check(parent: dict, head: dict) -> None:
+        rerun = f" — re-run against v{head['version']}"
+        for iv in range(parent["version"] + 1, head["version"] + 1):
+            im = manifest_info(table, iv)
+            if set(im.get("removed", [])) & touched:
+                raise CommitConflict(
+                    f"concurrent commit v{iv} rewrote a file this "
+                    "transaction rewrites or masks" + rerun
+                )
+            stats = im.get("file_stats", {})
+            if any(
+                added_may_match is None or added_may_match(stats.get(f))
+                for f in im.get("added", [])
+            ):
+                raise CommitConflict(
+                    f"concurrent commit v{iv} added files this "
+                    "transaction's predicate may match" + rerun
+                )
+        before = set(base.get("dv_files", []))
+        theirs = [d for d in head.get("dv_files", []) if d not in before]
+        if theirs and hits(_dv_positions(table, theirs)):
+            raise CommitConflict(
+                "a concurrent deletion vector masks the same rows this "
+                "transaction rewrites or masks" + rerun
+            )
+        if any(base.get(k) != head.get(k) for k in _LAYOUT_KEYS):
+            raise CommitConflict(
+                "a concurrent commit changed the table layout (schema/"
+                "mapping/partitioning/constraints/blooms)" + rerun
+            )
+
+    return check
 
 
 def _commit_rewrite(
@@ -2096,58 +2156,27 @@ def _commit_rewrite(
     touched: list[str],
     replacement: DataFrame | None,
     added_may_match=None,
-    max_retries: int = 10,
     schema_evolution: dict | None = None,
     **extra,
 ) -> int:
     """Shared copy-on-write commit: replace `touched` files with the
     files materialized from `replacement` (None/empty ⇒ pure removal),
     carry every untouched file and its stats unchanged, and record the
-    file-level added/removed delta read_changes consumes. Returns the
-    new version number.
-
-    OPTIMISTIC CONCURRENCY for DML (VERDICT r9 item 5, the Delta
-    serializable check): losing the put-if-absent race no longer
-    surfaces immediately — the loser REBASES onto the new head when
-    every interleaved commit is provably disjoint from this
-    transaction's read and write sets, i.e. ALL of:
-
-    - no interleaved commit removed (rewrote/deleted/compacted) a file
-      this transaction is rewriting — a write-write file conflict;
-    - no interleaved commit added a file this transaction's probe
-      SHOULD have read: `added_may_match(file_stats)` — derived from
-      the caller's prune hint or merge key range — returns False for
-      every interleaved-added file. With no hint the transaction read
-      the whole table, so ANY interleaved add conflicts (conservative
-      serializability: its predicate could match the new rows);
-    - no interleaved deletion vector masks rows in a touched file
-      (the rewrite would resurrect those rows);
-    - schema, column mapping, partitioning, constraints, and bloom
-      declaration are unchanged (the replacement files were written
-      under the base physical layout).
-
-    Two writers deleting DISJOINT partitions therefore both commit —
-    the rebase re-references the head's files outside this rewrite and
-    recounts rows against the head's DV set — while a true overlap
-    raises CommitConflict (after deleting this transaction's
-    uncommitted files) for the caller to re-run. Replacement data
-    files are written ONCE and reused across rebases; the disjointness
-    proof is what makes that sound. Merge-on-read (DV) commit paths
-    get the analogous treatment in _commit_dv.
+    file-level added/removed delta read_changes consumes. The
+    replacement files are written once and reused across rebases —
+    _dml_check's disjointness proof is what makes that sound. Two
+    writers deleting DISJOINT partitions therefore both commit, while
+    a true overlap raises CommitConflict. Returns the new version.
 
     `schema_evolution` (merge_schema=True): {"schema", "column_mapping",
     "retired_physical", "max_column_id"} precomputed by the caller —
     the commit adopts the evolved schema and writes replacement files
-    under the EXTENDED mapping. Valid across rebases because any
-    interleaved layout change already raises CommitConflict."""
-    if schema_evolution is not None:
-        commit_schema = schema_evolution["schema"]
-        mapping = schema_evolution["column_mapping"]
-        retired = schema_evolution["retired_physical"]
-        max_id = schema_evolution["max_column_id"]
-    else:
-        commit_schema = prev["schema"]
-        mapping, retired, max_id = _mapping_state(prev, prev["schema"])
+    under the EXTENDED mapping."""
+    layout = schema_evolution or {}
+    mapping = layout.get("column_mapping") or _mapping_state(
+        prev, prev["schema"]
+    )[0]
+    touched_set = set(touched)
     new_files: list[str] = []
     n_new = 0
     if replacement is not None:
@@ -2161,151 +2190,48 @@ def _commit_rewrite(
             new_files = _write_data_files(
                 _to_physical(replacement, mapping), table, prev["version"] + 1
             )
-    new_stats = _collect_file_stats(table, new_files)
-    bcols = list(prev.get("bloom_cols", []))
-    bmapping = {mp["name"]: mp["physical"] for mp in mapping}
-    new_blooms = (
-        _collect_file_blooms(
-            table, new_files, [bmapping.get(c, c) for c in bcols]
-        )
-        if bcols
-        else {}
-    )
-    touched_set = set(touched)
-    base = prev
 
-    def _drop_written() -> None:
-        for f in new_files:
-            p = os.path.join(table, f)
-            if os.path.exists(p):
-                os.unlink(p)
-
-    for _ in range(max_retries):
-        v = prev["version"] + 1
-        untouched = [f for f in prev["files"] if f not in touched_set]
-        # n_rows: count rows actually surviving outside the rewrite
-        # set from the MANIFEST's per-file record counts (zero footer
-        # I/O on a 100k-file table; legacy entries fall back to one
-        # footer read), minus any deletion-vector entries still
-        # masking rows in them.
-        n_untouched = sum(
-            file_row_count(table, prev, f) for f in untouched
-        )
-        # open only the DVs that can mask an untouched file (per-file
-        # dv_map lookup; legacy unmapped DVs always open)
-        count_dvs = _relevant_dvs(prev, untouched)
+    def build(p: dict):
+        untouched = [f for f in p["files"] if f not in touched_set]
+        # rows surviving outside the rewrite: the MANIFEST's per-file
+        # record counts (zero footer I/O; legacy entries read one
+        # footer) minus the DV entries masking them — opening only the
+        # DVs that can mask an untouched file
+        n_untouched = sum(file_row_count(table, p, f) for f in untouched)
+        count_dvs = _relevant_dvs(p, untouched)
         if count_dvs and untouched:
             n_untouched -= (
                 _dv_table(spark, table, count_dvs)
                 .filter(F.col("file").isin(list(untouched)))
                 .count()
             )
-        live = set(untouched)
-        carried = {
-            f: s
-            for f, s in prev.get("file_stats", {}).items()
-            if f in live
-        }
-        carried_blooms = {
-            f: b
-            for f, b in prev.get("file_blooms", {}).items()
-            if f in live
-        }
-        pby = list(prev.get("partition_by", []))
-        try:
-            _commit(
-                table,
-                v,
-                untouched + new_files,
-                n_untouched + n_new,
-                schema=commit_schema,
-                column_mapping=mapping,
-                retired_physical=retired,
-                max_column_id=max_id,
-                file_stats={**carried, **new_stats},
-                added=new_files,
-                removed=list(touched),
-                # DV entries for rewritten relpaths can never match
-                # again (version subdirs are unique): per-file DVs of
-                # removed files leave the manifest entirely (vacuum
-                # reclaims them); carried entries keep masking
-                # untouched files' rows.
-                **_dv_prune(prev, touched_set),
-                # rewrites materialize partition columns physically,
-                # but the table stays declared-partitioned: future
-                # appends keep the hive layout and pruning covers both
-                # file shapes.
-                **({"partition_by": pby} if pby else {}),
-                **(
-                    {"constraints": dict(prev["constraints"])}
-                    if prev.get("constraints")
-                    else {}
-                ),
-                **(
-                    {
-                        "bloom_cols": bcols,
-                        "file_blooms": {**carried_blooms, **new_blooms},
-                    }
-                    if bcols
-                    else {}
-                ),
-                **extra,
-            )
-            return v
-        except ValueError as exc:
-            if "already committed" not in str(exc):
-                _drop_written()
-                raise
-        head = manifest_info(table)
-        # disjointness proof over EVERY interleaved commit
-        for iv in range(prev["version"] + 1, head["version"] + 1):
-            im = manifest_info(table, iv)
-            if set(im.get("removed", [])) & touched_set:
-                _drop_written()
-                raise CommitConflict(
-                    f"concurrent commit v{iv} rewrote files this "
-                    f"transaction is rewriting — re-run against v"
-                    f"{head['version']}"
-                )
-            interleaved_added = im.get("added", [])
-            if interleaved_added and (
-                added_may_match is None
-                or any(
-                    added_may_match(im.get("file_stats", {}).get(f))
-                    for f in interleaved_added
-                )
-            ):
-                _drop_written()
-                raise CommitConflict(
-                    f"concurrent commit v{iv} added files this "
-                    "transaction's predicate may match — re-run "
-                    f"against v{head['version']}"
-                )
-        if _dv_delta_hits(table, base, head, touched_set):
-            _drop_written()
-            raise CommitConflict(
-                "a concurrent deletion vector masks rows in a file "
-                "this transaction is rewriting — re-run against "
-                f"v{head['version']}"
-            )
-        layout_keys = (
-            "schema",
-            "column_mapping",
-            "partition_by",
-            "constraints",
-            "bloom_cols",
+        files = untouched + new_files
+        # rewrites materialize partition columns physically, but the
+        # table stays declared-partitioned: _carry keeps the spec
+        return files, n_untouched + n_new, _carry(
+            table,
+            p,
+            files,
+            new_files,
+            removed=list(touched),
+            **_dv_prune(p, touched_set),
+            **layout,
+            **extra,
         )
-        if any(base.get(k) != head.get(k) for k in layout_keys):
-            _drop_written()
-            raise CommitConflict(
-                "a concurrent commit changed the table layout "
-                "(schema/mapping/partitioning/constraints/blooms) — "
-                f"re-run against v{head['version']}"
-            )
-        prev = head  # provably disjoint: rebase and recommit
-    _drop_written()
-    raise RuntimeError(
-        f"rewrite of {table!r} lost {max_retries} straight commit races"
+
+    return _publish(
+        table,
+        prev,
+        build,
+        new_files,
+        _dml_check(
+            table,
+            prev,
+            touched_set,
+            added_may_match,
+            lambda pos: any(f in touched_set for f, _ in pos),
+        ),
+        extra.get("batch_id"),
     )
 
 
@@ -2317,206 +2243,61 @@ def _commit_dv(
     new_dv: list[str],
     n_rows_delta: int,
     added_may_match=None,
-    max_retries: int = 10,
     dv_map: dict[str, list[str]] | None = None,
     schema_evolution: dict | None = None,
     **extra,
 ) -> int:
     """Shared MERGE-ON-READ commit: reference every base file
-    unchanged, extend the DV list with `new_dv`, append `new_files`
-    (a DV update/merge's new row images), and adjust n_rows by
-    `n_rows_delta` — with the same OPTIMISTIC CONCURRENCY rebase as
-    _commit_rewrite. A lost race rebases onto the head when every
-    interleaved commit is provably disjoint:
-
-    - no interleaved commit REMOVED a file this commit's DV masks
-      (a rewrite of that file makes the mask inert = a silently lost
-      delete/update);
-    - no interleaved commit added a file the probe should have read
-      (`added_may_match`, as in _commit_rewrite);
-    - no interleaved DV masks the SAME (file, row) this commit masks
-      (two updates of one row would both append their new image —
-      duplicate keys; delete/delete overlap is conservatively
-      conflicted too);
-    - table layout unchanged.
-
-    Two DV writers deleting/updating different rows of even the SAME
-    file therefore both commit — masks union — which is the
-    concurrency profile frequent-small-DML tables actually need."""
+    unchanged, extend the DV list with `new_dv` (`dv_map` names the
+    data file each one masks), append `new_files` (a DV update/merge's
+    new row images), and adjust n_rows by `n_rows_delta`. Two DV
+    writers masking different rows of even the SAME file both commit —
+    masks union — which is the concurrency profile frequent-small-DML
+    tables actually need."""
     import pyarrow.parquet as pq
 
-    our_positions: set[tuple] = set()
-    new_dv_rows: dict[str, int] = {}
-    for dv in new_dv:
-        t = pq.read_table(
-            os.path.join(table, dv), columns=["file", "row_index"]
-        )
-        new_dv_rows[dv] = t.num_rows
-        our_positions.update(
-            zip(t.column("file").to_pylist(), t.column("row_index").to_pylist())
-        )
-    our_masked_files = {f for f, _ in our_positions}
-    new_stats = _collect_file_stats(table, new_files)
-    prev = base
+    dv_map = dv_map or {}
 
-    def _drop_written() -> None:
-        for f in new_files + new_dv:
-            p = os.path.join(table, f)
-            if os.path.exists(p):
-                os.unlink(p)
-
-    for _ in range(max_retries):
-        v = prev["version"] + 1
-        if schema_evolution is not None:
-            # valid across rebases: an interleaved layout change
-            # raises CommitConflict below before this is committed
-            commit_schema = schema_evolution["schema"]
-            mapping = schema_evolution["column_mapping"]
-            retired = schema_evolution["retired_physical"]
-            max_id = schema_evolution["max_column_id"]
-        else:
-            commit_schema = prev["schema"]
-            mapping, retired, max_id = _mapping_state(prev, prev["schema"])
-        bcols = list(prev.get("bloom_cols", []))
-        bextra = {}
-        if bcols:
-            bmapping = {mp["name"]: mp["physical"] for mp in mapping}
-            carry = _bloom_carry(prev, prev["files"])
-            bextra = {
-                "bloom_cols": bcols,
-                "file_blooms": {
-                    **carry.get("file_blooms", {}),
-                    **_collect_file_blooms(
-                        table, new_files, [bmapping.get(c, c) for c in bcols]
-                    ),
+    def build(p: dict):
+        p_map = p.get("dv_map") or {}
+        files = p["files"] + new_files
+        return files, p["n_rows"] + n_rows_delta, _carry(
+            table,
+            p,
+            files,
+            new_files,
+            dv_files=list(p.get("dv_files", [])) + new_dv,
+            # two DV commits masking one data file stack their objects
+            dv_map={
+                **p_map,
+                **{f: p_map.get(f, []) + dvs for f, dvs in dv_map.items()},
+            },
+            # per-DV row counts: reorg_purge plans mask ratios from
+            # the manifest alone (dv rows / file __rows)
+            dv_rows={
+                **(p.get("dv_rows") or {}),
+                **{
+                    dv: pq.ParquetFile(os.path.join(table, dv)).metadata.num_rows
+                    for dv in new_dv
                 },
-            }
-        try:
-            _commit(
-                table,
-                v,
-                prev["files"] + new_files,
-                prev["n_rows"] + n_rows_delta,
-                schema=commit_schema,
-                column_mapping=mapping,
-                retired_physical=retired,
-                max_column_id=max_id,
-                file_stats={**prev.get("file_stats", {}), **new_stats},
-                added=new_files,
-                removed=[],
-                dv_files=list(prev.get("dv_files", [])) + new_dv,
-                # per-file DV index: carry the head's map, then extend
-                # each touched data file's entry with this commit's DVs
-                # (two DV commits masking one file stack their objects)
-                **(
-                    {
-                        "dv_map": {
-                            k: list(v_)
-                            for k, v_ in {
-                                **(prev.get("dv_map") or {}),
-                                **{
-                                    f: list(
-                                        (prev.get("dv_map") or {}).get(f, [])
-                                    )
-                                    + dvs
-                                    for f, dvs in (dv_map or {}).items()
-                                },
-                            }.items()
-                        }
-                    }
-                    if (prev.get("dv_map") or dv_map)
-                    else {}
-                ),
-                # per-DV row counts: reorg_purge plans mask ratios
-                # from the manifest alone (dv rows / file __rows)
-                **(
-                    {
-                        "dv_rows": {
-                            **(prev.get("dv_rows") or {}),
-                            **new_dv_rows,
-                        }
-                    }
-                    if (prev.get("dv_rows") or new_dv_rows)
-                    else {}
-                ),
-                **(
-                    {"partition_by": list(prev["partition_by"])}
-                    if prev.get("partition_by")
-                    else {}
-                ),
-                **(
-                    {"constraints": dict(prev["constraints"])}
-                    if prev.get("constraints")
-                    else {}
-                ),
-                **bextra,
-                **extra,
-            )
-            return v
-        except ValueError as exc:
-            if "already committed" not in str(exc):
-                _drop_written()
-                raise
-        head = manifest_info(table)
-        for iv in range(prev["version"] + 1, head["version"] + 1):
-            im = manifest_info(table, iv)
-            if set(im.get("removed", [])) & our_masked_files:
-                _drop_written()
-                raise CommitConflict(
-                    f"concurrent commit v{iv} rewrote a file this "
-                    "merge-on-read commit masks — re-run against "
-                    f"v{head['version']}"
-                )
-            interleaved_added = im.get("added", [])
-            if interleaved_added and (
-                added_may_match is None
-                or any(
-                    added_may_match(im.get("file_stats", {}).get(f))
-                    for f in interleaved_added
-                )
-            ):
-                _drop_written()
-                raise CommitConflict(
-                    f"concurrent commit v{iv} added files this "
-                    "transaction's predicate may match — re-run "
-                    f"against v{head['version']}"
-                )
-        base_dv = set(base.get("dv_files", []))
-        for dv in head.get("dv_files", []):
-            if dv in base_dv or dv in set(new_dv):
-                continue
-            t = pq.read_table(
-                os.path.join(table, dv), columns=["file", "row_index"]
-            )
-            theirs = set(
-                zip(
-                    t.column("file").to_pylist(),
-                    t.column("row_index").to_pylist(),
-                )
-            )
-            if theirs & our_positions:
-                _drop_written()
-                raise CommitConflict(
-                    "a concurrent deletion vector masks the same rows "
-                    f"— re-run against v{head['version']}"
-                )
-        layout_keys = (
-            "schema",
-            "column_mapping",
-            "partition_by",
-            "constraints",
-            "bloom_cols",
+            },
+            **(schema_evolution or {}),
+            **extra,
         )
-        if any(base.get(k) != head.get(k) for k in layout_keys):
-            _drop_written()
-            raise CommitConflict(
-                "a concurrent commit changed the table layout — "
-                f"re-run against v{head['version']}"
-            )
-        prev = head  # provably disjoint: rebase and recommit
-    _drop_written()
-    raise RuntimeError(
-        f"merge-on-read commit to {table!r} lost {max_retries} races"
+
+    return _publish(
+        table,
+        base,
+        build,
+        new_files + new_dv,
+        _dml_check(
+            table,
+            base,
+            set(dv_map),
+            added_may_match,
+            lambda pos: bool(pos & _dv_positions(table, new_dv)),
+        ),
+        extra.get("batch_id"),
     )
 
 
@@ -3289,85 +3070,15 @@ def committed_batch_ids(table: str) -> set[int]:
 def versioned_batch_sink(table: str):
     """foreachBatch function giving EXACTLY-ONCE appends into the
     versioned log: Structured Streaming replays a micro-batch with the
-    SAME batchId after a failure, and the sink skips batchIds whose
-    manifest already committed — the standard idempotent-sink contract
-    (transaction log + batch id), on the same manifests time travel
-    reads. Usage:
+    SAME batchId after a failure, and append_version skips batchIds the
+    table's ledger already holds — the standard idempotent-sink
+    contract (transaction log + batch id), on the same manifests time
+    travel reads. Usage:
         df.writeStream.foreachBatch(versioned_batch_sink(path))...
     """
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id in committed_batch_ids(table):
-            return  # replayed batch: already durable, skip
-        vs = versions(table)
-        if not vs:
-            v, prev_files, prev_rows = 1, [], 0
-            schema = batch_df.schema.jsonValue()
-            mapping, retired, max_id = _mapping_state(None, schema)
-        else:
-            prev = json.load(open(_manifest_path(table, vs[-1])))
-            v, prev_files, prev_rows = vs[-1] + 1, prev["files"], prev["n_rows"]
-            prev_schema = _prev_schema(batch_df.sparkSession, table, prev)
-            schema = _merged_schema(prev_schema, batch_df.schema.jsonValue())
-            mapping, retired, max_id = _mapping_state(prev, prev_schema)
-            max_id = _assign_new_columns(schema, mapping, retired, max_id)
-        cons = dict(prev.get("constraints", {})) if vs else {}
-        if cons:
-            _check_constraints(batch_df, cons, f"stream batch {batch_id}")
-        pby = list(prev.get("partition_by", [])) if vs else []
-        phys_of = {mp["name"]: mp["physical"] for mp in mapping}
-        types_l = {f["name"]: f["type"] for f in schema["fields"]}
-        phys_df, path_cols = _with_pspec_cols(
-            _to_physical(batch_df, mapping), pby, phys_of, types_l
-        )
-        files = _write_data_files(phys_df, table, v, path_cols or None)
-        carried = (
-            {
-                f: s
-                for f, s in prev.get("file_stats", {}).items()
-                if f in set(prev_files)
-            }
-            if vs
-            else {}
-        )
-        stats = _collect_file_stats(table, files)
-        if pby:
-            pstats = _pspec_stats(files, pby, phys_of, types_l)
-            stats = {
-                f: {**stats.get(f, {}), **pstats.get(f, {})} for f in files
-            }
-        bcols = list(prev.get("bloom_cols", [])) if vs else []
-        bextra = {}
-        if bcols:
-            carry = _bloom_carry(prev, prev_files)
-            bextra = {
-                "bloom_cols": bcols,
-                "file_blooms": {
-                    **carry.get("file_blooms", {}),
-                    **_collect_file_blooms(
-                        table, files, [phys_of.get(c, c) for c in bcols]
-                    ),
-                },
-            }
-        _commit(
-            table,
-            v,
-            prev_files + files,
-            prev_rows + batch_df.count(),
-            batch_id=batch_id,
-            schema=schema,
-            column_mapping=mapping,
-            retired_physical=retired,
-            max_column_id=max_id,
-            file_stats={**carried, **stats},
-            added=files,
-            removed=[],
-            **(_dv_carry(prev) if vs else {"dv_files": []}),
-            **({"partition_by": pby} if pby else {}),
-            **({"constraints": cons} if cons else {}),
-            **bextra,
-            operation="STREAM APPEND",
-        )
+        append_version(batch_df, table, batch_id=batch_id)
 
     return apply_batch
 
@@ -3406,28 +3117,13 @@ def set_partitioning(
         raise ValueError("cannot partition by every column")
     if pby == list(m.get("partition_by", [])):
         return m["version"]  # declaring the current spec is a no-op
-    mapping, retired, max_id = _mapping_state(m, m["schema"])
     v = m["version"] + 1
     _commit(
         table,
         v,
         m["files"],
         m["n_rows"],
-        schema=m["schema"],
-        column_mapping=mapping,
-        retired_physical=retired,
-        max_column_id=max_id,
-        file_stats=m.get("file_stats", {}),
-        added=[],
-        removed=[],
-        **_dv_carry(m),
-        **({"partition_by": pby} if pby else {}),
-        **(
-            {"constraints": dict(m["constraints"])}
-            if m.get("constraints")
-            else {}
-        ),
-        **_bloom_carry(m, m["files"]),
+        **_carry(table, m, m["files"], partition_by=pby),
         operation="SET PARTITIONING",
     )
     return v
@@ -3732,31 +3428,23 @@ def restore_version(spark: SparkSession, table: str, version: int) -> int:
             f"were vacuumed (first: {missing[0]!r})"
         )
     v = head["version"] + 1
-    head_files = set(head["files"])
+    head_files, target_files = set(head["files"]), set(target["files"])
     _commit(
         table,
         v,
         list(target["files"]),
         target["n_rows"],
-        schema=target["schema"],
-        column_mapping=target.get("column_mapping", []),
-        retired_physical=target.get("retired_physical", []),
-        max_column_id=target.get("max_column_id", 0),
-        file_stats=target.get("file_stats", {}),
-        added=[f for f in target["files"] if f not in head_files],
-        removed=[f for f in head["files"] if f not in set(target["files"])],
-        **_dv_carry(target),
-        **(
-            {"partition_by": list(target["partition_by"])}
-            if target.get("partition_by")
-            else {}
+        **_carry(
+            table,
+            target,
+            target["files"],
+            # verbatim, also for a pre-mapping target
+            column_mapping=target.get("column_mapping", []),
+            retired_physical=target.get("retired_physical", []),
+            max_column_id=target.get("max_column_id", 0),
+            added=[f for f in target["files"] if f not in head_files],
+            removed=[f for f in head["files"] if f not in target_files],
         ),
-        **(
-            {"constraints": dict(target["constraints"])}
-            if target.get("constraints")
-            else {}
-        ),
-        **_bloom_carry(target, target["files"]),
         operation="RESTORE",
         restored_version=version,
     )
@@ -3826,25 +3514,15 @@ def clone_table(
         1,
         list(m["files"]),
         m["n_rows"],
-        schema=m["schema"],
-        column_mapping=m.get("column_mapping", []),
-        retired_physical=m.get("retired_physical", []),
-        max_column_id=m.get("max_column_id", 0),
-        file_stats=m.get("file_stats", {}),
-        added=list(m["files"]),
-        removed=[],
-        **_dv_carry(m),
-        **(
-            {"partition_by": list(m["partition_by"])}
-            if m.get("partition_by")
-            else {}
+        **_carry(
+            dst,
+            m,
+            m["files"],
+            column_mapping=m.get("column_mapping", []),
+            retired_physical=m.get("retired_physical", []),
+            max_column_id=m.get("max_column_id", 0),
+            added=list(m["files"]),
         ),
-        **(
-            {"constraints": dict(m["constraints"])}
-            if m.get("constraints")
-            else {}
-        ),
-        **_bloom_carry(m, m["files"]),
         seen_batch_ids=sorted(ledger),
         operation="CLONE",
         clone_source=os.path.abspath(src),

@@ -9,7 +9,7 @@ import random
 
 from pyspark.sql import functions as F
 
-from meta_iterative_mapreduce_spark.cache import owned
+from meta_iterative_mapreduce_spark.cache import owned, persist
 from meta_iterative_mapreduce_spark.operators.dedup import (
     _SIMHASH_BITS,
     _SIMHASH_MAX_HAMMING,
@@ -217,16 +217,17 @@ def test_incremental_dedup_equals_full_recompute(spark, sf_dir):
             (r["doc_a"], r["doc_b"], r["jaccard_est"]) for r in df.collect()
         }
 
-    full = pairset(minhash_band_pairs(minhash_signatures(docs).persist()))
-    base_pairs = pairset(
-        minhash_band_pairs(minhash_signatures(base).persist())
-    )
-    inc = pairset(
-        incremental_band_pairs(
-            band_rows(minhash_signatures(batch)).persist(),
-            band_rows(minhash_signatures(base)),
+    with owned():
+        full = pairset(minhash_band_pairs(persist(minhash_signatures(docs))))
+        base_pairs = pairset(
+            minhash_band_pairs(persist(minhash_signatures(base)))
         )
-    )
+        inc = pairset(
+            incremental_band_pairs(
+                persist(band_rows(minhash_signatures(batch))),
+                band_rows(minhash_signatures(base)),
+            )
+        )
     assert base_pairs | inc == full
     assert not (base_pairs & inc)  # incremental never re-finds corpus pairs
     assert inc  # the batch genuinely contributes pairs at this sf

@@ -149,6 +149,7 @@ def test_minhash_banding_single_data_exchange(spark, sf_dir):
     documents parquet appears exactly once in the plan."""
     import re
 
+    from meta_iterative_mapreduce_spark.cache import owned, persist
     from meta_iterative_mapreduce_spark.io import load_table
     from meta_iterative_mapreduce_spark.operators.dedup import (
         minhash_band_pairs,
@@ -159,7 +160,8 @@ def test_minhash_banding_single_data_exchange(spark, sf_dir):
     # stale cache entry adds a second InMemoryRelation to the printout
     spark.catalog.clearCache()
     d = load_table(spark, sf_dir, "documents")
-    plan = _plan(minhash_band_pairs(minhash_signatures(d).persist()))
+    with owned():
+        plan = _plan(minhash_band_pairs(persist(minhash_signatures(d))))
     # both self-join sides must read the persisted signatures (the
     # cached subtree's FileScan text reprints under each reference, so
     # count InMemoryTableScans, not parquet mentions)

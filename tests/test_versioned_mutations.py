@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from meta_iterative_mapreduce_spark.sources import versioned as V
@@ -957,6 +958,181 @@ def test_occ_dv_conflicts_with_interleaved_rewrite_of_masked_file(
     # re-run lands fine against the new head
     V.delete_where(spark, table, "k = 9", mode="dv", prune=("k", "=", 9))
     assert V.read_version(spark, table).filter("k = 9").count() == 0
+
+
+def _unreferenced(table: str) -> set[str]:
+    """Parquet files under the table's data dir that no manifest
+    references — what a writer that lost a race must not leave."""
+    on_disk = set()
+    for dirpath, _d, names in os.walk(os.path.join(table, "data")):
+        on_disk |= {
+            os.path.relpath(os.path.join(dirpath, n), table)
+            for n in names
+            if n.endswith(".parquet")
+        }
+    for ver in V.versions(table):
+        m = V.manifest_info(table, ver)
+        on_disk -= set(m["files"]) | set(m.get("dv_files", []))
+    return on_disk
+
+
+def _kv(spark, lo: int, hi: int):
+    return spark.range(lo, hi).select(
+        F.col("id").alias("k"), (F.col("id") * 2).alias("v")
+    )
+
+
+def test_write_version_losing_v1_race_drops_its_files(
+    spark, tmp_path, monkeypatch
+):
+    """A snapshot write never rebases: losing the v1 race raises, but
+    only after deleting the data files it wrote."""
+    import pytest
+
+    table = str(tmp_path / "w")
+    _race(monkeypatch, lambda: V.write_version(_kv(spark, 0, 10), table))
+    with pytest.raises(ValueError):
+        V.write_version(_kv(spark, 100, 110), table)
+    monkeypatch.undo()
+    assert V.versions(table) == [1]
+    assert _unreferenced(table) == set()
+
+
+def test_append_on_empty_table_losing_v1_race_leaves_no_orphans(
+    spark, tmp_path, monkeypatch
+):
+    """An append to an empty table that loses the v1 race rebases onto
+    the winner as a plain append, reusing the files it wrote."""
+    table = str(tmp_path / "e")
+    _race(monkeypatch, lambda: V.append_version(_kv(spark, 0, 10), table))
+    assert V.append_version(_kv(spark, 100, 105), table) == 2
+    monkeypatch.undo()
+    assert V.read_version(spark, table).count() == 15
+    assert V.manifest_info(table)["operation"] == "APPEND"
+    assert _unreferenced(table) == set()
+
+
+def test_batch_sink_losing_a_race_rebases_and_records_its_batch(
+    spark, tmp_path, monkeypatch
+):
+    table = str(tmp_path / "s")
+    V.write_version(_kv(spark, 0, 10), table)
+    _race(monkeypatch, lambda: V.append_version(_kv(spark, 100, 105), table))
+    V.versioned_batch_sink(table)(_kv(spark, 200, 203), 5)
+    monkeypatch.undo()
+    assert V.versions(table) == [1, 2, 3]
+    m = V.manifest_info(table)
+    assert m["operation"] == "STREAM APPEND" and m["batch_id"] == 5
+    assert 5 in V.committed_batch_ids(table)
+    assert V.read_version(spark, table).count() == 18
+    assert _unreferenced(table) == set()
+
+
+def test_replayed_batch_committed_by_the_race_winner_is_skipped(
+    spark, tmp_path, monkeypatch
+):
+    """A replay of batch 5 racing the original: the loser finds 5 in
+    the head's ledger, commits nothing and removes its files."""
+    table = str(tmp_path / "r")
+    V.write_version(_kv(spark, 0, 10), table)
+    sink = V.versioned_batch_sink(table)
+    _race(monkeypatch, lambda: sink(_kv(spark, 200, 203), 5))
+    sink(_kv(spark, 200, 203), 5)
+    monkeypatch.undo()
+    assert V.versions(table) == [1, 2]
+    assert V.read_version(spark, table).count() == 13
+    assert _unreferenced(table) == set()
+
+
+def test_scoped_delete_rebases_past_an_append_after_last_constraint_drop(
+    spark, tmp_path, monkeypatch
+):
+    """Dropping the last constraint leaves no `constraints` key — the
+    shape an append writes — so a scoped delete racing an append to
+    another partition rebases instead of reporting a layout change."""
+    table = _partitioned_table(spark, tmp_path)
+    V.add_constraint(spark, table, "k_ok", "k >= 0")
+    V.drop_constraint(table, "k_ok")
+    extra = spark.range(1000, 1010).select(
+        F.col("id").alias("k"),
+        F.lit(1).cast("int").alias("p"),
+        (F.col("id") * 2).alias("v"),
+    )
+    _race(monkeypatch, lambda: V.append_version(extra, table))
+    V.delete_where(spark, table, "p = 2 AND k % 2 = 0", prune=("p", "=", 2))
+    monkeypatch.undo()
+    got = V.read_version(spark, table)
+    assert got.filter("p = 2 AND k % 2 = 0").count() == 0
+    assert got.count() == 120 - 20 + 10
+
+
+def _layout_table(spark, tmp_path) -> str:
+    """v1 partitioned + bloom-indexed write, v2-v3 two constraints, v4
+    a DV delete, v5 an append: every layout key is set at the head."""
+    table = str(tmp_path / "lay")
+    df = spark.range(0, 60).select(
+        F.col("id").alias("k"),
+        (F.col("id") % 3).cast("int").alias("p"),
+        (F.col("id") * 2).alias("v"),
+        (F.col("id") % 5).alias("w"),
+    )
+    V.write_version(df, table, partition_by="p", bloom_cols=["k", "w"])
+    V.add_constraint(spark, table, "k_nonneg", "k >= 0")
+    V.add_constraint(spark, table, "v_nonneg", "v >= 0")
+    V.delete_where(spark, table, "k = 7", mode="dv")
+    V.append_version(df.filter("k < 5").withColumn("k", F.col("k") + 100), table)
+    return table
+
+
+_LAYOUT = (
+    "partition_by",
+    "constraints",
+    "bloom_cols",
+    "dv_files",
+    "dv_map",
+    "dv_rows",
+)
+
+
+@pytest.mark.parametrize(
+    "verb, changed",
+    [
+        (
+            lambda s, t, d: V.add_constraint(s, t, "p_small", "p < 3"),
+            {
+                "constraints": {
+                    "k_nonneg": "k >= 0",
+                    "v_nonneg": "v >= 0",
+                    "p_small": "p < 3",
+                }
+            },
+        ),
+        (lambda s, t, d: V.drop_constraint(t, "v_nonneg"),
+         {"constraints": {"k_nonneg": "k >= 0"}}),
+        (lambda s, t, d: V.rename_column(s, t, "w", "w2"),
+         {"bloom_cols": ["k", "w2"]}),
+        (lambda s, t, d: V.drop_column(s, t, "w"), {"bloom_cols": ["k"]}),
+        (lambda s, t, d: V.set_partitioning(s, t, ["bucket(4, k)"]),
+         {"partition_by": ["bucket(4, k)"]}),
+        (lambda s, t, d: V.restore_version(s, t, 4), {}),
+        (lambda s, t, d: V.clone_table(t, d), {}),
+    ],
+    ids=["add_constraint", "drop_constraint", "rename_column", "drop_column",
+         "set_partitioning", "restore", "clone"],
+)
+def test_metadata_verbs_carry_the_layout(spark, tmp_path, verb, changed):
+    """Every metadata-only verb keeps the parent's partition spec,
+    constraints, bloom index and deletion vectors, changing only what
+    the verb itself alters (restore carries its target's layout)."""
+    table = _layout_table(spark, tmp_path)
+    dst = str(tmp_path / "clone")
+    head = V.manifest_info(table)
+    verb(spark, table, dst)
+    after = V.manifest_info(dst if os.path.isdir(dst) else table)
+    src = V.manifest_info(table, 4) if after["operation"] == "RESTORE" else head
+    assert all(src.get(k) for k in _LAYOUT)  # the fixture set every key
+    for k in _LAYOUT:
+        assert after.get(k) == changed.get(k, src[k]), k
 
 
 def test_restore_and_history(spark, tmp_path):

@@ -37,6 +37,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from meta_iterative_mapreduce_spark.cache import owned, persist  # noqa: E402
 from meta_iterative_mapreduce_spark.operators.dedup import (  # noqa: E402
     band_rows,
     incremental_band_pairs,
@@ -97,39 +98,38 @@ def main() -> None:
         )
         t_build = time.time() - t0
 
-        # INCR: batch signatures + join vs the persisted band log
-        t0 = time.time()
-        bands = versioned.read_version(spark, table)
-        new_bands = band_rows(minhash_signatures(batch)).persist()
-        incr = incremental_band_pairs(new_bands, bands).persist()
-        n_incr = incr.count()
-        t_incr = time.time() - t0
+        with owned():
+            # INCR: batch signatures + join vs the persisted band log
+            t0 = time.time()
+            bands = versioned.read_version(spark, table)
+            new_bands = persist(band_rows(minhash_signatures(batch)))
+            incr = persist(incremental_band_pairs(new_bands, bands))
+            n_incr = incr.count()
+            t_incr = time.time() - t0
 
-        # FULL: what a non-incremental pipeline pays on this ingest
-        t0 = time.time()
-        sigs = minhash_signatures(corpus.unionByName(batch)).persist()
-        full = minhash_band_pairs(sigs).persist()
-        n_full_cross = full.filter(
-            (F.col("doc_a") >= tail_lo) | (F.col("doc_b") >= tail_lo)
-        ).count()
-        t_full = time.time() - t0
+            # FULL: what a non-incremental pipeline pays on this ingest
+            t0 = time.time()
+            sigs = persist(minhash_signatures(corpus.unionByName(batch)))
+            full = persist(minhash_band_pairs(sigs))
+            n_full_cross = full.filter(
+                (F.col("doc_a") >= tail_lo) | (F.col("doc_b") >= tail_lo)
+            ).count()
+            t_full = time.time() - t0
 
-        planted_found = incr.filter(
-            (F.col("doc_b") == F.col("doc_a") + 1)
-            & (F.col("doc_a") % 2 == 0)
-            & (F.col("doc_a") >= tail_lo)
-        ).count()
-        print(
-            f"corpus={n_corpus:>9,} batch={_BATCH:,}  "
-            f"build={t_build:6.1f}s  incr={t_incr:6.1f}s  "
-            f"full={t_full:6.1f}s  speedup={t_full / t_incr:4.1f}x  "
-            f"incr_pairs={n_incr:,} (planted found {planted_found:,}"
-            f"/{_BATCH:,})  full_cross={n_full_cross:,}",
-            flush=True,
-        )
-        assert n_incr >= n_full_cross, "incremental missed full's pairs"
-        for df in (incr, full, sigs, new_bands):
-            df.unpersist()
+            planted_found = incr.filter(
+                (F.col("doc_b") == F.col("doc_a") + 1)
+                & (F.col("doc_a") % 2 == 0)
+                & (F.col("doc_a") >= tail_lo)
+            ).count()
+            print(
+                f"corpus={n_corpus:>9,} batch={_BATCH:,}  "
+                f"build={t_build:6.1f}s  incr={t_incr:6.1f}s  "
+                f"full={t_full:6.1f}s  speedup={t_full / t_incr:4.1f}x  "
+                f"incr_pairs={n_incr:,} (planted found {planted_found:,}"
+                f"/{_BATCH:,})  full_cross={n_full_cross:,}",
+                flush=True,
+            )
+            assert n_incr >= n_full_cross, "incremental missed full's pairs"
     spark.stop()
 
 

@@ -25,6 +25,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from meta_iterative_mapreduce_spark.cache import owned, persist  # noqa: E402
 from meta_iterative_mapreduce_spark.operators.dedup import (  # noqa: E402
     minhash_band_pairs,
     minhash_signatures,
@@ -52,26 +53,25 @@ def main() -> None:
                 "CASE WHEN j = 15 AND id % 2 = 1 THEN 'v' ELSE '' END)))"
             ).alias("text"),
         )
-        t0 = time.time()
-        sigs = minhash_signatures(docs).persist()
-        cand = minhash_band_pairs(sigs).persist()
-        n_cand = cand.count()
-        is_planted = (F.col("doc_b") == F.col("doc_a") + 1) & (
-            F.col("doc_a") % 2 == 0
-        )
-        n_found = cand.filter(is_planted).count()
-        wall = time.time() - t0
-        n_planted = n_docs // 2
-        print(
-            f"docs={n_docs:>10,} wall={wall:7.1f}s "
-            f"recall={100.0 * n_found / n_planted:6.2f}% "
-            f"({n_found:,}/{n_planted:,}) "
-            f"spurious={n_cand - n_found}"
-        )
-        assert n_found >= int(0.95 * n_planted)
-        assert n_cand == n_found, n_cand - n_found
-        cand.unpersist()
-        sigs.unpersist()
+        with owned():
+            t0 = time.time()
+            sigs = persist(minhash_signatures(docs))
+            cand = persist(minhash_band_pairs(sigs))
+            n_cand = cand.count()
+            is_planted = (F.col("doc_b") == F.col("doc_a") + 1) & (
+                F.col("doc_a") % 2 == 0
+            )
+            n_found = cand.filter(is_planted).count()
+            wall = time.time() - t0
+            n_planted = n_docs // 2
+            print(
+                f"docs={n_docs:>10,} wall={wall:7.1f}s "
+                f"recall={100.0 * n_found / n_planted:6.2f}% "
+                f"({n_found:,}/{n_planted:,}) "
+                f"spurious={n_cand - n_found}"
+            )
+            assert n_found >= int(0.95 * n_planted)
+            assert n_cand == n_found, n_cand - n_found
         spark.catalog.clearCache()
 
 

@@ -25,6 +25,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from meta_iterative_mapreduce_spark.cache import owned, persist  # noqa: E402
 from meta_iterative_mapreduce_spark.operators import regression as R  # noqa: E402
 from meta_iterative_mapreduce_spark.session import get_spark  # noqa: E402
 
@@ -105,7 +106,6 @@ def main() -> None:
     assert n_comp == expected_comp, (n_comp, expected_comp)
 
     # --- simhash pigeonhole pair join on 2M synthetic fingerprints ---
-    from meta_iterative_mapreduce_spark.cache import owned
     from meta_iterative_mapreduce_spark.operators.dedup import (
         _SIMHASH_MASK,
         simhash_hamming_pairs,
@@ -425,28 +425,27 @@ def main() -> None:
             / 97.0,
         ).alias("embedding"),
     )
-    t0 = time.time()
-    sub = CL._pq_subvectors(vecs, "embedding").cache()
-    books = CL.pq_train(
-        vecs, "embedding", vecs.filter(F.col("vec_id") < CL._PQ_K), sub=sub
-    )
-    enc = CL.pq_encode(vecs, "embedding", books, sub=sub).cache()
-    n_code_tuples = enc.select("codes").distinct().count()
-    n_violations = (
-        enc.withColumn("g", F.col("vec_id") % n_distinct)
-        .groupBy("g")
-        .agg(F.count_distinct("codes").alias("nc"))
-        .filter(F.col("nc") > 1)
-        .count()
-    )
-    print(
-        f"pq train+encode over {n_pq:,} vecs: {time.time()-t0:.1f}s -> "
-        f"{n_code_tuples} distinct code tuples, {n_violations} "
-        f"inconsistent duplicate groups"
-    )
-    assert n_code_tuples <= n_distinct and n_violations == 0
-    enc.unpersist()
-    sub.unpersist()
+    with owned():
+        t0 = time.time()
+        sub = persist(CL._pq_subvectors(vecs, "embedding"))
+        books = CL.pq_train(
+            vecs, "embedding", vecs.filter(F.col("vec_id") < CL._PQ_K), sub=sub
+        )
+        enc = persist(CL.pq_encode(vecs, "embedding", books, sub=sub))
+        n_code_tuples = enc.select("codes").distinct().count()
+        n_violations = (
+            enc.withColumn("g", F.col("vec_id") % n_distinct)
+            .groupBy("g")
+            .agg(F.count_distinct("codes").alias("nc"))
+            .filter(F.col("nc") > 1)
+            .count()
+        )
+        print(
+            f"pq train+encode over {n_pq:,} vecs: {time.time()-t0:.1f}s -> "
+            f"{n_code_tuples} distinct code tuples, {n_violations} "
+            f"inconsistent duplicate groups"
+        )
+        assert n_code_tuples <= n_distinct and n_violations == 0
 
     # --- triangle SHUFFLE fallback on a >=5M-edge planted graph ---
     # The broadcast fast path is bench-measured at sf0.1; this drives
@@ -473,17 +472,17 @@ def main() -> None:
     star = spark.range(n_star).select(
         F.lit(s_base).alias("u"), (s_base + 1 + F.col("id")).alias("v")
     )
-    tri_pairs = path.unionAll(tri_edges).unionAll(star).persist()
-    t0 = time.time()
-    row = C.triangle_stats(tri_pairs, force_shuffle=True).collect()[0]
-    print(
-        f"triangle shuffle fallback over "
-        f"{n_path + 3 * n_tri + n_star:,} edges: {time.time()-t0:.1f}s -> "
-        f"{row['n_triangles']:,} triangles (expected {n_tri:,}), "
-        f"{row['n_wedges']:,} wedges"
-    )
-    assert row["n_triangles"] == n_tri, row
-    tri_pairs.unpersist()
+    with owned():
+        tri_pairs = persist(path.unionAll(tri_edges).unionAll(star))
+        t0 = time.time()
+        row = C.triangle_stats(tri_pairs, force_shuffle=True).collect()[0]
+        print(
+            f"triangle shuffle fallback over "
+            f"{n_path + 3 * n_tri + n_star:,} edges: {time.time()-t0:.1f}s -> "
+            f"{row['n_triangles']:,} triangles (expected {n_tri:,}), "
+            f"{row['n_wedges']:,} wedges"
+        )
+        assert row["n_triangles"] == n_tri, row
 
     # --- two-pass distributed rank at 50M rows (distrank.py) ---
     # The round-4 replacement for unpartitioned global windows
@@ -618,24 +617,23 @@ def main() -> None:
             "CASE WHEN j = 15 AND id % 2 = 1 THEN 'v' ELSE '' END)))"
         ).alias("text"),
     )
-    t0 = time.time()
-    sigs_mh = minhash_signatures(docs_mh).persist()
-    cand = minhash_band_pairs(sigs_mh).persist()
-    n_cand = cand.count()
-    is_planted = (F.col("doc_b") == F.col("doc_a") + 1) & (
-        F.col("doc_a") % 2 == 0
-    )
-    n_planted_found = cand.filter(is_planted).count()
-    print(
-        f"minhash-LSH over {n_mh:,} docs: {time.time()-t0:.1f}s -> "
-        f"{n_planted_found:,}/{n_mh//2:,} planted pairs found "
-        f"({100.0*n_planted_found/(n_mh//2):.1f}%), "
-        f"{n_cand - n_planted_found} cross-pair candidates"
-    )
-    assert n_planted_found >= int(0.95 * (n_mh // 2))
-    assert n_cand == n_planted_found, n_cand - n_planted_found
-    cand.unpersist()
-    sigs_mh.unpersist()
+    with owned():
+        t0 = time.time()
+        sigs_mh = persist(minhash_signatures(docs_mh))
+        cand = persist(minhash_band_pairs(sigs_mh))
+        n_cand = cand.count()
+        is_planted = (F.col("doc_b") == F.col("doc_a") + 1) & (
+            F.col("doc_a") % 2 == 0
+        )
+        n_planted_found = cand.filter(is_planted).count()
+        print(
+            f"minhash-LSH over {n_mh:,} docs: {time.time()-t0:.1f}s -> "
+            f"{n_planted_found:,}/{n_mh//2:,} planted pairs found "
+            f"({100.0*n_planted_found/(n_mh//2):.1f}%), "
+            f"{n_cand - n_planted_found} cross-pair candidates"
+        )
+        assert n_planted_found >= int(0.95 * (n_mh // 2))
+        assert n_cand == n_planted_found, n_cand - n_planted_found
 
     # --- IVF recall/nProbe sweep at 1M vectors (16 planted clusters) ---
     # The measurement loop that tunes an IVF deployment: an in-cluster
@@ -652,55 +650,54 @@ def main() -> None:
     )
 
     n_iv, dim_iv, k_iv = min(max(n // 20, 200_000), 1_000_000), 16, 16
-    ivecs = spark.range(n_iv).select(
-        F.col("id").alias("vec_id"),
-        F.expr(
-            "transform(sequence(0, 15), j -> cast("
-            "8.0 * (shiftright(cast(id % 16 as int), cast(j % 4 as int)) % 2)"
-            " + (pmod(xxhash64(id, j), 1000) / 1000.0 - 0.5) as float))"
-        ).alias("embedding"),
-    ).persist()
-    icenters = [
-        [8.0 * ((c >> (j % 4)) & 1) for j in range(dim_iv)]
-        for c in range(k_iv)
-    ]
-    t0 = time.time()
-    iassigned = assign_clusters(ivecs, "embedding", icenters).persist()
-
-    def _topk(df, q, k=10):
-        cos = dot_const(F.col("embedding"), q) / l2_norm(F.col("embedding"))
-        return [
-            r["vec_id"]
-            for r in df.select("vec_id", cos.alias("s"))
-            .orderBy(F.col("s").desc(), "vec_id")
-            .limit(k)
-            .collect()
+    with owned():
+        ivecs = persist(spark.range(n_iv).select(
+            F.col("id").alias("vec_id"),
+            F.expr(
+                "transform(sequence(0, 15), j -> cast("
+                "8.0 * (shiftright(cast(id % 16 as int), cast(j % 4 as int)) % 2)"
+                " + (pmod(xxhash64(id, j), 1000) / 1000.0 - 0.5) as float))"
+            ).alias("embedding"),
+        ))
+        icenters = [
+            [8.0 * ((c >> (j % 4)) & 1) for j in range(dim_iv)]
+            for c in range(k_iv)
         ]
+        t0 = time.time()
+        iassigned = persist(assign_clusters(ivecs, "embedding", icenters))
 
-    def _recall(q, nprobe):
-        order = sorted(
-            range(k_iv),
-            key=lambda c: (
-                sum((x - y) ** 2 for x, y in zip(icenters[c], q)),
-                c,
-            ),
+        def _topk(df, q, k=10):
+            cos = dot_const(F.col("embedding"), q) / l2_norm(F.col("embedding"))
+            return [
+                r["vec_id"]
+                for r in df.select("vec_id", cos.alias("s"))
+                .orderBy(F.col("s").desc(), "vec_id")
+                .limit(k)
+                .collect()
+            ]
+
+        def _recall(q, nprobe):
+            order = sorted(
+                range(k_iv),
+                key=lambda c: (
+                    sum((x - y) ** 2 for x, y in zip(icenters[c], q)),
+                    c,
+                ),
+            )
+            got = _topk(iassigned.filter(F.col("cluster").isin(order[:nprobe])), q)
+            return len(set(got) & set(_topk(ivecs, q))) / 10.0
+
+        q_in = [c + 0.01 for c in icenters[5]]
+        q_mid = [(a + b) / 2.0 for a, b in zip(icenters[0], icenters[1])]
+        r_in1 = _recall(q_in, 1)
+        r_mid1, r_mid2 = _recall(q_mid, 1), _recall(q_mid, 2)
+        print(
+            f"ivf sweep over {n_iv:,} vecs: {time.time()-t0:.1f}s -> "
+            f"in-cluster nProbe=1 recall {r_in1} (scanning 1/{k_iv}); "
+            f"midpoint nProbe=1 {r_mid1} -> nProbe=2 {r_mid2}"
         )
-        got = _topk(iassigned.filter(F.col("cluster").isin(order[:nprobe])), q)
-        return len(set(got) & set(_topk(ivecs, q))) / 10.0
-
-    q_in = [c + 0.01 for c in icenters[5]]
-    q_mid = [(a + b) / 2.0 for a, b in zip(icenters[0], icenters[1])]
-    r_in1 = _recall(q_in, 1)
-    r_mid1, r_mid2 = _recall(q_mid, 1), _recall(q_mid, 2)
-    print(
-        f"ivf sweep over {n_iv:,} vecs: {time.time()-t0:.1f}s -> "
-        f"in-cluster nProbe=1 recall {r_in1} (scanning 1/{k_iv}); "
-        f"midpoint nProbe=1 {r_mid1} -> nProbe=2 {r_mid2}"
-    )
-    assert r_in1 == 1.0
-    assert r_mid1 < 1.0 and r_mid2 == 1.0, (r_mid1, r_mid2)
-    iassigned.unpersist()
-    ivecs.unpersist()
+        assert r_in1 == 1.0
+        assert r_mid1 < 1.0 and r_mid2 == 1.0, (r_mid1, r_mid2)
 
     # --- manifest-math planning at 100k-file scale (round 11) -------
     # Hidden-partitioning prune and streaming admission control both

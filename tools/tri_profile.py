@@ -21,6 +21,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from meta_iterative_mapreduce_spark.cache import owned, persist  # noqa: E402
 from meta_iterative_mapreduce_spark.operators import components as C  # noqa: E402
 from meta_iterative_mapreduce_spark.session import get_spark  # noqa: E402
 
@@ -52,19 +53,19 @@ def main() -> None:
         star = spark.range(n_star).select(
             F.lit(s_base).alias("u"), (s_base + 1 + F.col("id")).alias("v")
         )
-        edges = path.unionAll(tri_edges).unionAll(star).persist()
-        n_edges = n_path + 3 * n_tri + n_star
-        t0 = time.time()
-        row = C.triangle_stats(edges, force_shuffle=True).collect()[0]
-        wall = time.time() - t0
-        ok = "OK" if row["n_triangles"] == n_tri else "MISMATCH"
-        print(
-            f"edges={n_edges:>12,} wall={wall:7.1f}s "
-            f"triangles={row['n_triangles']:,} (expected {n_tri:,}) "
-            f"wedges={row['n_wedges']:,} {ok}"
-        )
-        assert row["n_triangles"] == n_tri, row
-        edges.unpersist()
+        with owned():
+            edges = persist(path.unionAll(tri_edges).unionAll(star))
+            n_edges = n_path + 3 * n_tri + n_star
+            t0 = time.time()
+            row = C.triangle_stats(edges, force_shuffle=True).collect()[0]
+            wall = time.time() - t0
+            ok = "OK" if row["n_triangles"] == n_tri else "MISMATCH"
+            print(
+                f"edges={n_edges:>12,} wall={wall:7.1f}s "
+                f"triangles={row['n_triangles']:,} (expected {n_tri:,}) "
+                f"wedges={row['n_wedges']:,} {ok}"
+            )
+            assert row["n_triangles"] == n_tri, row
         spark.catalog.clearCache()
 
 
